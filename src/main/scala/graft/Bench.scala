@@ -218,7 +218,7 @@ object Bench {
     // bytes + BRACKETING probes (r16 verdict item 5) let an adjudicator
     // compute each run's achieved write MB/s and see the window it ran
     // in from the artifact alone, no same-HEAD re-run needed.
-    var k2Runs = Seq.empty[(Double, Double, Boolean, Long, Double)]
+    var k2Runs = Seq.empty[(Double, Double, Boolean, Option[Long], Double)]
     val matched = "k2_convert_csv_10m" -> (try {
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val n = math.max(1L, li.count())
@@ -234,15 +234,15 @@ object Bench {
       val outPath = java.nio.file.Paths.get(s"$convertOut/big_csv")
       deleteRecursively(java.nio.file.Paths.get(s"$convertOut/lineitem"))
       settleStorage() // replica writeback belongs to the untimed stage
-      def dirBytes(p: Path): Long =
+      // None when the output cannot be measured (the run record then
+      // carries "bytes": null, never a sentinel)
+      def dirBytes(p: Path): Option[Long] =
         try {
           val s = java.nio.file.Files.walk(p)
-          try s.filter(Files.isRegularFile(_))
-            .mapToLong(f => try Files.size(f) catch { case _: Throwable => 0L })
-            .sum()
+          try Some(s.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum())
           finally s.close()
-        } catch { case _: Throwable => -1L }
-      def once(): (Double, Boolean, Long) = {
+        } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => None }
+      def once(): (Double, Boolean, Option[Long]) = {
         val (sec, ok) = timed {
           graft.operators.Convert.parquetToCsv(spark, bigPath, outPath.toString)
         }
@@ -502,7 +502,7 @@ object Bench {
     // Environment health, so a snapshot taken in a bad window says so
     // (round 5's 12.7 s q08 / 127 s k2 adjudications both reduce to this).
     val k2RunsJson = k2Runs.map { case (p, sec, ok, bytes, pa) =>
-      s"""{"mbps":${fmt(p)},"sec":${fmt(sec)},"ok":$ok,"bytes":$bytes,"mbps_after":${fmt(pa)}}"""
+      s"""{"mbps":${fmt(p)},"sec":${fmt(sec)},"ok":$ok,"bytes":${bytes.fold("null")(_.toString)},"mbps_after":${fmt(pa)}}"""
     }.mkString("[", ",", "]")
     val retimesJson = retimes.map { case (n, t0, t1) =>
       s""""$n":{"loop":${fmt(t0)},"retime":${fmt(t1)}}"""

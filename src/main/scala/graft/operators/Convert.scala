@@ -11,8 +11,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Reference behaviors covered:
   *  - K1 single-file CSV with header (`utils.py:130-133,185-188,210`)
-  *  - K3 chunked serialization (`utils.py:160,186`) — automatic in Spark's
-  *    CSV FileFormat writer, no user knob needed
+  *  - K3 chunked serialization (`utils.py:160,186`) — streamed row by
+  *    row through [[graft.plans.CsvBytesFormat]]'s reused byte buffer
+  *    inside Spark's CSV FileFormat writer, no user knob needed
   *  - K4 partitioned CSV sink with max rows per file (`utils.py:231-239`,
   *    Polars `PartitionMaxSize(max_size=500000)`) →
   *    `option("maxRecordsPerFile", …)`, an exact built-in match
@@ -30,7 +31,7 @@ object Convert {
   val DefaultMaxRecordsPerFile: Long = 500000L
 
   /** Pinned so CSV round-trips preserve microsecond timestamps. */
-  val TimestampFormat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+  val TimestampFormat: String = graft.plans.FastTimestampFormat.Pattern
 
   /** Null renders as a bare empty field, empty STRING as a quoted `""` —
     * pinned explicitly (SURVEY §7.4.1: null rendering is a reference-parity
@@ -47,51 +48,32 @@ object Convert {
     * sentinel, only genuinely absent fields parse as null. */
   val ReaderNullSentinel = "\\N"
 
-  /** CSV serialization fast path: pre-render timestamp columns to
-    * strings through the codegen'd [[graft.plans.CsvTimestampExpr]]
-    * (integer-math `yyyy-MM-dd HH:mm:ss.SSSSSS` at the session zone —
-    * byte-identical to what the univocity writer's DateTimeFormatter
-    * would emit, proven by CsvTimestampSpec) so the writer emits them
-    * verbatim. Measured at ~43% of the matched-scale conversion (k2)
-    * before this; the `timestampFormat` option stays pinned for any
-    * timestamp that bypasses the rewrite. `exclude` keeps
-    * hive-partition columns in their native type — partition directory
-    * naming has its own formatting rules and must not see pre-rendered
-    * strings. */
-  private def fastCsvTimestamps(df: DataFrame,
-                                exclude: Set[String] = Set.empty): DataFrame = {
-    import org.apache.spark.sql.functions.{call_function, col}
-    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    val ts = df.schema.fields
-      .filter(f => (f.dataType == TimestampType ||
-        f.dataType == TimestampNTZType) && !exclude(f.name))
-    if (ts.isEmpty) df
-    else {
-      graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
-      val tsNames = ts.map(_.name).toSet
-      df.select(df.schema.fieldNames.map { n =>
-        if (tsNames(n)) call_function("graft_csv_ts", col(s"`$n`")).as(n)
-        else col(s"`$n`")
-      }.toSeq: _*)
-    }
-  }
+  /** The sink's pinned CSV options (`maxRecordsPerFile` is per call). */
+  val CsvOptions: Map[String, String] = Map(
+    "header" -> "true",
+    "timestampFormat" -> TimestampFormat,
+    // NTZ must round-trip at the same pinned micro precision — the
+    // writer's NTZ default (ISO-'T', millis) would silently truncate
+    // microseconds (round-12 finding; CsvTimestampSpec pins this)
+    "timestampNTZFormat" -> TimestampFormat,
+    "nullValue" -> NullValue,
+    "emptyValue" -> EmptyValue,
+    // the WRITER defaults these to true and silently trims string cells;
+    // a conversion must write the bytes it was given (round-trip parity
+    // asserted in ConvertSpec's torture test)
+    "ignoreLeadingWhiteSpace" -> "false",
+    "ignoreTrailingWhiteSpace" -> "false")
 
-  private def csvWriter(df: DataFrame, maxRecordsPerFile: Long,
-                        partitionCols: Set[String] = Set.empty) =
-    fastCsvTimestamps(df, partitionCols).write
-      .option("header", "true")
-      .option("timestampFormat", TimestampFormat)
-      // NTZ must round-trip at the same pinned micro precision — the
-      // writer's NTZ default (ISO-'T', millis) would silently truncate
-      // microseconds (round-12 finding; CsvTimestampSpec pins this)
-      .option("timestampNTZFormat", TimestampFormat)
-      .option("nullValue", NullValue)
-      .option("emptyValue", EmptyValue)
-      // the WRITER defaults these to true and silently trims string cells;
-      // a conversion must write the bytes it was given (round-trip parity
-      // asserted in ConvertSpec's torture test)
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
+  /** Every CSV sink writes through [[graft.plans.CsvBytesFormat]]: Spark's
+    * CSV file format (commit, `maxRecordsPerFile`, `partitionBy`,
+    * compression) with a byte-direct row encoder, byte-identical to
+    * Spark's `csv` writer under [[CsvOptions]] (CsvBytesSpec). It renders
+    * timestamps in the pinned format itself, so no `graft_csv_ts`
+    * projection runs ahead of it, and it rejects any option that its
+    * encoder does not implement. */
+  private def csvWriter(df: DataFrame, maxRecordsPerFile: Long) =
+    df.write.format(classOf[graft.plans.CsvBytesFormat].getName)
+      .options(CsvOptions)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .mode(SaveMode.Overwrite)
 
@@ -99,12 +81,12 @@ object Convert {
     * parallel, each output file capped at `maxRecordsPerFile` rows. */
   def parquetToCsv(spark: SparkSession, in: String, outDir: String,
                    maxRecordsPerFile: Long = DefaultMaxRecordsPerFile): Unit =
-    csvWriter(spark.read.parquet(in), maxRecordsPerFile).csv(outDir)
+    csvWriter(spark.read.parquet(in), maxRecordsPerFile).save(outDir)
 
   /** K4 over an arbitrary DataFrame. */
   def toCsvDir(df: DataFrame, outDir: String,
                maxRecordsPerFile: Long = DefaultMaxRecordsPerFile): Unit =
-    csvWriter(df, maxRecordsPerFile).csv(outDir)
+    csvWriter(df, maxRecordsPerFile).save(outDir)
 
   /** K1 — single named CSV file, reference-output parity. Serializes through
     * one task (`coalesce(1)`): verify-scale only, never the 100 TB path.
@@ -113,7 +95,7 @@ object Convert {
   def csvSingleFile(df: DataFrame, outFile: String): Path = {
     val out = Paths.get(outFile)
     val tmpDir = out.resolveSibling(out.getFileName.toString + ".spark-tmp")
-    csvWriter(df.coalesce(1), Long.MaxValue).csv(tmpDir.toString)
+    csvWriter(df.coalesce(1), Long.MaxValue).save(tmpDir.toString)
     val parts = Using.resource(Files.list(tmpDir)) {
       _.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toList
     }
@@ -133,8 +115,7 @@ object Convert {
     * slice of a 100 TB output. */
   def toCsvPartitioned(df: DataFrame, outDir: String, partitionCols: Seq[String],
                        maxRecordsPerFile: Long = DefaultMaxRecordsPerFile): Unit =
-    csvWriter(df, maxRecordsPerFile, partitionCols.toSet)
-      .partitionBy(partitionCols: _*).csv(outDir)
+    csvWriter(df, maxRecordsPerFile).partitionBy(partitionCols: _*).save(outDir)
 
   /** K5 — parquet write. `codec` picks the compression (snappy is the
     * balanced default; zstd trades ~30% smaller files for CPU — the

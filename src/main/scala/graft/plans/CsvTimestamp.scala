@@ -16,10 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * in the parquet→CSV hot path (k2) — Spark's univocity writer routes
   * every value through a `DateTimeFormatter` with per-field temporal
   * queries and a `StringBuilder`, measured at ~43% of the whole
-  * conversion (K2Lab, PERF_NOTES.md round 12). This formatter does the
-  * same conversion with pure integer arithmetic (Hinnant's
-  * civil-from-days calendar algorithm) straight into a 26-byte buffer —
-  * no temporal objects, no builder, one allocation per value.
+  * conversion (PERF_NOTES.md round 12; perfbench's traced `convert` run
+  * now reports this cost as `convert.csv_encode_write_s`). This formatter
+  * does the same conversion with pure integer arithmetic (Hinnant's
+  * civil-from-days calendar algorithm) straight into a caller's byte
+  * buffer — no temporal objects, no builder; [[CsvBytesFormat]] renders
+  * into its row buffer with no allocation at all.
   *
   * Exactness contract: byte-identical to `DateTimeFormatter.ofPattern(
   * "yyyy-MM-dd HH:mm:ss.SSSSSS")` at the session zone for every year in
@@ -32,19 +34,38 @@ object FastTimestampFormat {
 
   private val MicrosPerSecond = 1000000L
 
+  /** The pinned pattern ([[graft.operators.Convert.TimestampFormat]]). */
+  val Pattern = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+
+  /** Bytes of one fast-path rendering. */
+  val Width = 26
+
   /** The exact pattern twin, used for the out-of-range fallback and as
     * the reference in tests. */
   def reference(zone: ZoneId): DateTimeFormatter =
-    DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS", Locale.US)
-      .withZone(zone)
+    DateTimeFormatter.ofPattern(Pattern, Locale.US).withZone(zone)
 
   /** TIMESTAMP_NTZ variant: the micros already encode the wall-clock
     * local datetime, so no zone adjustment applies. */
-  def formatNtz(micros: Long): UTF8String = formatLocal(
-    Math.floorDiv(micros, MicrosPerSecond),
-    Math.floorMod(micros, MicrosPerSecond).toInt, 0, ZoneOffset.UTC)
+  def formatNtz(micros: Long): UTF8String = format(micros, ZoneOffset.UTC)
 
   def format(micros: Long, zone: ZoneId): UTF8String = {
+    val b = new Array[Byte](Width)
+    if (render(b, 0, micros, zone)) UTF8String.fromBytes(b)
+    else UTF8String.fromString(fallback(micros, zone))
+  }
+
+  /** The reference rendering — what [[render]] declines (years outside
+    * [1, 9999]). */
+  def fallback(micros: Long, zone: ZoneId): String =
+    reference(zone).format(Instant.ofEpochSecond(
+      Math.floorDiv(micros, MicrosPerSecond),
+      Math.floorMod(micros, MicrosPerSecond) * 1000L))
+
+  /** Writes the [[Width]] pattern bytes of `micros` at `zone` (UTC for
+    * TIMESTAMP_NTZ) into `buf` at `pos`. False, with `buf` untouched,
+    * when the year is outside [1, 9999]; [[fallback]] renders those. */
+  def render(buf: Array[Byte], pos: Int, micros: Long, zone: ZoneId): Boolean = {
     val secs = Math.floorDiv(micros, MicrosPerSecond)
     val frac = Math.floorMod(micros, MicrosPerSecond).toInt
     val offsetSecs = zone match {
@@ -52,11 +73,6 @@ object FastTimestampFormat {
       case _ => zone.getRules.getOffset(Instant.ofEpochSecond(secs))
         .getTotalSeconds
     }
-    formatLocal(secs, frac, offsetSecs, zone)
-  }
-
-  private def formatLocal(secs: Long, frac: Int,
-                          offsetSecs: Int, zone: ZoneId): UTF8String = {
     val local = secs + offsetSecs
     val days = Math.floorDiv(local, 86400L)
     val sod = Math.floorMod(local, 86400L).toInt
@@ -70,52 +86,49 @@ object FastTimestampFormat {
     val d = doy - (153 * mp + 2) / 5 + 1
     val m = if (mp < 10) mp + 3 else mp - 9
     val y = yoe + era * 400L + (if (m <= 2) 1 else 0)
-    if (y < 1L || y > 9999L)
-      return UTF8String.fromString(
-        reference(zone).format(Instant.ofEpochSecond(secs, frac * 1000L)))
+    if (y < 1L || y > 9999L) return false
     val yi = y.toInt
     val h = sod / 3600
     val mi = (sod / 60) % 60
     val s = sod % 60
-    val b = new Array[Byte](26)
-    b(0) = ('0' + yi / 1000).toByte
-    b(1) = ('0' + (yi / 100) % 10).toByte
-    b(2) = ('0' + (yi / 10) % 10).toByte
-    b(3) = ('0' + yi % 10).toByte
-    b(4) = '-'
-    b(5) = ('0' + m / 10).toByte
-    b(6) = ('0' + m % 10).toByte
-    b(7) = '-'
-    b(8) = ('0' + d / 10).toByte
-    b(9) = ('0' + d % 10).toByte
-    b(10) = ' '
-    b(11) = ('0' + h / 10).toByte
-    b(12) = ('0' + h % 10).toByte
-    b(13) = ':'
-    b(14) = ('0' + mi / 10).toByte
-    b(15) = ('0' + mi % 10).toByte
-    b(16) = ':'
-    b(17) = ('0' + s / 10).toByte
-    b(18) = ('0' + s % 10).toByte
-    b(19) = '.'
-    b(20) = ('0' + frac / 100000).toByte
-    b(21) = ('0' + (frac / 10000) % 10).toByte
-    b(22) = ('0' + (frac / 1000) % 10).toByte
-    b(23) = ('0' + (frac / 100) % 10).toByte
-    b(24) = ('0' + (frac / 10) % 10).toByte
-    b(25) = ('0' + frac % 10).toByte
-    UTF8String.fromBytes(b)
+    val b = buf
+    val p = pos
+    b(p) = ('0' + yi / 1000).toByte
+    b(p + 1) = ('0' + (yi / 100) % 10).toByte
+    b(p + 2) = ('0' + (yi / 10) % 10).toByte
+    b(p + 3) = ('0' + yi % 10).toByte
+    b(p + 4) = '-'
+    b(p + 5) = ('0' + m / 10).toByte
+    b(p + 6) = ('0' + m % 10).toByte
+    b(p + 7) = '-'
+    b(p + 8) = ('0' + d / 10).toByte
+    b(p + 9) = ('0' + d % 10).toByte
+    b(p + 10) = ' '
+    b(p + 11) = ('0' + h / 10).toByte
+    b(p + 12) = ('0' + h % 10).toByte
+    b(p + 13) = ':'
+    b(p + 14) = ('0' + mi / 10).toByte
+    b(p + 15) = ('0' + mi % 10).toByte
+    b(p + 16) = ':'
+    b(p + 17) = ('0' + s / 10).toByte
+    b(p + 18) = ('0' + s % 10).toByte
+    b(p + 19) = '.'
+    b(p + 20) = ('0' + frac / 100000).toByte
+    b(p + 21) = ('0' + (frac / 10000) % 10).toByte
+    b(p + 22) = ('0' + (frac / 1000) % 10).toByte
+    b(p + 23) = ('0' + (frac / 100) % 10).toByte
+    b(p + 24) = ('0' + (frac / 10) % 10).toByte
+    b(p + 25) = ('0' + frac % 10).toByte
+    true
   }
 }
 
 /** Codegen'd `timestamp → 'yyyy-MM-dd HH:mm:ss.SSSSSS' string` at the
-  * session zone — the CSV sink's serialization fast path (see
-  * [[FastTimestampFormat]] for the why and the exactness contract).
-  * Registered as `graft_csv_ts`; [[graft.operators.Convert]] rewrites
-  * timestamp columns through it before the univocity writer, which then
-  * emits the pre-rendered strings verbatim (timestamp strings never
-  * contain separators or quotes, so the CSV bytes are unchanged).
-  * Null in → null out → the sink's `nullValue`, exactly as before. */
+  * session zone (see [[FastTimestampFormat]] for the exactness contract).
+  * Registered as `graft_csv_ts`. It was the CSV sink's serialization fast
+  * path before [[CsvBytesFormat]] rendered timestamps in the writer
+  * itself; it stays as a SQL function, and CsvBytesSpec uses it to build
+  * the reference bytes the sink must reproduce. Null in → null out. */
 case class CsvTimestampExpr(child: Expression,
                             timeZoneId: Option[String] = None)
   extends UnaryExpression with TimeZoneAwareExpression {

@@ -52,6 +52,16 @@ object PlanScreen {
 
   private val PlanId = """\[plan_id=(\d+)\]""".r
 
+  /** The shuffle-exchange node lines of `plan`: each one's partitioning
+    * kind and, when printed, its `plan_id`. PlanScreenSpec asserts that a
+    * real shuffle's lines carry the id, so a drift in Spark's plan text
+    * fails there instead of silently degrading [[counts]] to textual
+    * counting. */
+  def exchanges(plan: String): List[(String, Option[String])] =
+    ShuffleLine.findAllMatchIn(plan).map { m =>
+      m.group(1) -> PlanId.findFirstMatchIn(m.matched).map(_.group(1))
+    }.toList
+
   def counts(plan: String): Counts = {
     def n(p: String) = p.r.findAllIn(plan).size
     // hash/range/single-partition/round-robin all count — an added one
@@ -68,11 +78,8 @@ object PlanScreen {
     // object, a genuine second shuffle is a new id), so matches sharing
     // a plan_id collapse to one; synthetic/legacy lines without a
     // plan_id each count individually, as before.
-    val keyed = ShuffleLine.findAllMatchIn(plan).toList.zipWithIndex.map {
-      case (m, i) =>
-        val key = PlanId.findFirstMatchIn(m.matched).map(_.group(1))
-          .getOrElse(s"__occ$i")
-        key -> m.group(1)
+    val keyed = exchanges(plan).zipWithIndex.map { case ((kind, id), i) =>
+      id.getOrElse(s"__occ$i") -> kind
     }
     val kinds = keyed.distinctBy(_._1).map(_._2)
     Counts(n("CartesianProduct"), n("BroadcastNestedLoopJoin"),

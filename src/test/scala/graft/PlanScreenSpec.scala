@@ -54,6 +54,22 @@ class PlanScreenSpec extends SparkSpec {
     assert(singles == PlanScreen.Counts(1, 1, 1, 1))
   }
 
+  test("a real shuffle query's Exchange lines carry plan_id") {
+    // the physical dedupe keys on plan_id; if Spark stops printing it,
+    // counts() would fall back to textual counting without a sound —
+    // this makes that drift fail here, before and after execution
+    val df = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k"))
+      .count().orderBy("k")
+    val before = PlanScreen.exchanges(df.queryExecution.executedPlan.toString)
+    assert(df.collect().map(_.getLong(1)).sum === 1000L)
+    val after = PlanScreen.exchanges(df.queryExecution.executedPlan.toString)
+    for ((when, lines) <- Seq("planned" -> before, "executed" -> after)) {
+      assert(lines.map(_._1).toSet === Set("hashpartitioning", "rangepartitioning"),
+        s"$when plan: matched Exchange lines $lines")
+      assert(lines.forall(_._2.isDefined), s"$when plan: Exchange without plan_id: $lines")
+    }
+  }
+
   test("offenses: golden bound honored, absent query bound to zero") {
     // q01 has a recorded golden entry with >= 1 shuffle: at its bound
     // the screen stays quiet
