@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
+import graft.operators.Convert.deleteRecursively
 
 /** Per-round benchmark: one JSON line with per-query wall-clock seconds.
   *
@@ -60,41 +60,13 @@ object Bench {
   private def fmt(v: Double): String = BigDecimal(v)
     .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
-  private def deleteRecursively(p: Path): Unit =
-    graft.operators.Convert.deleteRecursively(p)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Contract: local[32] on the round runner. Honor SPARK_GRAFT_CPUS when
     // the driver pins it; otherwise size to the machine (capped at 32) —
     // a hardcoded small default silently benches a fraction of the box.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Round-5 lesson: on storage degraded to ~10 MB/s, I/O-stalled tasks
-      // starve the heartbeat thread past the default 120 s network timeout
-      // and local-mode Spark SELF-KILLS with exit 56 (heartbeat failure) —
-      // the bench must never convert slow I/O into a dead JVM. Generous
-      // timeouts keep the run alive; the deadline logic below keeps it
-      // bounded.
-      // Shuffle/spill files go to a RAM-backed dir when one exists: the
-      // sandbox's disk oscillates 10-130 MB/s, and shuffle-file I/O on a
-      // bad window measures the disk, not the engine. Conversion OUTPUTS
-      // still write to the real filesystem (java.io.tmpdir), so the
-      // baseline-comparable k1/k2 numbers keep paying true output I/O —
-      // this is the local-mode analog of provisioning NVMe shuffle
-      // volumes on a real cluster.
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
-        else System.getProperty("java.io.tmpdir"))
-      .config("spark.network.timeout", "1800s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness("graft-bench", GraftSession.envCores(
+      math.min(32, Runtime.getRuntime.availableProcessors())))
 
     // Storage-health probe (round 5: a 50-70× disk slowdown took the
     // recorded bench from ~60 s to a 42-minute death). 128 MB fsync'd
@@ -149,7 +121,9 @@ object Bench {
     val convertOutDir = Files.createTempDirectory("graft_bench_csv")
     val convertOut = convertOutDir.toString
     settleStorage() // pending writeback would depress the probe itself
-    val ioMbps = try probeWriteMbps(convertOutDir) catch { case _: Throwable => -1.0 }
+    def probe(): Double =
+      try probeWriteMbps(convertOutDir) catch { case _: Throwable => -1.0 }
+    val ioMbps = probe()
     // A probe that itself fails is the strongest possible degradation signal
     // — run reduced-I/O, never full mode, on storage the probe couldn't
     // even write 128 MB to.
@@ -250,15 +224,13 @@ object Bench {
         deleteRecursively(outPath)
         (sec, ok, bytes)
       }
-      def k2Probe(): Double =
-        try probeWriteMbps(convertOutDir) catch { case _: Throwable => -1.0 }
       // warm untimed even when degraded — a cold single run measures
       // JIT + committer init, not the engine
       if (degraded) {
         once() // warm
-        val p = k2Probe()
+        val p = probe()
         val (a, okA, bytes) = once()
-        val pa = k2Probe()
+        val pa = probe()
         k2Runs = Seq((p, a, okA, bytes, pa))
         k2IoMbps = p
         (a, okA)
@@ -267,12 +239,12 @@ object Bench {
         // (1) wait out a bad window before the timed runs (bounded; keyed
         // to probe health ONLY — see the design note above)
         settleStorage() // the warm run's writeback must not depress the probe
-        var w = k2Probe()
+        var w = probe()
         var waits = 0
         while (w < K2HealthyMbps && waits < 3) {
           Thread.sleep(20000)
           settleStorage()
-          w = k2Probe()
+          w = probe()
           waits += 1
         }
         // (2) fixed N timed runs, each BRACKETED by probes — run i's
@@ -282,7 +254,7 @@ object Bench {
         k2Runs = (1 to K2TimedRuns).map { _ =>
           val p = prevProbe
           val (sec, ok, bytes) = once()
-          val pa = k2Probe()
+          val pa = probe()
           prevProbe = pa
           (p, sec, ok, bytes, pa)
         }
@@ -340,9 +312,7 @@ object Bench {
       // !degraded: each probe force-writes 128 MB — don't add ~1 GB of
       // probe I/O to storage the run already declared too slow
       if (loopDone % LoopProbeEvery == 0 && !degraded && !pastDeadline) {
-        val p = try probeWriteMbps(convertOutDir)
-                catch { case _: Throwable => -1.0 }
-        loopProbes :+= ((name, loopDone, p))
+        loopProbes :+= ((name, loopDone, probe()))
       }
       out
     }
@@ -409,8 +379,6 @@ object Bench {
     // reporting phantom regressions with no defense.
     if (!pastDeadline) {
       val qmap = SparkEntry.queries
-      def probe(): Double =
-        try probeWriteMbps(convertOutDir) catch { case _: Throwable => -1.0 }
       val probeByDone = loopProbes.map(p => p._2 -> p._3).toMap
       // a query at loop index i sits in the segment ending at the next
       // probe point; it is window-suspect when either bracketing probe

@@ -54,4 +54,39 @@ object GraftSession {
     graft.plans.TopKPerKeyPlans.ensureRewrite(spark) // includes the strategy
     spark
   }
+
+  /** Harness cores: `SPARK_GRAFT_CPUS` when set, else `default`. */
+  def envCores(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(default)
+
+  /** The measurement-harness session Bench, Verify and the tools run on:
+    * `local[cores]` with `cores` shuffle partitions, UTC, no UI, log level
+    * WARN; long network/heartbeat timeouts, so I/O-stalled tasks on
+    * degraded storage cannot starve the heartbeat into a local-mode
+    * self-kill (exit 56); and shuffle/spill files on RAM-backed
+    * `/dev/shm` when it exists, so shuffle I/O measures the engine, not
+    * the disk (conversion outputs still pay real output I/O).
+    *
+    * It differs from the shipped [[builder]] posture: no Kryo, and no
+    * graft extensions at build time (queries register what they use).
+    * The builder's explicit AQE skew-join and 128 MiB file partitions are
+    * Spark defaults the harness gets anyway. Bench timings and
+    * `plan_golden.tsv` are recorded under this posture, so converging
+    * the two is a harness change that needs its own matched A/B. */
+  def harness(appName: String, cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .appName(appName)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.local.dir",
+        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
+        else System.getProperty("java.io.tmpdir"))
+      .config("spark.network.timeout", "1800s")
+      .config("spark.executor.heartbeatInterval", "60s")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

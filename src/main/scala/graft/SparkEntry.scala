@@ -2,12 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.{FramePool, OperatorCaches, Postings}
 import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   * Queries live in graft.queries.* (one QuerySpec per operator); this object
   * just aggregates them into the driver's Map shape. */
 object SparkEntry {
+
+  /** A registered query: (session, scale-factor dir) → result frame. */
+  type Query = (SparkSession, String) => DataFrame
 
   /** All registered queries, in registration order. */
   def allSpecs: Seq[QuerySpec] =
@@ -29,4 +33,22 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allSpecs.flatMap(s => s.oracle.map(s.name -> _)).toMap
+
+  /** The registry's one cache lifecycle: runs `body` on each query in the
+    * caller's order and returns, per query, its result or whatever it
+    * threw — a failing query is reported by name and the rest still run.
+    * `OperatorCaches` is released after each query; the cross-query pools
+    * (`Postings`, `FramePool`) live for the whole sweep — later queries
+    * reuse what earlier ones built — and are released once at the end. */
+  def sweep[A](queries: Seq[(String, Query)])(body: (String, Query) => A)
+      : Seq[(String, Either[Throwable, A])] = {
+    val results = queries.map { case (name, fn) =>
+      val r = try Right(body(name, fn)) catch { case e: Throwable => Left(e) }
+      OperatorCaches.release()
+      name -> r
+    }
+    Postings.release()
+    FramePool.release()
+    results
+  }
 }

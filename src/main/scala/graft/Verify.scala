@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,44 +9,16 @@ object Verify {
     // iteration aid; the driver always runs the full dump)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Degraded-storage survival (see Bench.scala): never let slow I/O
-      // starve heartbeats into a local-mode self-kill (exit 56).
-      // Shuffle/spill files go to a RAM-backed dir when one exists: the
-      // sandbox's disk oscillates 10-130 MB/s, and shuffle-file I/O on a
-      // bad window measures the disk, not the engine. Conversion OUTPUTS
-      // still write to the real filesystem (java.io.tmpdir), so the
-      // baseline-comparable k1/k2 numbers keep paying true output I/O —
-      // this is the local-mode analog of provisioning NVMe shuffle
-      // volumes on a real cluster.
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
-        else System.getProperty("java.io.tmpdir"))
-      .config("spark.network.timeout", "1800s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness("graft-verify", GraftSession.envCores(4))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val queries = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    SparkEntry.sweep(queries) { (name, fn) =>
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // release operator-persisted intermediates so a ~100-query dump
-      // can't accrete cache entries across queries (the corpus posting
-      // index pool deliberately survives — see graft.operators.Postings)
-      graft.operators.OperatorCaches.release()
+    }.collect { case (name, Left(e)) =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
     }
-    graft.operators.Postings.release()
-    graft.operators.FramePool.release()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CountMin, HistSketch, Pq, Postings, VectorIndex}
@@ -32,15 +32,7 @@ object DeleteProbe {
   private val K = 8
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.harness("graft-delete-probe", 32)
     val replicas = args.headOption.map(_.toInt).getOrElse(10)
     val base = "/root/testdata/sf0.1"
     val docs0 = spark.read.parquet(s"$base/documents.parquet")
@@ -56,11 +48,6 @@ object DeleteProbe {
     val bmQueries = Seq(
       "qa" -> Seq("spark", "join"), "qb" -> Seq("window", "scan"),
       "qc" -> Seq("stream", "hash"))
-
-    case class Row(stage: String, t1: Double, tN: Double) {
-      def line: String =
-        f"$stage%-22s ${t1}%8.3f ${tN}%8.3f ${tN / math.max(t1, 1e-9)}%6.2f"
-    }
 
     def probe(rep: Int): Map[String, Double] = {
       val tmp = java.nio.file.Files.createTempDirectory("dprobe").toString
@@ -157,7 +144,7 @@ object DeleteProbe {
     val tN = probe(replicas)
     println(f"${"stage"}%-22s ${"1x"}%8s ${s"${replicas}x"}%8s  ratio")
     t1.keys.toSeq.sorted.foreach { k =>
-      println(Row(k, t1(k), tN(k)).line)
+      println(f"$k%-22s ${t1(k)}%8.3f ${tN(k)}%8.3f ${tN(k) / math.max(t1(k), 1e-9)}%6.2f")
     }
     val gap1 = t1("postings_serve_pruned") - t1("postings_serve_full")
     val gapN = tN("postings_serve_pruned") - tN("postings_serve_full")

@@ -3,39 +3,29 @@ package graft.tools
 // Dump `.explain("formatted")` output for named registry queries into
 // files — the optimization-round evidence trail (plans/r16/<q>_<tag>.txt).
 // Usage: runMain graft.tools.ExplainFmt <outDir> <tag> <q1> <q2> ...
-// Runs at sf0.001 with the PlanGolden session shape so plans are
-// deterministic and cheap; FramePool stays warm across the listed names
-// (bench-loop order sensitivity — list a family in bench order to see
-// the pooled-consumer plan shape).
-import org.apache.spark.sql.SparkSession
-
+// Runs at sf0.001 on the harness session, the names as one
+// SparkEntry.sweep: FramePool stays warm across them (list a family in
+// bench order to see the pooled-consumer plan shape).
 object ExplainFmt {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val tag = args(1)
-    val names = args.drop(2)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = args.drop(2).toSeq
+    val spark = graft.GraftSession.harness("graft-explain", 8)
     new java.io.File(outDir).mkdirs()
-    val specs = graft.SparkEntry.allSpecs.map(s => s.name -> s).toMap
-    names.foreach { n =>
-      val s = specs(n)
-      val plan = s.fn(spark, "/root/testdata/sf0.001").queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/${n}_$tag.txt"), plan)
-      graft.operators.OperatorCaches.release()
-      println(s"WROTE $outDir/${n}_$tag.txt")
+    val queries = graft.SparkEntry.queries
+    val failed = graft.SparkEntry.sweep(names.map(n => n -> queries(n))) {
+      (n, fn) =>
+        val plan = fn(spark, "/root/testdata/sf0.001").queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$outDir/${n}_$tag.txt"), plan)
+        println(s"WROTE $outDir/${n}_$tag.txt")
+    }.collect { case (n, Left(e)) =>
+      println(s"FAILED $n: ${e.getMessage}")
+      n
     }
-    graft.operators.Postings.release()
-    graft.operators.FramePool.release()
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -3,57 +3,39 @@ package graft.tools
 // Regenerates src/main/resources/plan_golden.tsv — the checked-in
 // per-query physical-plan shape baseline RegistryPlanSpec enforces
 // (any BNLJ / single-partition-exchange count above the recorded value
-// trips the spec). MUST replicate RegistryPlanSpec's traversal exactly:
-// same registry order, OperatorCaches released per query, the
-// cross-query pools (Postings/FramePool) alive for the whole sweep —
-// pooled-frame reuse makes later queries' plans depend on earlier ones.
+// trips the spec). Both read PlanScreen.registryPlans, so the recorded
+// and the enforced plans come from one traversal.
 import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.SparkSession
 
 object PlanGolden {
   def main(args: Array[String]): Unit = {
-    // mirrors SparkTestBase's session config exactly: the recorded
-    // counts are parallelism-independent, but keeping the two sessions
-    // identical removes even the theoretical divergence class
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = "/root/testdata/sf0.001"
+    // the recorded counts are parallelism-independent; 4 cores matches
+    // the test session RegistryPlanSpec runs on
+    val spark = graft.GraftSession.harness("graft-plan-golden", 4)
     // a failed plan build must ABORT the regeneration, not be skipped:
     // PlanScreen binds absent queries to (0,0), so writing a partial file
     // (e.g. on a machine with stale fixtures) would silently TIGHTEN the
     // bounds for legitimate queries and misread as plan regressions
-    var failed = List.empty[String]
-    val rows = graft.SparkEntry.allSpecs.flatMap { s =>
-      val r =
-        try {
-          val c = PlanScreen.counts(
-            s.fn(spark, d).queryExecution.executedPlan.toString)
-          if (c.cart > 0)
-            println(s"WARN ${s.name}: CartesianProduct — NOT recorded " +
-              "(never allowed; fix the query instead)")
-          Option.when(c.bnlj > 0 || c.single > 0 || c.exch > 0)(
-            s"${s.name}\t${c.bnlj}\t${c.single}\t${c.exch}")
-        } catch {
-          case e: Throwable =>
-            println(s"ERROR ${s.name}: plan build failed — ${e.getMessage}")
-            failed ::= s.name
-            None
-        }
-      graft.operators.OperatorCaches.release()
-      r
+    val plans = PlanScreen.registryPlans(spark, "/root/testdata/sf0.001")
+    val failed = plans.collect { case (name, Left(e)) =>
+      println(s"ERROR $name: plan build failed — ${e.getMessage}")
+      name
     }
-    graft.operators.Postings.release()
-    graft.operators.FramePool.release()
     if (failed.nonEmpty) {
       System.err.println(s"REFUSING to write plan_golden.tsv: " +
         s"${failed.size} quer${if (failed.size == 1) "y" else "ies"} failed " +
-        s"to build (${failed.reverse.mkString(", ")})")
+        s"to build (${failed.mkString(", ")})")
       spark.stop()
       sys.exit(1)
+    }
+    val rows = plans.collect { case (name, Right(plan)) =>
+      name -> PlanScreen.counts(plan)
+    }.flatMap { case (name, c) =>
+      if (c.cart > 0)
+        println(s"WARN $name: CartesianProduct — NOT recorded " +
+          "(never allowed; fix the query instead)")
+      Option.when(c.bnlj > 0 || c.single > 0 || c.exch > 0)(
+        s"$name\t${c.bnlj}\t${c.single}\t${c.exch}")
     }
     val out = Paths.get("src/main/resources/plan_golden.tsv")
     Files.createDirectories(out.getParent)

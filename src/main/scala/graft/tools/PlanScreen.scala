@@ -1,12 +1,16 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
+
+import graft.SparkEntry
+
 /** The ONE copy of the physical-plan anti-pattern screen shared by the
-  * enforcing spec (RegistryPlanSpec) and the calibration probe
-  * (PlanAudit): a plan string is screened for the shapes the 100 TB
+  * enforcing spec (RegistryPlanSpec) and the golden-count recorder
+  * ([[PlanGolden]]): a plan string is screened for the shapes the 100 TB
   * doctrine forbids. The counted patterns are parallelism-independent
   * (a CartesianProduct / one-row broadcast cross / single-partition
   * exchange appears the same at any shuffle-partition setting), so
-  * calibration and enforcement agree regardless of session config.
+  * recording and enforcement agree regardless of session config.
   *
   * Bounds are PER QUERY, against the checked-in golden counts
   * (`plan_golden.tsv`, regenerated by [[PlanGolden]]): a global bound
@@ -87,11 +91,20 @@ object PlanScreen {
       kinds.size)
   }
 
+  /** Every registered query's executed plan at `sfDir` (or what building
+    * it threw), in registration order through [[SparkEntry.sweep]] — the
+    * ONE traversal [[PlanGolden]] records and RegistryPlanSpec enforces,
+    * since pooled-frame reuse makes later plans depend on earlier ones. */
+  def registryPlans(spark: SparkSession, sfDir: String)
+      : Seq[(String, Either[Throwable, String])] =
+    SparkEntry.sweep(SparkEntry.allSpecs.map(s => s.name -> s.fn)) {
+      (_, fn) => fn(spark, sfDir).queryExecution.executedPlan.toString
+    }
+
   /** Golden (bnlj, single-partition, shuffle-exchange) counts per
-    * query, recorded at sf0.001 by [[PlanGolden]] under
-    * RegistryPlanSpec's exact traversal (same registry order, same
-    * cache lifecycle — pooled-frame reuse makes plans order-sensitive).
-    * Queries absent from the file are bound to (0, 0, 0). */
+    * query, recorded at sf0.001 by [[PlanGolden]] over
+    * [[registryPlans]]. Queries absent from the file are bound to
+    * (0, 0, 0). */
   lazy val golden: Map[String, (Int, Int, Int)] = {
     val in = getClass.getResourceAsStream("/plan_golden.tsv")
     if (in == null) Map.empty

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-import graft.operators.Graphs
+import graft.operators.{FramePool, Graphs, OperatorCaches}
 
 /** Planted-hub checks for the capped wedge generator behind q223: the
   * per-center fan-out bound actually binds (a degree-200 hub yields
@@ -108,5 +110,21 @@ class GraphsSpec extends SparkSpec {
       ("auth", "x", 625000000L), ("auth", "y", 375000000L),
       ("hub", "A", 615384615L), ("hub", "B", 384615384L)))
     graft.operators.OperatorCaches.release()
+  }
+
+  test("PageRank variants leave a pooled edge frame persisted after the per-query release") {
+    val edges = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 1L), (3L, 2L, 1L))
+      .toDF("src", "dst", "w")
+    val variants = Seq[(String, DataFrame => DataFrame)](
+      "pageRank" -> (Graphs.pageRank(_, 2)),
+      "personalizedPageRank" -> (Graphs.personalizedPageRank(_, col("node") === 1L, 2)),
+      "weightedPageRank" -> (Graphs.weightedPageRank(_, 2)))
+    try variants.foreach { case (name, rank) =>
+      val Seq(pooled) = FramePool.frames(("graphs-spec-edges", name))(Seq(edges))
+      rank(pooled).collect()
+      OperatorCaches.release()
+      assert(pooled.storageLevel !== StorageLevel.NONE,
+        s"$name unpersisted the pooled edge frame")
+    } finally FramePool.release()
   }
 }

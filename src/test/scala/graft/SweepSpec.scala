@@ -1,0 +1,50 @@
+package graft
+
+import graft.operators.{FramePool, OperatorCaches, Postings}
+
+/** The registry cache lifecycle `SparkEntry.sweep` owns, on synthetic
+  * queries: single-query intermediates never outlive their query, the
+  * cross-query pools outlive every query but not the sweep, and a
+  * throwing query is reported by name without stopping the sweep. */
+class SweepSpec extends SparkSpec {
+
+  import spark.implicits._
+
+  test("sweep releases operator caches per query, pools at the end, and survives a throw") {
+    val persists: SparkEntry.Query = (s, _) =>
+      OperatorCaches.persistTracked(s.range(10).toDF("id"))
+    val pools: SparkEntry.Query = (s, _) => {
+      val docs = Seq((1L, "a b c"), (2L, "b c d")).toDF("id", "text")
+      Postings.forCorpus(docs, "id", "text")
+      FramePool.frames("sweep-spec")(Seq(s.range(5).toDF("id"))).head
+    }
+    val throws: SparkEntry.Query = (_, _) => throw new IllegalStateException("boom")
+    OperatorCaches.release()
+    // (query, tracked, pooled frames, pooled indexes) as each query starts
+    val seen = scala.collection.mutable.ArrayBuffer[(String, Int, Int, Int)]()
+    val results = SparkEntry.sweep(Seq(
+      "persists" -> persists, "pools" -> pools, "throws" -> throws,
+      "persists_again" -> persists)) { (name, fn) =>
+      seen += ((name, OperatorCaches.trackedCount, FramePool.pooledCount,
+        Postings.pooledCount))
+      fn(spark, sfDir).count()
+    }
+
+    assert(results.map(_._1) ===
+      Seq("persists", "pools", "throws", "persists_again"))
+    assert(results.collect { case (n, Left(e)) => n -> e.getMessage } ===
+      Seq("throws" -> "boom"))
+    assert(results.collect { case (n, Right(c)) => n -> c } ===
+      Seq("persists" -> 10L, "pools" -> 5L, "persists_again" -> 10L))
+    // no query starts with an earlier query's operator caches
+    assert(seen.map(_._2).toSeq === Seq(0, 0, 0, 0))
+    // the pooled entries built by "pools" survive into every later query
+    assert(seen.map(s => (s._1, s._3, s._4)).toSeq === Seq(
+      ("persists", 0, 0), ("pools", 0, 0), ("throws", 1, 1),
+      ("persists_again", 1, 1)))
+    // ... and not past the sweep
+    assert(OperatorCaches.trackedCount === 0)
+    assert(FramePool.pooledCount === 0)
+    assert(Postings.pooledCount === 0)
+  }
+}

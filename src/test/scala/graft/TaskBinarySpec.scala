@@ -55,15 +55,18 @@ class TaskBinarySpec extends SparkSpec {
     lc.addAppender(capture, Level.WARN, null)
     ctx.updateLoggers()
     try {
-      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
+      val results = SparkEntry.sweep(SparkEntry.queries.toSeq.sortBy(_._1)) {
+        (_, fn) =>
           val before = capture.messages.size()
           fn(spark, sfDir).count()
-          graft.operators.OperatorCaches.release()
-          val warned = capture.messages.toArray(Array.empty[String])
-            .drop(before).map(sizeKiB)
-          Option.when(warned.exists(_ >= 2048.0))(
-            name -> warned.max)
+          capture.messages.toArray(Array.empty[String]).drop(before).map(sizeKiB)
+      }
+      val failed = results.collect { case (name, Left(e)) =>
+        s"$name: ${e.getMessage}" }
+      assert(failed.isEmpty, failed.mkString("; "))
+      val offenders = results.collect {
+        case (name, Right(warned)) if warned.exists(_ >= 2048.0) =>
+          name -> warned.max
       }
       assert(offenders.isEmpty,
         s"task binaries >= 2 MiB: ${offenders.map { case (n, k) =>
@@ -73,8 +76,6 @@ class TaskBinarySpec extends SparkSpec {
       config.getAppenders.remove(capture.getName)
       ctx.updateLoggers()
       capture.stop()
-      graft.operators.Postings.release()
-      graft.operators.FramePool.release()
     }
   }
 }
