@@ -18,8 +18,8 @@ object GraftSession {
     *    task (the salted-agg operator covers the aggregation side);
     *  - shuffle partitions sized for the cluster, not the 200 default
     *    (callers pass cores; AQE coalesces down from there);
-    *  - 128 MiB file partitions (the parquet row-group sweet spot) and
-    *    vectorized reads;
+    *  - 128 MiB file partitions (the parquet row-group sweet spot),
+    *    [[FileOpenCostBytes]] for split packing, and vectorized reads;
     *  - extensions: graft_dot / graft_shingle_hashes / graft_simhash /
     *    graft_minhash in SQL + the TopKPerKey strategy and window-top-k
     *    rewrite.
@@ -33,9 +33,18 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.shuffle.partitions", (defaultParallelism * 2).toString)
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
+      .config("spark.sql.files.openCostInBytes", FileOpenCostBytes.toString)
       .config("spark.sql.parquet.enableVectorizedReader", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+
+  /** `spark.sql.files.openCostInBytes` in both postures ([[builder]] and
+    * [[harness]]): 1 MiB instead of Spark's 4 MiB. The open cost is also
+    * the floor of a scan split's size, so at 4 MiB a 9 MB file of six
+    * equal row groups packs into three splits of 3, 2 and 1 groups on
+    * four cores; at 1 MiB it packs 2/1/2/1 and no core idles. Files under
+    * 1 MiB still scan as one split. */
+  val FileOpenCostBytes: Long = 1L << 20
 
   /** Local development/test session with the same engine posture at
     * `local[n]` scale. */
@@ -65,7 +74,8 @@ object GraftSession {
     * degraded storage cannot starve the heartbeat into a local-mode
     * self-kill (exit 56); and shuffle/spill files on RAM-backed
     * `/dev/shm` when it exists, so shuffle I/O measures the engine, not
-    * the disk (conversion outputs still pay real output I/O).
+    * the disk (conversion outputs still pay real output I/O). Scan splits
+    * pack with the shipped posture's [[FileOpenCostBytes]].
     *
     * It differs from the shipped [[builder]] posture: no Kryo, and no
     * graft extensions at build time (queries register what they use).
@@ -85,6 +95,7 @@ object GraftSession {
         else System.getProperty("java.io.tmpdir"))
       .config("spark.network.timeout", "1800s")
       .config("spark.executor.heartbeatInterval", "60s")
+      .config("spark.sql.files.openCostInBytes", FileOpenCostBytes.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -81,7 +81,7 @@ object Convert {
     * parallel, each output file capped at `maxRecordsPerFile` rows. */
   def parquetToCsv(spark: SparkSession, in: String, outDir: String,
                    maxRecordsPerFile: Long = DefaultMaxRecordsPerFile): Unit =
-    csvWriter(spark.read.parquet(in), maxRecordsPerFile).save(outDir)
+    csvWriter(graft.sources.Scan.parquet(spark, in), maxRecordsPerFile).save(outDir)
 
   /** K4 over an arbitrary DataFrame. */
   def toCsvDir(df: DataFrame, outDir: String,

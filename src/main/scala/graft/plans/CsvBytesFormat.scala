@@ -31,8 +31,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * replica that encode path, not value formatting, was most of
   * `convert.csv_encode_write_s`. Here ints and longs render as digits,
   * strings copy their UTF-8 bytes with one scan for quote triggers,
-  * doubles and floats go through `Double.toString`/`Float.toString`, and
-  * timestamps in the pinned pattern through [[FastTimestampFormat.render]].
+  * timestamps in the pinned pattern go through
+  * [[FastTimestampFormat.render]], and floats through `Float.toString`.
+  * Doubles take [[CsvBytesFormat.putFixedDouble]], which writes the
+  * digits of a short fixed-notation value straight into the buffer: it
+  * applies when `1e-3 <= |v| < 1e7` and some `k <= 6` gives
+  * `m = round(|v| * 10^k)` with `m / 10^k == |v|`, and writes the sign,
+  * `m / 10^k`, `.` and the fraction digits for the smallest such `k`.
+  * That is `Double.toString`'s fixed notation: with `k <= 6` the value has
+  * at most 13 significant digits, so the round-tripping decimal is unique.
+  * Every other double (0, NaN, infinities, subnormals, the scientific
+  * range, longer fractions) keeps `Double.toString`.
   * Every other type takes the converter rule of Spark's
   * `UnivocityGenerator` (date, timestamp and interval formatters, the
   * binary formatter, `toString`).
@@ -119,6 +128,47 @@ object CsvBytesFormat {
   private[plans] final val Int16 = 8
   private[plans] final val Int8 = 9
   private[plans] final val Other = 10
+
+  /** The longest [[putFixedDouble]] rendering: sign, 7 integer digits,
+    * `.`, 6 fraction digits. */
+  private[plans] final val FixedDoubleWidth = 15
+
+  private val Pow10 = Array(1e0, 1e1, 1e2, 1e3, 1e4, 1e5, 1e6)
+  private val LongPow10 = Array(1L, 10L, 100L, 1000L, 10000L, 100000L, 1000000L)
+
+  /** Writes `java.lang.Double.toString(v)` into `out` at `at` when `v` is
+    * in the fast path's range (see the class doc) and returns the end
+    * offset; returns -1, writing nothing, for every other value. `out`
+    * must have [[FixedDoubleWidth]] bytes free at `at`. */
+  private[graft] def putFixedDouble(v: Double, out: Array[Byte], at: Int): Int = {
+    val a = Math.abs(v)
+    if (!(a >= 1e-3 && a < 1e7)) return -1
+    var k = 0
+    var m = 0L
+    while ({ m = Math.round(a * Pow10(k)); m / Pow10(k) != a }) {
+      k += 1
+      if (k > 6) return -1
+    }
+    var p = at
+    if (v < 0) { out(p) = '-'; p += 1 }
+    val whole = m / LongPow10(k)
+    var frac = m - whole * LongPow10(k)
+    // integer digits, then the fraction's k digits: k is the smallest that
+    // round-trips, so for k > 0 the last fraction digit is not 0
+    var digits = 1
+    var t = whole / 10
+    while (t > 0) { digits += 1; t /= 10 }
+    var q = p + digits - 1
+    t = whole
+    while (q >= p) { out(q) = ('0' + t % 10).toByte; t /= 10; q -= 1 }
+    p += digits
+    out(p) = '.'
+    p += 1
+    if (k == 0) { out(p) = '0'; return p + 1 }
+    q = p + k - 1
+    while (q >= p) { out(q) = ('0' + frac % 10).toByte; frac /= 10; q -= 1 }
+    p + k
+  }
 
   /** Byte classes for the field scan: 1 = quote trigger (`,` `"` CR LF),
     * 2 = escaped inside quotes (`"` `\`), 4 = non-ASCII. */
@@ -244,7 +294,7 @@ private[plans] final class CsvBytesWriter(val path: String, schema: StructType,
         case Int64 => putLong(row.getLong(i))
         case Int16 => putLong(row.getShort(i))
         case Int8 => putLong(row.getByte(i))
-        case Float64 => putAscii(java.lang.Double.toString(row.getDouble(i)))
+        case Float64 => putDouble(row.getDouble(i))
         case Float32 => putAscii(java.lang.Float.toString(row.getFloat(i)))
         case Ts => putTimestamp(row.getLong(i), zone, i)
         case TsNtz => putTimestamp(row.getLong(i), java.time.ZoneOffset.UTC, i)
@@ -293,6 +343,12 @@ private[plans] final class CsvBytesWriter(val path: String, schema: StructType,
       i += 1
     }
     pos += n
+  }
+
+  private def putDouble(v: Double): Unit = {
+    ensure(FixedDoubleWidth)
+    val end = putFixedDouble(v, buf, pos)
+    if (end >= 0) pos = end else putAscii(java.lang.Double.toString(v))
   }
 
   private def putLong(v: Long): Unit = {

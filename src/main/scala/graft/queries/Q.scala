@@ -21,7 +21,7 @@ object Q {
 
   /** Load a fixture table from the scale-factor dir. */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.sources.Scan.parquet(spark, s"$sfDir/$name.parquet")
 
   /** Schema-adaptive events reader. The fixture's `ts` physical type has
     * drifted across driver regenerations — TIMESTAMP(NANOS) (which Spark 4

@@ -1,6 +1,14 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -19,9 +27,49 @@ import org.apache.spark.sql.types.StructType
 object Scan {
 
   /** S1/S2: parquet scan. Lazy; Catalyst prunes columns and pushes
-    * predicates down to the vectorized parquet reader automatically. */
+    * predicates down to the vectorized parquet reader automatically.
+    *
+    * One path naming a file reads with that file's [[footerSchema]], so
+    * resolving the read runs no Spark job; Spark's own schema inference
+    * runs a one-task job to read the same footer. Directories, globs and
+    * several paths keep Spark's inference. */
   def parquet(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.parquet(paths: _*)
+    paths match {
+      case Seq(one) => footerSchema(spark, one)
+        .fold(spark.read.parquet(one))(parquetWithSchema(spark, _, paths))
+      case _ => spark.read.parquet(paths: _*)
+    }
+
+  /** The schema Spark's inference gives the parquet file at `path`, read
+    * on the driver: the footer without row groups, converted by
+    * `ParquetFileFormat.readSchemaFromFooter` with the converter settings
+    * Spark's `mergeSchemasInParallel` takes from the session conf. None
+    * when `path` is a glob, a directory, a name Spark's file listing
+    * skips (`_x`, `.x`, `x._COPYING_`), or a footer that does not read;
+    * those stay with Spark, which reports them as it always has. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else try {
+      val p = new Path(path)
+      val name = p.getName
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val status = p.getFileSystem(hadoopConf).getFileStatus(p)
+      if (!status.isFile || name.startsWith("_") || name.startsWith(".") ||
+          name.endsWith("._COPYING_")) None
+      else {
+        val conf = spark.sessionState.conf
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(status, hadoopConf), SKIP_ROW_GROUPS)
+        Some(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(status.getPath, footer), converter))
+      }
+    } catch { case NonFatal(_) => None }
 
   /** S1 at 100 TB: explicit schema — no footer sampling over millions of
     * files, and a stable contract independent of file drift. */
@@ -46,7 +94,7 @@ object Scan {
     val registered = plain.filter { t =>
       val p = s"$sfDir/$t.parquet"
       val exists = new java.io.File(p).exists()
-      if (exists) spark.read.parquet(p).createOrReplaceTempView(t)
+      if (exists) parquet(spark, p).createOrReplaceTempView(t)
       exists
     }
     val eventsPath = s"$sfDir/events.parquet"

@@ -11,7 +11,9 @@ import graft.{GraftSession, SparkEntry}
   * registry queries on `SPARK_GRAFT_SF_DIR` (default sf0.1) on the harness
   * session at Bench's cores. Each query runs twice in its own
   * [[SparkEntry.sweep]] (the second run is pool-warm) into Spark's `noop`
-  * sink, and reports the min of the two runs.
+  * sink, and reports the min of the two runs with the number of Spark
+  * jobs that run started ([[JobCounter]]; table reads, pool builds and
+  * the sink's own job all count).
   *
   * `--scale N` also times each query on an N× shifted-key replica and
   * prints the ratio: near-linear ratios are the evidence that operator
@@ -43,32 +45,36 @@ object Profile {
     val spark = GraftSession.harness("graft-profile", GraftSession.envCores(
       math.min(32, Runtime.getRuntime.availableProcessors())))
     val big = scale.map(n => replicate(spark, base, n))
+    val jobs = new JobCounter(spark)
 
-    /** Min of two runs of `name` on `dir`, or the first failure. */
-    def time(name: String, dir: String): Either[Throwable, Double] = {
-      val (errors, secs) = SparkEntry.sweep(Seq.fill(2)(name -> registry(name))) {
-        (_, fn) =>
+    /** (seconds, jobs) of the faster of two runs of `name` on `dir`, or
+      * the first failure. */
+    def time(name: String, dir: String): Either[Throwable, (Double, Int)] = {
+      val (errors, runs) = SparkEntry.sweep(Seq.fill(2)(name -> registry(name))) {
+        (_, fn) => jobs.count {
           val t0 = System.nanoTime()
           fn(spark, dir).write.mode("overwrite").format("noop").save()
           (System.nanoTime() - t0) / 1e9
+        }
       }.map(_._2).partitionMap(identity)
-      errors.headOption.toLeft(secs.min)
+      errors.headOption.toLeft(runs.minBy(_._1))
     }
 
     val dirs = base +: big.toSeq
-    println(f"${"query"}%-32s ${Paths.get(base).getFileName}%8s" +
-      scale.fold("")(n => f" ${s"x$n"}%8s ratio"))
+    println(f"${"query"}%-32s ${Paths.get(base).getFileName}%8s ${"jobs"}%5s" +
+      scale.fold("")(n => f" ${s"x$n"}%8s ${"jobs"}%5s ratio"))
     val failed = names.filter { n =>
       dirs.map(time(n, _)).partitionMap(identity) match {
         case (e +: _, _) =>
           println(s"FAILED $n: ${e.getMessage}")
           true
-        case (_, secs) =>
-          println(f"$n%-32s " + secs.map(s => f"$s%8.3f").mkString(" ") +
-            secs.lift(1).fold("")(s2 => f" ${s2 / secs(0)}%5.2f"))
+        case (_, runs) =>
+          println(f"$n%-32s " + runs.map { case (s, j) => f"$s%8.3f $j%5d" }.mkString(" ") +
+            runs.lift(1).fold("")(r2 => f" ${r2._1 / runs(0)._1}%5.2f"))
           false
       }
     }
+    jobs.close()
     big.foreach(d => graft.operators.Convert.deleteRecursively(Paths.get(d)))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

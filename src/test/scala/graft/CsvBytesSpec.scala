@@ -340,6 +340,133 @@ class CsvBytesSpec extends SparkSpec {
     } finally spark.conf.unset(legacy)
   }
 
+  // ---- the fixed-notation double fast path ------------------------------
+
+  /** Compares the fast double path with `Double.toString` one value at a
+    * time: the fast path must either decline (-1) or write exactly
+    * `Double.toString`'s bytes. Counts the values it took. */
+  private final class FastPathCheck {
+    private val buf = new Array[Byte](32)
+    var hits = 0L
+    private var mismatches = 0L
+    private val first = Seq.newBuilder[String]
+
+    def apply(v: Double): Unit = {
+      val end = CsvBytesFormat.putFixedDouble(v, buf, 0)
+      if (end >= 0) {
+        hits += 1
+        val want = java.lang.Double.toString(v)
+        var same = end == want.length
+        var i = 0
+        while (same && i < end) { same = buf(i) == want.charAt(i); i += 1 }
+        if (!same) {
+          mismatches += 1
+          if (mismatches <= 5) first += s"$want rendered ${new String(buf, 0, end, "US-ASCII")}"
+        }
+      }
+    }
+
+    def assertExact(what: String): Unit =
+      assert(mismatches === 0L,
+        s"$what: $mismatches fast-path mismatches, first: ${first.result().mkString("; ")}")
+  }
+
+  private def inFastRange(v: Double) = math.abs(v) >= 1e-3 && math.abs(v) < 1e7
+
+  test("fast double path equals Double.toString on every m/10^k, k = 1..6") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val perK = (1 to 6).map(k => Future {
+      val p = math.pow(10, k)
+      val c = new FastPathCheck
+      var inRange = 0L
+      // m in [1, 10^7], then the 10^6 values (of either sign) just below
+      // 10^7 that end the fast range
+      var m = 1L
+      while (m <= 10000000L) {
+        val v = m / p
+        if (inFastRange(v)) inRange += 1
+        c(v)
+        m += 1
+      }
+      m = 10000000L * p.toLong - 1000000L
+      while (m < 10000000L * p.toLong) {
+        c(m / p)
+        c(-m / p)
+        inRange += 2
+        m += 1
+      }
+      (k, c, inRange)
+    })
+    for ((k, c, inRange) <- Await.result(Future.sequence(perK), scala.concurrent.duration.Duration.Inf)) {
+      c.assertExact(s"m/10^$k")
+      assert(c.hits === inRange, s"k = $k: the fast path declined an m/10^$k in its range")
+    }
+  }
+
+  test("fast double path equals Double.toString on seeded random doubles") {
+    val rng = new Random(20)
+    // random bit patterns: every exponent, so mostly declined
+    val bits = new FastPathCheck
+    for (_ <- 1 to 10000000) bits(java.lang.Double.longBitsToDouble(rng.nextLong()))
+    bits.assertExact("random bits")
+    assert(bits.hits > 0)
+    // values in [1e-3, 1e7): log-uniform full-precision doubles, and
+    // decimals of 0..9 fraction digits (those of 7..9 digits must decline)
+    val ranged = new FastPathCheck
+    var n = 0
+    while (n < 10000000) {
+      val v =
+        if (rng.nextBoolean()) math.pow(10, -3 + 10 * rng.nextDouble())
+        else {
+          val p = math.pow(10, rng.nextInt(10))
+          math.floor(math.pow(10, -3 + 10 * rng.nextDouble()) * p) / p
+        }
+      if (inFastRange(v)) {
+        ranged(if (rng.nextBoolean()) -v else v)
+        n += 1
+      }
+    }
+    ranged.assertExact("random values in [1e-3, 1e7)")
+    assert(ranged.hits > 3000000L)
+  }
+
+  test("fast double path boundaries and specials") {
+    val buf = new Array[Byte](32)
+    def fast(v: Double): Option[String] = {
+      val end = CsvBytesFormat.putFixedDouble(v, buf, 0)
+      Option.when(end >= 0)(new String(buf, 0, end, "US-ASCII"))
+    }
+    val taken = Seq(1e-3, 0.0015, 1.0, 0.1, 5.25, 9999999.0, 9999999.999999,
+      123456.789, 1234567.5, 0.123456, 1e6, 42.0)
+    val declined = Seq(Math.nextDown(1e-3), 1e7, Math.nextDown(1e7),
+      0.0, -0.0, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.MinPositiveValue, java.lang.Double.MIN_NORMAL, 1e-4,
+      0.1234567, 1.0 / 3, Math.nextUp(1.0), 1e300)
+    for (v <- taken; x <- Seq(v, -v))
+      assert(fast(x) === Some(java.lang.Double.toString(x)), s"value $x")
+    for (v <- declined; x <- Seq(v, -v))
+      assert(fast(x) === None, s"value $x")
+    assert(fast(1e-3) === Some("0.001"))
+    assert(fast(-5.25) === Some("-5.25"))
+    assert(fast(9999999.0) === Some("9999999.0"))
+  }
+
+  test("short-decimal doubles through the sink: same bytes as Spark's csv writer") {
+    import spark.implicits._
+    val t = tmp()
+    val rng = new Random(21)
+    val df = Seq.fill(20000) {
+      val k = rng.nextInt(8)
+      val m = (rng.nextLong() & Long.MaxValue) % math.pow(10, 1 + rng.nextInt(13)).toLong
+      val v = m / math.pow(10, k)
+      (if (rng.nextBoolean()) -v else v, pick(rng, doubleSpecials, v * 3))
+    }.toDF("a", "b").repartition(3).localCheckpoint()
+    Convert.toCsvDir(df, s"$t/got")
+    builtIn(df, s"$t/want", Convert.CsvOptions)
+    assertSameParts(s"$t/got", s"$t/want")
+  }
+
   // ---- options the encoder does not implement fail loudly ---------------
 
   private val rejected = Seq(

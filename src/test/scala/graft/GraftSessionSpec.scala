@@ -1,18 +1,36 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
 import org.apache.spark.sql.functions._
+
+import graft.sources.Scan
 
 /** Session bootstrap: the graft surface (SQL functions + custom
   * operators) is present on a GraftSession.local session even when
   * getOrCreate returned a pre-existing session whose builder confs could
-  * not apply. */
+  * not apply; both postures pack scan splits with the same open cost. */
 class GraftSessionSpec extends SparkSpec {
 
-  // local() enables the window-top-k rewrite; detach it after each test
-  // so the shared test session's planning stays vanilla for other suites
-  override def withFixture(test: NoArgTest) =
+  private val OpenCost = "spark.sql.files.openCostInBytes"
+
+  // local() enables the window-top-k rewrite and applies the builder's
+  // runtime confs to the shared test session; detach the rewrite and
+  // restore the confs after each test so the session's planning stays
+  // vanilla for other suites
+  override def withFixture(test: NoArgTest) = {
+    val before = spark.conf.getAll
     try super.withFixture(test)
-    finally graft.plans.TopKPerKeyPlans.removeRewrite(spark)
+    finally {
+      graft.plans.TopKPerKeyPlans.removeRewrite(spark)
+      for ((k, v) <- spark.conf.getAll
+           if spark.conf.isModifiable(k) && !before.get(k).contains(v))
+        before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 
   test("local() session exposes graft functions and the top-k operator") {
     val s = GraftSession.local("graft-session-spec", 4)
@@ -41,5 +59,49 @@ class GraftSessionSpec extends SparkSpec {
     // shared-session caveat: confs set at FIRST session build win; the
     // contract here is that the graft surface is present regardless
     // (ensured registration), which the test above proves.
+  }
+
+  test("builder and harness both pack scan splits with a 1 MiB open cost") {
+    assert(GraftSession.FileOpenCostBytes === 1024L * 1024)
+    // on the shared test session getOrCreate applies each posture's
+    // runtime confs; start each from Spark's 4 MiB default
+    spark.conf.unset(OpenCost)
+    assert(GraftSession.builder("graft-session-spec3", 4).getOrCreate()
+      .conf.get(OpenCost) === "1048576")
+    spark.conf.unset(OpenCost)
+    assert(GraftSession.harness("graft-session-spec4", 4)
+      .conf.get(OpenCost) === "1048576")
+  }
+
+  test("six equal row groups of one file scan as four partitions of at most two groups") {
+    val tmp = Files.createTempDirectory("graftsessionspec").toString
+    val groupRows = 100000
+    spark.range(0, 6L * groupRows, 1, 1)
+      .select(col("id"), rand(7).as("x"))
+      .write.option("parquet.block.row.count.limit", groupRows.toString)
+      .option("parquet.enable.dictionary", "false")
+      .option("compression", "none")
+      .parquet(s"$tmp/six")
+    val file = new java.io.File(s"$tmp/six").listFiles()
+      .map(_.getPath).filter(_.endsWith(".parquet")).toSeq match {
+        case Seq(one) => one
+        case other => fail(s"expected one part file, got $other")
+      }
+    val blocks = scala.util.Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf())))(_.getRowGroups)
+    assert(blocks.size === 6)
+    assert(new java.io.File(file).length > 9000000L)
+
+    /** Rows in each non-empty scan partition. */
+    def split(): Seq[Long] = Scan.parquet(spark, file).queryExecution.toRdd
+      .mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq.filter(_ > 0)
+
+    val s = GraftSession.local("graft-session-spec5", 4)
+    assert(s eq spark)
+    assert(s.conf.get(OpenCost) === "1048576")
+    assert(split() === Seq(2, 1, 2, 1).map(_ * groupRows.toLong))
+    // Spark's 4 MiB default packs the same file 3/2/1, leaving a core idle
+    spark.conf.unset(OpenCost)
+    assert(split() === Seq(3, 2, 1).map(_ * groupRows.toLong))
   }
 }
