@@ -40,12 +40,13 @@ object Convert {
   val NullValue = ""
   val EmptyValue = "\"\""
 
-  /** Reader-side null token: must be a string that never appears as data.
-    * Spark's CSV reader substitutes quoted-empty fields with its
-    * `emptyValue` ("" by default) BEFORE the `nullValue` comparison, so a
-    * reader `nullValue` of "" would collapse `""` (empty string) and a
-    * bare empty field (null) to the same value; with an impossible
-    * sentinel, only genuinely absent fields parse as null. */
+  /** Reader-side null token. Spark's CSV reader substitutes quoted-empty
+    * fields with its `emptyValue` ("" by default) BEFORE the `nullValue`
+    * comparison, so a reader `nullValue` of "" would collapse `""` (empty
+    * string) and a bare empty field (null) to the same value; with this
+    * token only bare empty fields parse as null. It is not out of band: a
+    * string cell that is exactly `\N` is written unquoted, since `\`
+    * alone does not trigger quoting, and reads back as null. */
   val ReaderNullSentinel = "\\N"
 
   /** The sink's pinned CSV options (`maxRecordsPerFile` is per call). */
@@ -131,11 +132,17 @@ object Convert {
                            partitionCols: Seq[String]): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(outDir)
 
-  /** CSV → parquet (the reverse conversion, closing the format loop). */
-  def csvToParquet(spark: SparkSession, in: String, outDir: String): Unit =
-    toParquet(spark.read.option("header", "true").option("inferSchema", "true")
+  /** CSV → parquet (the reverse conversion, closing the format loop).
+    * The schema is inferred with the reader's null token, then the CSV is
+    * read through [[graft.sources.Scan.csvWithSchema]], so a quoted `""`
+    * comes back as an empty string and only a bare empty field as null. */
+  def csvToParquet(spark: SparkSession, in: String, outDir: String): Unit = {
+    val schema = spark.read.option("header", "true").option("inferSchema", "true")
       .option("timestampFormat", TimestampFormat)
-      .option("timestampNTZFormat", TimestampFormat).csv(in), outDir)
+      .option("timestampNTZFormat", TimestampFormat)
+      .option("nullValue", ReaderNullSentinel).csv(in).schema
+    toParquet(graft.sources.Scan.csvWithSchema(spark, schema, in), outDir)
+  }
 
   /** JSON-lines sink: one JSON object per row, files capped like the CSV
     * sink — the interchange format most ingestion pipelines speak. Same

@@ -71,7 +71,14 @@ object FramePool {
     * (lineage-truncated — e.g. the PQ codebook/codes artifacts), and
     * unpersisting one while an in-flight plan still references it is
     * unrecoverable, not a recompute. LRU keeps the active family's keys
-    * at the back of the eviction order. */
+    * at the back of the eviction order.
+    *
+    * Locking: a miss builds and `count()`s its frames while holding the
+    * one global pool monitor, so a build's whole Spark job blocks every
+    * other caller of [[frames]] and [[release]], even for unrelated keys,
+    * until it finishes. Harmless for the single-threaded query loops that
+    * drive the pool; a caller resolving pooled frames from several threads
+    * (a streaming sink beside a query loop) serializes behind each build. */
   def frames(key: Any)(build: => Seq[DataFrame]): Seq[DataFrame] =
     // one REENTRANT monitor, not ConcurrentHashMap.computeIfAbsent: a
     // builder may itself resolve pooled frames (Logit.pooledTrajectory

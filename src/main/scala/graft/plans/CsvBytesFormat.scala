@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.annotation.switch
 
 import com.univocity.parsers.csv.CsvWriter
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
 
@@ -14,16 +15,21 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.catalyst.expressions.ToStringBase
 import org.apache.spark.sql.catalyst.util.{DateFormatter, DateTimeUtils, IntervalStringStyles, IntervalUtils, LegacyDateFormats, TimestampFormatter}
-import org.apache.spark.sql.execution.datasources.{CodecStreams, OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.{CodecStreams, OutputWriter, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The parquet→CSV sink's writer: Spark's CSV file format with a row
-  * encoder that writes each `InternalRow` straight into a reused byte
-  * buffer over the task's (possibly compressed) output stream.
+/** The parquet→CSV sink's writer and the reverse conversion's line-mode
+  * reader: Spark's CSV file format with a row encoder that writes each
+  * `InternalRow` straight into a reused byte buffer over the task's
+  * (possibly compressed) output stream, and a reader that parses each
+  * line's bytes straight into a row ([[CsvBytesReader]]; its rows equal
+  * Spark's `csv` reader's, and it rejects read options outside the
+  * dialect, see [[CsvBytesFormat.requireReadable]]).
   *
   * Why: Spark's own CSV writer hands every field to univocity as a Java
   * `String` and re-encodes it through an `OutputStreamWriter`
@@ -61,7 +67,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * file extension stay Spark's (`FileFormatWriter` and the parent's
   * `prepareWrite`).
   *
-  * Use: `df.write.format(classOf[CsvBytesFormat].getName)`. */
+  * Use: `df.write.format(classOf[CsvBytesFormat].getName)`, and
+  * `spark.read.schema(s).format(classOf[CsvBytesFormat].getName).load(p)`
+  * ([[graft.sources.Scan.csvWithSchema]]). */
 class CsvBytesFormat extends CSVFileFormat {
 
   override def toString: String = "CsvBytes"
@@ -82,6 +90,32 @@ class CsvBytesFormat extends CSVFileFormat {
 
       override def getFileExtension(context: TaskAttemptContext): String =
         parent.getFileExtension(context)
+    }
+  }
+
+  /** Line-mode reads parse each line's bytes in [[CsvBytesReader]], which
+    * hands Spark's own parser every line and field it does not take.
+    * Spark's reader stays whole for a data schema holding the
+    * corrupt-record column and under `enforceSchema=false` (whose header
+    * check compares only the required columns). Options outside the
+    * dialect fail (see [[CsvBytesFormat.requireReadable]]). */
+  override def buildReader(sparkSession: SparkSession, dataSchema: StructType,
+                           partitionSchema: StructType, requiredSchema: StructType,
+                           filters: Seq[Filter], options: Map[String, String],
+                           hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] = {
+    val conf = sparkSession.sessionState.conf
+    val csv = new CSVOptions(options, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    CsvBytesFormat.requireReadable(csv, dataSchema)
+    if (dataSchema.exists(_.name == csv.columnNameOfCorruptRecord) || !csv.enforceSchema)
+      super.buildReader(sparkSession, dataSchema, partitionSchema, requiredSchema,
+        filters, options, hadoopConf)
+    else {
+      val hadoop = sparkSession.sparkContext.broadcast(new CsvBytesReader.HadoopConf(hadoopConf))
+      // the LEGACY policy parses timestamps with SimpleDateFormat semantics
+      val fastTimestamps = conf.legacyTimeParserPolicy != LegacyBehaviorPolicy.LEGACY
+      file => new CsvBytesReader(file, hadoop.value.value, dataSchema, requiredSchema,
+        filters, csv, fastTimestamps)
     }
   }
 }
@@ -114,6 +148,33 @@ object CsvBytesFormat {
     need(java.nio.charset.Charset.forName(csv.charset) == UTF_8, "encoding")
     need(!s.getIgnoreLeadingWhitespaces, "ignoreLeadingWhiteSpace=true")
     need(!s.getIgnoreTrailingWhitespaces, "ignoreTrailingWhiteSpace=true")
+  }
+
+  /** Fails unless `csv` reads in line mode the dialect [[CsvBytesReader]]
+    * tokenizes: `,` separator, `"` quote, `\` escape, no comment
+    * character, lines split at `\n`, `\r` or `\r\n` (or `lineSep` `\n`),
+    * UTF-8, white space kept, no single variant column, no per-field
+    * length cap, and fewer data columns than `maxColumns`. `header`,
+    * `enforceSchema`, `mode`, `nullValue`, `emptyValue`, the NaN and
+    * infinity tokens, the date/timestamp formats, `locale`, `timeZone`
+    * and the compression codec are all honored. */
+  def requireReadable(csv: CSVOptions, dataSchema: StructType): Unit = {
+    def need(ok: Boolean, option: String): Unit =
+      if (!ok) throw new IllegalArgumentException(
+        s"CsvBytesFormat does not implement the CSV read option $option; " +
+          "read with Spark's csv source instead")
+    need(csv.delimiter == ",", "sep")
+    need(csv.quote == '"', "quote")
+    need(csv.escape == '\\', "escape")
+    need(!csv.isCommentSet, "comment")
+    need(csv.lineSeparator.forall(_ == "\n"), "lineSep")
+    need(java.nio.charset.Charset.forName(csv.charset) == UTF_8, "encoding")
+    need(!csv.ignoreLeadingWhiteSpaceInRead, "ignoreLeadingWhiteSpace=true")
+    need(!csv.ignoreTrailingWhiteSpaceInRead, "ignoreTrailingWhiteSpace=true")
+    need(!csv.multiLine, "multiLine=true")
+    need(csv.singleVariantColumn.isEmpty, "singleVariantColumn")
+    need(csv.maxCharsPerColumn == -1, "maxCharsPerColumn")
+    need(dataSchema.length < csv.maxColumns, "maxColumns")
   }
 
   // column encodings, dispatched by a switch in the row loop

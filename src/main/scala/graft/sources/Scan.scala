@@ -128,21 +128,30 @@ object Scan {
     spark.read.orc(paths: _*)
 
   /** CSV scan with a declared schema — the scalable path. The null token
-    * is an impossible sentinel (see Convert.ReaderNullSentinel) so the
-    * writer's bare-empty nulls and quoted-`""` empty strings round-trip
-    * distinctly. */
+    * is [[graft.operators.Convert.ReaderNullSentinel]], so the writer's
+    * bare-empty nulls and quoted-`""` empty strings read back distinctly.
+    * The sentinel is not out of band: a string cell that is exactly `\N`
+    * is written unquoted and reads back as null, as with Spark's reader.
+    *
+    * Line mode (the default) reads through [[graft.plans.CsvBytesFormat]],
+    * which parses each line's bytes straight into a row and leaves every
+    * line and field it does not take to Spark's own parser, so the rows
+    * equal those of Spark's `csv` source with these options (CsvBytesSpec).
+    * `multiLine = true` keeps Spark's `csv` source, which streams whole
+    * files through univocity. */
   def csvWithSchema(spark: SparkSession, schema: StructType, path: String,
                     timestampFormat: String = graft.operators.Convert.TimestampFormat,
-                    multiLine: Boolean = false): DataFrame =
-    spark.read.schema(schema)
+                    multiLine: Boolean = false): DataFrame = {
+    val reader = spark.read.schema(schema)
       .option("header", "true")
       .option("timestampFormat", timestampFormat)
       .option("timestampNTZFormat", timestampFormat)
       .option("nullValue", graft.operators.Convert.ReaderNullSentinel)
-      // multiLine parses quoted embedded newlines correctly but reads
-      // each FILE as one unsplittable unit — at scale leave it off unless
-      // string columns can actually contain line breaks (the writer
-      // quotes them; the default line-mode reader would shear the record)
-      .option("multiLine", multiLine)
-      .csv(path)
+    // multiLine parses quoted embedded newlines correctly but reads each
+    // FILE as one unsplittable unit — at scale leave it off unless string
+    // columns can actually contain line breaks (the writer quotes them;
+    // the default line-mode reader would shear the record)
+    if (multiLine) reader.option("multiLine", true).csv(path)
+    else reader.format(classOf[graft.plans.CsvBytesFormat].getName).load(path)
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.Convert
@@ -134,13 +135,25 @@ class ConvertSpec extends SparkSpec {
   }
 
   test("csvToParquet closes the reverse loop") {
+    import spark.implicits._
     val tmp = Files.createTempDirectory("convspec").toString
-    val src = lineitem.select("l_orderkey", "l_linenumber", "l_quantity")
+    val src = lineitem.select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
     Convert.toCsvDir(src, s"$tmp/csv")
     Convert.csvToParquet(spark, s"$tmp/csv", s"$tmp/pq")
     val back = spark.read.parquet(s"$tmp/pq")
-    assert(back.count() === src.count())
     assert(back.columns.toSeq === src.columns.toSeq)
+    // inference may narrow a type (bigint → int); the values must not move
+    val cast = back.select(src.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+    assert(cast.count() === src.count())
+    assert(cast.exceptAll(src).count() === 0)
+    assert(src.exceptAll(cast).count() === 0)
+
+    // a quoted "" is an empty string and a bare empty field a null
+    val strings = Seq((1, "a"), (2, ""), (3, null)).toDF("id", "s")
+    Convert.toCsvDir(strings, s"$tmp/scsv")
+    Convert.csvToParquet(spark, s"$tmp/scsv", s"$tmp/spq")
+    assert(spark.read.parquet(s"$tmp/spq").orderBy("id").collect().toSeq ===
+      Seq(Row(1, "a"), Row(2, ""), Row(3, null)))
   }
 
   test("parquet codec knob round-trips and actually changes the files") {

@@ -486,4 +486,393 @@ class CsvBytesSpec extends SparkSpec {
       assert(e.getMessage.contains(key))
       assert(!Files.exists(Paths.get(s"$t/out")) || parts(s"$t/out").isEmpty)
     }
+
+  // ---- the reader against Spark's csv reader ----------------------------
+
+  /** `Scan.csvWithSchema`'s options. */
+  private val ReadOptions = Map("header" -> "true", "timestampFormat" -> Pinned,
+    "timestampNTZFormat" -> Pinned, "nullValue" -> Convert.ReaderNullSentinel)
+
+  private def byteRead(schema: StructType, path: String,
+                       opts: Map[String, String] = ReadOptions): DataFrame =
+    spark.read.schema(schema).options(opts)
+      .format(classOf[CsvBytesFormat].getName).load(path)
+
+  private def sparkRead(schema: StructType, path: String,
+                        opts: Map[String, String] = ReadOptions): DataFrame =
+    spark.read.schema(schema).options(opts).csv(path)
+
+  /** A read's rows, strings as the hex of their UTF-8 bytes (a Java
+    * `String` would hide malformed bytes) and floating-point values as
+    * their bits (so -0.0 is not 0.0), or Left when the read fails. */
+  private def outcome(df: DataFrame): Either[Throwable, Seq[Seq[Any]]] =
+    try Right(df.select(df.schema.fields.toSeq.map { f =>
+      val c = col(s"`${f.name}`")
+      if (f.dataType.isInstanceOf[StringType]) hex(c.cast(BinaryType)).as(f.name) else c
+    }: _*).collect().toSeq.map(_.toSeq.map {
+      case d: Double => s"d${java.lang.Double.doubleToRawLongBits(d)}"
+      case f: Float => s"f${java.lang.Float.floatToRawIntBits(f)}"
+      case other => other
+    }))
+    catch { case e: org.apache.spark.SparkException => Left(e) }
+
+  /** Both reads fail, or both return the same rows in the same order.
+    * Returns the row count (-1 for a failure). */
+  private def assertSameRead(got: DataFrame, want: DataFrame): Int =
+    (outcome(got), outcome(want)) match {
+      case (Right(g), Right(w)) =>
+        val diff = g.zip(w).indexWhere { case (a, b) => a != b }
+        if (diff >= 0) fail(s"row $diff: got ${g(diff)} want ${w(diff)}")
+        assert(g.size === w.size)
+        g.size
+      case (Left(_), Left(_)) => -1
+      case (g, w) => fail(s"got $g, want $w")
+    }
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private val Modes = Seq("PERMISSIVE", "DROPMALFORMED", "FAILFAST")
+
+  for (zone <- Seq("UTC", "America/New_York"))
+    test(s"reader: seeded frames over every atomic type read as Spark's csv reader reads them, $zone") {
+      withSessionZone(zone) {
+        val t = tmp()
+        val df = frame(seed = 30, n = 3000).drop("raw") // CSV does not read binary
+        Convert.toCsvDir(df, s"$t/csv")
+        val counts = Modes.map { mode =>
+          val opts = ReadOptions + ("mode" -> mode)
+          assertSameRead(byteRead(df.schema, s"$t/csv", opts),
+            sparkRead(df.schema, s"$t/csv", opts))
+        }
+        // line mode shears the records whose strings hold line breaks
+        assert(counts.head > 3000 && counts(1) > 1000 && counts(2) === -1)
+      }
+    }
+
+  private def u(s: String): Array[Byte] = s.getBytes("UTF-8")
+  private def hexBytes(h: String): Array[Byte] =
+    h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+
+  /** The hand-written files' columns, and per column the cells Spark
+    * parses (`good`: byte-path forms, converter forms, nulls, quoted and
+    * escaped text) and cells it rejects (`bad`). */
+  private val lineSchema = StructType(Seq(
+    StructField("s", StringType), StructField("i", IntegerType),
+    StructField("l", LongType), StructField("d", DoubleType),
+    StructField("ts", TimestampType), StructField("ntz", TimestampNTZType),
+    StructField("sh", ShortType), StructField("by", ByteType),
+    StructField("b", BooleanType), StructField("dec", DecimalType(10, 2)),
+    StructField("dt", DateType), StructField("f", FloatType)))
+
+  private val timestampCells = (
+    Seq("2020-01-01 00:00:00.000000", "2020-02-29 23:59:59.999999",
+      "2000-02-29 12:00:00.000001", "0004-02-29 01:02:03.040506",
+      "0001-01-01 00:00:00.000000", "9999-12-31 23:59:59.999999",
+      "1969-12-31 23:59:59.999999", "1582-10-10 00:00:00.000000",
+      "2023-03-12 02:30:00.000000", "2023-11-05 01:30:00.000000",
+      "2020-01-01 00:00:00.5", "2020-01-01 00:00:00", "", "\\N"),
+    Seq("2021-02-29 00:00:00.000000", "1900-02-29 00:00:00.000000",
+      "2021-04-31 00:00:00.000000", "2021-13-01 00:00:00.000000",
+      "2021-00-10 00:00:00.000000", "2021-01-00 00:00:00.000000",
+      "2021-01-01 24:00:00.000000", "2021-01-01 23:60:00.000000",
+      "2021-01-01 23:59:60.000000", "0000-01-01 00:00:00.000000",
+      "2020-01-01T00:00:00.000000", "2020-1-01 00:00:00.000000", "x"))
+
+  private val lineCells: Seq[(Seq[Array[Byte]], Seq[Array[Byte]])] = Seq(
+    (Seq("abc", "", "\\N", "\"a,b\"", "\"\"", "\"x\\\"y\"", " sp ", "ünï中😀",
+      "#c", "NaN", "x\\y", "'q'", "a b").map(u) ++
+      Seq("ff", "c328", "eda080", "c0af", "f4908080", "61e282", "efbbbf61", "6101",
+        "7f").map(hexBytes), Nil),
+    (Seq("0", "-0", "7", "007", "+5", "-2147483648", "2147483647", "123456789",
+      "1234567890", "٣", "", "\\N", "\"12\"").map(u),
+      Seq("2147483648", " 1", "1 ", "1.0", "x", "-", "--1").map(u)),
+    (Seq("0", "-1", "123456789012345678", "1234567890123456789",
+      "9223372036854775807", "-9223372036854775808", "+3", "").map(u),
+      Seq("9223372036854775808", "1e3", "1L").map(u)),
+    (Seq("0", "-0", "0.0", "-0.0", "1.5", ".5", "5.", "-.5", "1e3", "1E-3",
+      "NaN", "Inf", "-Inf", "Infinity", "0.1", "123.456", "9007199254740992",
+      "9007199254740993", "0.30000000000000004", "1.7976931348623157E308",
+      "4.9e-324", "12345678901234567890.5", "0.0000000000000000000001",
+      "0.00000000000000000000001", " 1.5", "1.5d", "0x1p3", "00000000000000000000000001.5",
+      "", "\\N").map(u),
+      Seq(".", "-", "1_0", "1..2", "١").map(u)),
+    (timestampCells._1.map(u), timestampCells._2.map(u)),
+    (timestampCells._1.map(u), timestampCells._2.map(u)),
+    (Seq("0", "-32768", "32767", "+1", "").map(u), Seq("32768", "-32769").map(u)),
+    (Seq("0", "-128", "127", "").map(u), Seq("128", "-129").map(u)),
+    (Seq("true", "false", "TRUE", "").map(u), Seq("yes", "1").map(u)),
+    (Seq("1.25", "-0.5", "12345678.99", "1e2", "").map(u), Seq("123456789.99", "x").map(u)),
+    (Seq("2020-02-29", "0001-01-01", "").map(u), Seq("2021-02-29", "2020-13-01").map(u)),
+    (Seq("1.5", "0.1", "NaN", "-Inf", "3.4028235E38", "").map(u), Seq("x").map(u)))
+
+  /** Whole lines outside any column's cells: blank ones, control and
+    * malformed bytes, a byte-order mark, short and long lines. */
+  private val oddLines: Seq[Array[Byte]] = Seq(u(""), u("   "), u("\t"), hexBytes("01"),
+    hexBytes("ff"), u(","), u(",,,,,,,,,,,"), u("a,1"), u("a,1,2,3,4,5,6,7,8,9,10,11,12"),
+    hexBytes("efbbbf") ++ u("bom,1,2,3.5,,,,,,,,"), u("#hash,1,,,,,,,,,,"),
+    u("\"multi"), u("line\",1,,,,,,,,,,"))
+
+  /** `n` seeded lines after a header: about half clean (every cell from
+    * `good`), the rest mixing in `bad` cells and [[oddLines]]; some end in
+    * CRLF. */
+  private def handFile(seed: Long, n: Int, gzip: Boolean = false): Array[Byte] = {
+    val rng = new Random(seed)
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(u(lineSchema.fieldNames.mkString(",") + "\n"))
+    for (_ <- 0 until n) {
+      val clean = rng.nextBoolean()
+      val line =
+        if (!clean && rng.nextInt(8) == 0) oddLines(rng.nextInt(oddLines.size))
+        else lineCells.map { case (good, bad) =>
+          val pool = if (clean || bad.isEmpty || rng.nextInt(4) != 0) good else bad
+          pool(rng.nextInt(pool.size))
+        }.reduce(_ ++ u(",") ++ _)
+      out.write(line)
+      out.write(u(if (rng.nextInt(10) == 0) "\r\n" else "\n"))
+    }
+    if (!gzip) out.toByteArray
+    else {
+      val z = new java.io.ByteArrayOutputStream()
+      Using.resource(new java.util.zip.GZIPOutputStream(z))(_.write(out.toByteArray))
+      z.toByteArray
+    }
+  }
+
+  private def writeHand(dir: String, name: String, bytes: Array[Byte]): String = {
+    Files.createDirectories(Paths.get(dir))
+    Files.write(Paths.get(dir, name), bytes)
+    dir
+  }
+
+  for (zone <- Seq("UTC", "America/New_York"))
+    test(s"reader: hand-written lines (quotes, escapes, nulls, bad UTF-8, blank, short, long) in every mode, $zone") {
+      withSessionZone(zone) {
+        val dir = writeHand(tmp(), "lines.csv", handFile(seed = 31, n = 4000))
+        val counts = Modes.map { mode =>
+          val opts = ReadOptions + ("mode" -> mode)
+          assertSameRead(byteRead(lineSchema, dir, opts), sparkRead(lineSchema, dir, opts))
+        }
+        assert(counts(0) > 3000 && counts(1) > 1000 && counts(1) < counts(0))
+        assert(counts(2) === -1, "FAILFAST should fail on the malformed lines")
+        // without `nullValue` (Spark's default, "") and with other tokens
+        for (extra <- Seq(Map.empty[String, String], Map("nullValue" -> "NaN", "nanValue" -> "1.5",
+          "positiveInf" -> "+5", "emptyValue" -> "E", "header" -> "false"))) {
+          val opts = ReadOptions - "nullValue" ++ extra
+          assertSameRead(byteRead(lineSchema, dir, opts), sparkRead(lineSchema, dir, opts))
+        }
+      }
+    }
+
+  test("reader: a lone column skips blank and space-only lines as Spark does") {
+    val lone = StructType(Seq(StructField("s", StringType)))
+    val lines = Seq("s", "", "   ", "a", " b ", "\\N", "\"\"", "x,y", "\t", ",", "", "z")
+    val dir = writeHand(tmp(), "lone.csv", u(lines.mkString("\n")))
+    for (mode <- Modes) {
+      val opts = ReadOptions + ("mode" -> mode)
+      assertSameRead(byteRead(lone, dir, opts), sparkRead(lone, dir, opts))
+    }
+    assert(byteRead(lone, dir).count() === 7) // the blank lines are gone
+  }
+
+  test("reader: pruned columns, pushed filters, count, and column pruning off") {
+    val dir = writeHand(tmp(), "lines.csv", handFile(seed = 32, n = 3000))
+    def q(df: DataFrame) = df.select("ntz", "s", "d", "by")
+      .filter(col("d") > 0.5 || col("s").isNull)
+    for (pruning <- Seq("true", "false"))
+      withConf("spark.sql.csv.parser.columnPruning.enabled" -> pruning) {
+        for (mode <- Modes) {
+          val opts = ReadOptions + ("mode" -> mode)
+          assertSameRead(q(byteRead(lineSchema, dir, opts)), q(sparkRead(lineSchema, dir, opts)))
+          assertSameRead(byteRead(lineSchema, dir, opts).select("l"),
+            sparkRead(lineSchema, dir, opts).select("l"))
+          if (mode != "FAILFAST")
+            assert(byteRead(lineSchema, dir, opts).count() ===
+              sparkRead(lineSchema, dir, opts).count())
+        }
+      }
+  }
+
+  test("reader: split boundaries inside a file, and a gzip file") {
+    val t = tmp()
+    val plain = writeHand(s"$t/plain", "lines.csv", handFile(seed = 33, n = 20000))
+    withConf("spark.sql.files.maxPartitionBytes" -> "65536",
+        "spark.sql.files.openCostInBytes" -> "0") {
+      assert(byteRead(lineSchema, plain).rdd.getNumPartitions > 10)
+      for (mode <- Modes.take(2)) {
+        val opts = ReadOptions + ("mode" -> mode)
+        val rows = assertSameRead(byteRead(lineSchema, plain, opts),
+          sparkRead(lineSchema, plain, opts))
+        assert(rows > 5000)
+      }
+    }
+    val gz = writeHand(s"$t/gz", "lines.csv.gz", handFile(seed = 34, n = 5000, gzip = true))
+    assert(assertSameRead(byteRead(lineSchema, gz), sparkRead(lineSchema, gz)) > 4000)
+  }
+
+  test("reader: the byte path takes every line of a lineitem-shaped file") {
+    import org.apache.spark.paths.SparkPath
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.csv.CSVOptions
+    import org.apache.spark.sql.execution.datasources.PartitionedFile
+    val t = tmp()
+    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    Convert.toCsvDir(li, s"$t/csv")
+    val opts = new CSVOptions(ReadOptions, true, "UTC")
+    val files = Using.resource(Files.list(Paths.get(s"$t/csv")))(_.iterator().asScala.toList)
+      .filter(_.getFileName.toString.endsWith(".csv"))
+    var rows = 0L
+    var declined = 0L
+    for (f <- files) {
+      val part = PartitionedFile(InternalRow.empty, SparkPath.fromPathString(f.toString),
+        0, Files.size(f))
+      val reader = new graft.plans.CsvBytesReader(part, spark.sessionState.newHadoopConf(),
+        li.schema, li.schema, Nil, opts, fastTimestamps = true)
+      rows += reader.size
+      declined += reader.declinedLines
+    }
+    assert(rows === li.count())
+    assert(declined === 0L)
+    assert(assertSameRead(byteRead(li.schema, s"$t/csv"), sparkRead(li.schema, s"$t/csv")) === rows)
+  }
+
+  test("Scan.csvWithSchema reads line mode through CsvBytes and multiLine through Spark's csv") {
+    val dir = writeHand(tmp(), "lines.csv", handFile(seed = 35, n = 200))
+    def scan(multiLine: Boolean) = graft.sources.Scan.csvWithSchema(spark, lineSchema, dir,
+      multiLine = multiLine).queryExecution.executedPlan.toString
+    assert(scan(false).contains("Format: CsvBytes"), scan(false))
+    assert(scan(true).contains("Format: CSV"), scan(true))
+  }
+
+  // ---- the reader's conversions -----------------------------------------
+
+  private def parseDouble(s: String): Double = {
+    val b = u(s)
+    graft.plans.CsvBytesReader.parseDouble(b, 0, b.length)
+  }
+
+  /** The decimal `m / 10^k` written with `k` fraction digits. */
+  private def decimalString(m: BigInt, k: Int, neg: Boolean): String = {
+    val digits = m.toString.reverse.padTo(k + 1, '0').reverse
+    val whole = digits.dropRight(k)
+    (if (neg) "-" else "") + (if (k == 0) whole else whole + "." + digits.takeRight(k))
+  }
+
+  private def assertDoubleRule(s: String, m: BigInt, k: Int): Unit = {
+    val got = parseDouble(s)
+    if (m <= BigInt(1L << 53) && k <= 22) {
+      assert(!got.isNaN, s"$s declined")
+      assert(java.lang.Double.doubleToRawLongBits(got) ===
+        java.lang.Double.doubleToRawLongBits(java.lang.Double.parseDouble(s)), s)
+    } else assert(got.isNaN, s"$s taken")
+  }
+
+  test("reader: the double rule equals Double.parseDouble on every m/10^k sample") {
+    val two53 = BigInt(1L << 53)
+    val ms = (BigInt(0) to BigInt(20000)) ++ (two53 - 2000 to two53 + 2000) ++
+      (0 until 20000).map(i => BigInt(53, new Random(40 + i)))
+    for (k <- 0 to 24; m <- ms)
+      assertDoubleRule(decimalString(m, k, neg = m % 3 == 0), m, k)
+    assert(parseDouble("5.") === 5.0 && parseDouble(".5") === 0.5)
+    assert(java.lang.Double.doubleToRawLongBits(parseDouble("-0")) ===
+      java.lang.Double.doubleToRawLongBits(-0.0))
+    for (declined <- Seq("", "-", ".", "-.", "1.2.3", "1e3", "+1", " 1", "NaN", "0x10", "1d"))
+      assert(parseDouble(declined).isNaN, declined)
+  }
+
+  test("reader: the double rule on seeded random decimals") {
+    val rng = new Random(41)
+    var taken = 0
+    for (_ <- 1 to 1000000) {
+      val n = 1 + rng.nextInt(25)
+      val digits = Seq.fill(n)(('0' + rng.nextInt(10)).toChar).mkString
+      val k = rng.nextInt(n + 1)
+      val s = (if (rng.nextBoolean()) "-" else "") + digits.dropRight(k) +
+        (if (k > 0 || rng.nextBoolean()) "." else "") + digits.takeRight(k)
+      assertDoubleRule(s, BigInt(digits), k)
+      if (!parseDouble(s).isNaN) taken += 1
+    }
+    assert(taken > 250000)
+  }
+
+  test("reader: timestamps on every day of years 1..9999, leap days and invalid dates") {
+    import java.time.{LocalDateTime, ZoneOffset}
+    import java.time.format.{DateTimeFormatter, ResolverStyle}
+    val strict = DateTimeFormatter.ofPattern("uuuu-MM-dd HH:mm:ss.SSSSSS")
+      .withResolverStyle(ResolverStyle.STRICT)
+    val rng = new Random(42)
+    def check(s: String): Boolean = {
+      val b = u(s)
+      val got = graft.plans.CsvBytesReader.parseLocalMicros(b, 0, b.length)
+      val want = scala.util.Try(LocalDateTime.parse(s, strict)).toOption
+      want match {
+        case Some(t) =>
+          val micros = t.toEpochSecond(ZoneOffset.UTC) * 1000000L + t.getNano / 1000
+          assert(got === micros, s)
+          true
+        case None =>
+          assert(got === graft.plans.CsvBytesReader.NoLong, s)
+          false
+      }
+    }
+    // every (y, m, d) with d <= 31 at a random time, against LocalDate.of
+    def two(v: Int) = if (v < 10) "0" + v else v.toString
+    var valid = 0
+    for (y <- 1 to 9999; m <- 1 to 12; d <- 1 to 31) {
+      val (h, mi, sec) = (rng.nextInt(24), rng.nextInt(60), rng.nextInt(60))
+      val us = rng.nextInt(1000000)
+      val s = s"${"%04d".format(y)}-${two(m)}-${two(d)} ${two(h)}:${two(mi)}:${two(sec)}." +
+        (us + 1000000).toString.substring(1)
+      val b = u(s)
+      val got = graft.plans.CsvBytesReader.parseLocalMicros(b, 0, b.length)
+      scala.util.Try(java.time.LocalDate.of(y, m, d)).toOption match {
+        case Some(date) =>
+          valid += 1
+          val want = ((date.toEpochDay * 24 + h) * 3600 + mi * 60 + sec) * 1000000L + us
+          if (got != want) fail(s"$s: got $got want $want")
+        case None => if (got != graft.plans.CsvBytesReader.NoLong) fail(s"$s taken")
+      }
+    }
+    assert(valid === 3652059) // the days of years 1..9999
+    for (s <- Seq("2000-02-29", "2024-02-29", "0004-02-29", "0400-02-29"))
+      assert(check(s + " 00:00:00.000000"), s)
+    for (s <- Seq("1900-02-29", "2100-02-29", "2021-02-29", "0100-02-29", "2021-02-30",
+                  "2021-04-31", "2021-13-01", "2021-00-01", "2021-01-00"))
+      assert(!check(s + " 00:00:00.000000"), s)
+    // year 0 is valid but outside the byte path: Spark's converter takes it
+    val year0 = u("0000-01-01 00:00:00.000000")
+    assert(graft.plans.CsvBytesReader.parseLocalMicros(year0, 0, year0.length) ===
+      graft.plans.CsvBytesReader.NoLong)
+    for (t <- Seq("24:00:00.000000", "23:60:00.000000", "23:59:60.000000", "1:00:00.0000000",
+                  "00:00:00.00000", "00:00:00.000000 ", "0a:00:00.000000"))
+      assert(!check("2020-01-01 " + t), t)
+  }
+
+  // ---- read options the reader does not implement fail loudly -----------
+
+  private val rejectedInRead = Seq(
+    "sep" -> ";", "quote" -> "'", "escape" -> "/", "comment" -> "%",
+    "lineSep" -> "\r\n", "encoding" -> "UTF-16", "ignoreLeadingWhiteSpace" -> "true",
+    "ignoreTrailingWhiteSpace" -> "true", "multiLine" -> "true",
+    "singleVariantColumn" -> "v", "maxCharsPerColumn" -> "100", "maxColumns" -> "12")
+
+  for ((key, value) <- rejectedInRead)
+    test(s"reader rejects $key=${value.replace("\r\n", "CRLF")}") {
+      val dir = writeHand(tmp(), "lines.csv", handFile(seed = 36, n = 20))
+      val e = intercept[IllegalArgumentException] {
+        // a single variant column takes no user schema
+        if (key == "singleVariantColumn")
+          spark.read.options(ReadOptions + (key -> value))
+            .format(classOf[CsvBytesFormat].getName).load(dir).collect()
+        else byteRead(lineSchema, dir, ReadOptions + (key -> value)).collect()
+      }
+      assert(e.getMessage.contains("CsvBytesFormat does not implement the CSV read option"))
+      assert(e.getMessage.contains(key))
+    }
 }
