@@ -63,13 +63,10 @@ object Layout {
   /** Small-files compaction: rewrite a FLAT parquet directory into
     * ~`targetBytesPerFile` files (streaming pipelines and per-batch
     * upserts accrete small files; scans then pay one task + one footer
-    * per file). Rewrites through a staging dir; the swap restores the
-    * original directory (and throws) if the final rename fails, so no
-    * failure mode leaves `dir` silently missing. A hard crash can still
-    * land between the two renames — the data then sits intact at
-    * `dir+".old"`, which the next compact() call refuses to clobber
-    * (loud IllegalStateException naming the recovery path) rather than
-    * guessing which copy is authoritative. Hive-partitioned layouts
+    * per file). Rewrites through [[swapIn]]: a hard crash between its
+    * two renames leaves the data intact at `dir+".old"`, which the next
+    * compact() call refuses to clobber rather than guessing which copy
+    * is authoritative. Hive-partitioned layouts
     * (`key=value` subdirectories) are rejected: a flat rewrite would
     * silently inline the partition columns and drop pruning. Returns
     * (filesBefore, filesAfter). Partition count = ceil(bytes/target),
@@ -78,12 +75,6 @@ object Layout {
               targetBytesPerFile: Long = 128L * 1024 * 1024): (Int, Int) = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val old = dir + ".old"
-    if (Files.exists(Paths.get(old)))
-      throw new IllegalStateException(
-        s"compact: $old exists — a previous compaction crashed mid-swap. " +
-          s"Inspect it (it holds the pre-compaction data); restore it to $dir " +
-          "or delete it, then retry.")
     val partitionDirs = scala.util.Using.resource(Files.list(Paths.get(dir)))(
       _.iterator().asScala.filter(p =>
         Files.isDirectory(p) && p.getFileName.toString.contains("=")).toList)
@@ -108,19 +99,39 @@ object Layout {
     val compacted =
       if (target < before.size) df.coalesce(target)
       else df.repartition(target)
-    val staging = dir + ".compacting"
-    Convert.deleteRecursively(Paths.get(staging))
-    compacted.write.mode(SaveMode.Overwrite).parquet(staging)
-    Files.move(Paths.get(dir), Paths.get(old))
-    try Files.move(Paths.get(staging), Paths.get(dir))
-    catch { case e: Throwable =>
-      // restore the original layout before propagating — the swap must
-      // never leave `dir` missing when the caller can still be told
-      Files.move(Paths.get(old), Paths.get(dir))
-      throw new IllegalStateException(
-        s"compact: staging→live rename failed for $dir; original layout restored", e)
-    }
-    Convert.deleteRecursively(Paths.get(old))
+    swapIn(dir, dir + ".compacting", "compact")(
+      compacted.write.mode(SaveMode.Overwrite).parquet(_))
     (before.size, parquetFiles(dir).size)
+  }
+
+  /** Replace the directory `dir` with what `write` puts at `staging`,
+    * refusing to guess after a crash: a `dir.old` left by an earlier
+    * swap that died between its two renames holds the data from before
+    * that swap, so this throws (naming the recovery path) rather than
+    * clobber it. A leftover `staging` is never authoritative (it only
+    * becomes so by being renamed), so it is cleared before the write —
+    * otherwise a crash mid-write would wedge every retry. The swap
+    * restores the original directory (and throws) if the final rename
+    * fails, so no failure the caller can still be told of leaves `dir`
+    * missing. `caller` names the operation in the messages. */
+  private[graft] def swapIn(dir: String, staging: String, caller: String)
+                           (write: String => Unit): Unit = {
+    import java.nio.file.{Files, Paths}
+    val (live, old, next) = (Paths.get(dir), Paths.get(dir + ".old"), Paths.get(staging))
+    if (Files.exists(old))
+      throw new IllegalStateException(
+        s"$caller: $old exists — a previous run crashed mid-swap. " +
+          s"Inspect it (it holds the data from before that run); restore " +
+          s"it to $dir or delete it, then retry.")
+    Convert.deleteRecursively(next)
+    write(staging)
+    Files.move(live, old)
+    try Files.move(next, live)
+    catch { case e: Throwable =>
+      Files.move(old, live)
+      throw new IllegalStateException(
+        s"$caller: staging→live rename failed for $dir; original restored", e)
+    }
+    Convert.deleteRecursively(old)
   }
 }

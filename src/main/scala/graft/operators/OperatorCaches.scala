@@ -1,5 +1,6 @@
 package graft.operators
 
+import java.nio.file.Path
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
@@ -26,10 +27,15 @@ import org.apache.spark.sql.DataFrame
   * returned frame is lazy, and intermediates must stay cached until the
   * caller materializes it (an eager checkpoint inside the operator would
   * force computation before the caller's own projections/filters prune).
+  *
+  * A query that writes scratch files its own result reads (q08's CSV
+  * round trip) registers the directory with [[deleteOnRelease]], so the
+  * same per-query release deletes it once the result is materialized.
   */
 object OperatorCaches {
 
   private val tracked = new ConcurrentLinkedQueue[DataFrame]()
+  private val scratchDirs = new ConcurrentLinkedQueue[Path]()
 
   /** Persist `df` at the operator's storage level and remember it for
     * [[release]]. */
@@ -39,14 +45,27 @@ object OperatorCaches {
     p
   }
 
+  /** Remember `dir` for [[release]] to delete; returns it. */
+  private[graft] def deleteOnRelease(dir: Path): Path = {
+    scratchDirs.add(dir)
+    dir
+  }
+
   /** Unpersist every operator-persisted intermediate registered since the
-    * last release. Non-blocking; safe to call while results derived from
-    * the caches are still referenced (Spark recomputes if re-used). */
+    * last release, and delete every registered scratch directory.
+    * Non-blocking; safe to call while results derived from the caches are
+    * still referenced (Spark recomputes if re-used) — but not while a
+    * result still reads a scratch directory. */
   def release(): Unit = {
     var df = tracked.poll()
     while (df != null) {
       df.unpersist(blocking = false)
       df = tracked.poll()
+    }
+    var dir = scratchDirs.poll()
+    while (dir != null) {
+      Convert.deleteRecursively(dir)
+      dir = scratchDirs.poll()
     }
   }
 

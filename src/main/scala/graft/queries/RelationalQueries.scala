@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.operators.{Convert, Transforms}
+import graft.operators.{Convert, OperatorCaches, Transforms}
 import graft.sources.Scan
 import Q._
 
@@ -112,7 +112,8 @@ object RelationalQueries {
     QuerySpec("q08_convert_roundtrip",
       (s, d) => {
         val src = t(s, d, "lineitem")
-        val tmp = Files.createTempDirectory("graft_rt").toString + "/lineitem_csv"
+        val tmp = OperatorCaches.deleteOnRelease(
+          Files.createTempDirectory("graft_rt")).toString + "/lineitem_csv"
         Convert.toCsvDir(src, tmp)
         Scan.csvWithSchema(s, src.schema, tmp)
           .groupBy("l_returnflag")

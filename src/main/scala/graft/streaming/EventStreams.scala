@@ -1,11 +1,16 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import graft.operators.{Convert, FramePool, OperatorCaches}
 
 /** Structured Streaming surface over the events shape
   * (`event_id, ts, user_id, event_type, value`): windowed aggregation with
@@ -129,7 +134,7 @@ object EventStreams {
   def upsertSink(stream: DataFrame, keyCols: Seq[String], baseDir: String,
                  checkpointDir: String,
                  seqCol: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    mergingSink(stream, keyCols, baseDir, checkpointDir, seqCol, opCol = None)
+    mergeIntoBase(stream, keyCols, baseDir, checkpointDir, seqCol, opCol = None)
 
   /** [[upsertSink]] with TOMBSTONES: each micro-batch is a changelog
     * (rows carry `opCol` — "D" deletes the key, anything else
@@ -140,80 +145,140 @@ object EventStreams {
   def changelogSink(stream: DataFrame, keyCols: Seq[String], baseDir: String,
                     checkpointDir: String, opCol: String = "op",
                     seqCol: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    mergingSink(stream, keyCols, baseDir, checkpointDir, seqCol, Some(opCol))
+    mergeIntoBase(stream, keyCols, baseDir, checkpointDir, seqCol, Some(opCol))
 
-  private def mergingSink(stream: DataFrame, keyCols: Seq[String], baseDir: String,
-                          checkpointDir: String, seqCol: Option[String],
-                          opCol: Option[String]): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import java.nio.file.{Files => NioFiles, Paths}
-        val spark = batch.sparkSession
-        val basePath = Paths.get(baseDir)
-        val oldPath = Paths.get(baseDir + ".old")
-        // crash recovery: base missing but .old present → the previous
-        // promote died between the two moves; restore the surviving
-        // generation before merging (a leftover .old WITH a base is the
-        // opposite case — promote succeeded, cleanup didn't — drop it)
-        if (!NioFiles.exists(basePath) && NioFiles.exists(oldPath))
-          NioFiles.move(oldPath, basePath)
-        else if (NioFiles.exists(oldPath))
-          graft.operators.Convert.deleteRecursively(oldPath)
-        // reduce the batch to one record per key (max seqCol when given)
-        val reduced = seqCol match {
-          case Some(sc) =>
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(keyCols.map(org.apache.spark.sql.functions.col): _*)
-              .orderBy(org.apache.spark.sql.functions.col(sc).desc)
-            batch.withColumn("__rn",
-              org.apache.spark.sql.functions.row_number().over(w))
-              .filter(org.apache.spark.sql.functions.col("__rn") === 1)
-              .drop("__rn")
-          case None => batch.dropDuplicates(keyCols)
-        }
+  private def mergeIntoBase(stream: DataFrame, keyCols: Seq[String],
+                            baseDir: String, checkpointDir: String,
+                            seqCol: Option[String],
+                            opCol: Option[String]): StreamingQuery =
+    everyBatch(stream, checkpointDir) { (spark, batch, _) =>
+      // reduce the batch to one record per key (max seqCol when given)
+      val reduced = seqCol match {
+        case Some(sc) =>
+          val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(sc).desc)
+          batch.withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1).drop("__rn")
+        case None => batch.dropDuplicates(keyCols)
+      }
+      promote(baseDir) { staging =>
         // apply tombstones (changelog mode) or plain upsert; an empty
         // base is the same merge against zero rows, so first-batch
         // deletes of unknown keys are no-ops, not errors
-        val applied = opCol match {
+        val base =
+          if (Files.exists(Paths.get(baseDir))) Some(spark.read.parquet(baseDir))
+          else None
+        val merged = opCol match {
           case Some(oc) =>
-            val survivors = reduced.filter(
-              org.apache.spark.sql.functions.upper(
-                org.apache.spark.sql.functions.col(oc)) =!=
-                org.apache.spark.sql.functions.lit("D"))
-              .drop(oc)
-            (existing: DataFrame) =>
-              existing.join(reduced.select(
-                  keyCols.map(org.apache.spark.sql.functions.col): _*),
-                  keyCols, "left_anti")
-                .unionByName(survivors.drop(seqCol.toSeq: _*))
-          case None =>
-            (existing: DataFrame) =>
-              graft.operators.Snapshots.upsert(existing, reduced, keyCols)
-        }
-        val merged =
-          if (NioFiles.exists(basePath)) applied(spark.read.parquet(baseDir))
-          else opCol match {
-            case Some(oc) => reduced.filter(
-              org.apache.spark.sql.functions.upper(
-                org.apache.spark.sql.functions.col(oc)) =!=
-                org.apache.spark.sql.functions.lit("D"))
+            val survivors = reduced.filter(upper(col(oc)) =!= lit("D"))
               .drop(oc).drop(seqCol.toSeq: _*)
-            case None => reduced
-          }
-        val staging = Paths.get(baseDir + ".staging")
-        graft.operators.Convert.deleteRecursively(staging)
-        merged.write.mode("overwrite").parquet(staging.toString)
-        // stage-swap via NIO moves (throw descriptive IOExceptions; the
-        // checkpoint replays a failed batch, and the recovery block above
-        // handles a death between the two moves)
-        if (NioFiles.exists(basePath)) NioFiles.move(basePath, oldPath)
-        NioFiles.move(staging, basePath)
-        graft.operators.Convert.deleteRecursively(oldPath)
-        ()
+            base.fold(survivors)(_.join(reduced.select(keyCols.map(col): _*),
+              keyCols, "left_anti").unionByName(survivors))
+          case None =>
+            base.fold(reduced)(graft.operators.Snapshots.upsert(_, reduced, keyCols))
+        }
+        merged.write.mode("overwrite").parquet(staging)
+      }
+    }
+
+  /** The one micro-batch runner under every sink: a file-checkpointed
+    * `Trigger.AvailableNow` query whose `foreachBatch` runs `body` on
+    * (session, batch, batch id), then `release` in `finally`. The
+    * releases are JVM-global, so each sink passes only what its own
+    * batches build (see [[releaseCaches]], [[releasePools]]). */
+  private def everyBatch(stream: DataFrame, checkpointDir: String,
+                         release: () => Unit = () => ())
+                        (body: (SparkSession, DataFrame, Long) => Unit)
+      : StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        try body(batch.sparkSession, batch, batchId) finally release()
       }
       .start()
+
+  /** Per-batch release of the operator caches a batch's operators
+    * persisted — a long-running sink would otherwise accumulate them for
+    * every batch it ever saw. */
+  private val releaseCaches: () => Unit = () => OperatorCaches.release()
+
+  /** [[releaseCaches]] plus the frame pool: the pool keys frames by
+    * corpus plan, and a stream's batches are each a distinct corpus, so
+    * a sink whose operators pool releases per batch rather than letting
+    * entries ride LRU eviction. */
+  private val releasePools: () => Unit = () => {
+    OperatorCaches.release()
+    FramePool.release()
+  }
+
+  /** The one monitor shape: each batch overwrites its partial frames at
+    * `stateDir[/sub]/batch=N` (an at-least-once replay overwrites its
+    * own attempt instead of double-counting), then, when `report` is
+    * `Some((reportDir, serve))`, overwrites `reportDir` with
+    * `serve(spark)`: the merge over every partial published so far. The
+    * partials are mergeable summaries, so that merge equals the batch
+    * query over all arrivals. `sub` is "" for partials directly under
+    * `stateDir`. */
+  private def monitor(stream: DataFrame, checkpointDir: String,
+                      stateDir: String, release: () => Unit = () => ())
+                     (partials: DataFrame => Seq[(String, DataFrame)],
+                      report: Option[(String, SparkSession => DataFrame)] = None)
+      : StreamingQuery =
+    everyBatch(stream, checkpointDir, release) { (spark, batch, batchId) =>
+      partials(batch).foreach { case (sub, df) =>
+        val dir = if (sub.isEmpty) stateDir else s"$stateDir/$sub"
+        df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+      }
+      report.foreach { case (reportDir, serve) =>
+        serve(spark).write.mode("overwrite").parquet(reportDir)
+      }
+    }
+
+  /** Replace the parquet directory `dir` with what `write` puts at the
+    * staging path it is given, recovering from a crash in an earlier
+    * call. A missing base with a surviving `.old` means that call died
+    * between its two moves: the surviving generation is restored before
+    * `write` runs (so `write` may read the base), and a leftover `.old`
+    * WITH a base is a completed swap's debris, dropped. A leftover
+    * `.staging` is never authoritative (it only becomes so by being
+    * renamed), so it is cleared before the write. Then base → `.old`,
+    * `.staging` → base, drop `.old`: NIO moves throw descriptive
+    * IOExceptions, the checkpoint replays a failed batch, and the
+    * recovery step handles a death between the moves. */
+  private def promote(dir: String)(write: String => Unit): Unit = {
+    val (base, old, staging) =
+      (Paths.get(dir), Paths.get(dir + ".old"), Paths.get(dir + ".staging"))
+    if (!Files.exists(base) && Files.exists(old)) Files.move(old, base)
+    else Convert.deleteRecursively(old)
+    Convert.deleteRecursively(staging)
+    write(staging.toString)
+    if (Files.exists(base)) Files.move(base, old)
+    Files.move(staging, base)
+    Convert.deleteRecursively(old)
+  }
+
+  /** The ids of the `prefix=N` subdirectories under `dir` (none when it
+    * does not exist), the current batch id excluded: a crashed attempt
+    * may have left its own partial write. */
+  private def priorIds(dir: String, prefix: String, batchId: Long): Array[Long] =
+    Option(new java.io.File(dir).listFiles())
+      .getOrElse(Array.empty)
+      .flatMap(f => scala.util.Try(f.getName.stripPrefix(prefix).toLong).toOption)
+      .filter(_ != batchId)
+
+  /** What earlier batches published under `dir` (`cols` of it), the
+    * current batch id excluded, then anti-joined on `cols.head` — the id
+    * column — against the takedown `tombs` when given: the one corpus
+    * read of the ingest sinks. None before anything was published. */
+  private def priorState(spark: SparkSession, dir: String, batchId: Long,
+                         cols: Seq[String], tombs: Option[DataFrame] = None)
+      : Option[DataFrame] =
+    if (!new java.io.File(dir).isDirectory) None
+    else {
+      val prior = spark.read.parquet(dir).filter(col("batch") =!= batchId)
+        .select(cols.map(col): _*)
+      Some(tombs.fold(prior)(prior.join(_, Seq(cols.head), "left_anti")))
+    }
 
   /** Open a file-source stream over a directory of parquet event files —
     * the production shape for continuously-landing data. */
@@ -232,20 +297,13 @@ object EventStreams {
   def indexPartialsSink(stream: DataFrame, idCol: String, textCol: String,
                         partialsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // foreachBatch is at-least-once: overwriting into a per-batch
-        // subdir makes a post-commit/pre-checkpoint crash replay the
-        // batch ONTO ITSELF instead of appending a double-counting
-        // duplicate (a bare append would silently break disjointness)
-        graft.operators.InvertedIndex
-          .termStats(batch, idCol, textCol, minDf = 1L, pooled = false)
-          .write.mode("overwrite").parquet(s"$partialsDir/batch=$batchId")
-        ()
-      }
-      .start()
+    // foreachBatch is at-least-once: overwriting into a per-batch subdir
+    // makes a post-commit/pre-checkpoint crash replay the batch ONTO
+    // ITSELF instead of appending a double-counting duplicate (a bare
+    // append would silently break disjointness)
+    monitor(stream, checkpointDir, partialsDir)(batch =>
+      Seq("" -> graft.operators.InvertedIndex
+        .termStats(batch, idCol, textCol, minDf = 1L, pooled = false)))
 
   /** Streaming C4-style global line dedup — the incremental form of
     * [[graft.operators.Quality.dedupLinesGlobal]] (q146): each micro-batch
@@ -274,46 +332,87 @@ object EventStreams {
                     stateDir: String, outDir: String, checkpointDir: String,
                     sep: String = ". ")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val sepRegex = java.util.regex.Pattern.quote(sep)
-        val sent = batch.select(col(idCol),
-          posexplode(split(col(textCol), sepRegex)).as(Seq("pos", "snt")))
-        val batchWin = sent.groupBy(col("snt"))
-          .agg(min(struct(col(idCol), col("pos"))).as("keep"))
-          .select(col("snt"), col("keep").getField(idCol).as("__kid"),
-            col("keep").getField("pos").as("__kpos"))
-        val fresh =
-          if (new java.io.File(stateDir).isDirectory)
-            batchWin.join(
-              spark.read.parquet(stateDir)
-                .filter(col("batch") =!= batchId).select(col("snt")),
-              Seq("snt"), "left_anti")
-          else batchWin
-        val kept = sent.join(fresh, "snt")
-          .filter(col(idCol) === col("__kid") && col("pos") === col("__kpos"))
-        val rebuilt = kept.groupBy(col(idCol))
-          .agg(count(lit(1)).as("n_kept"),
-            array_join(transform(
-              array_sort(collect_list(struct(col("pos"), col("snt")))),
-              s => s.getField("snt")), sep).as("cleaned"))
-        val counts = sent.groupBy(col(idCol)).agg(count(lit(1)).as("n_lines"))
-        batch.select(col(idCol))
-          .join(counts, Seq(idCol), "left")
-          .join(rebuilt, Seq(idCol), "left")
-          .select(col(idCol),
-            coalesce(col("n_lines"), lit(0L)).as("n_lines"),
-            coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-            coalesce(col("cleaned"), lit("")).as("cleaned"))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        fresh.select(col("snt"))
-          .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-        ()
-      }
-      .start()
+    everyBatch(stream, checkpointDir) { (spark, batch, batchId) =>
+      val sepRegex = java.util.regex.Pattern.quote(sep)
+      val sent = batch.select(col(idCol),
+        posexplode(split(col(textCol), sepRegex)).as(Seq("pos", "snt")))
+      val batchWin = sent.groupBy(col("snt"))
+        .agg(min(struct(col(idCol), col("pos"))).as("keep"))
+        .select(col("snt"), col("keep").getField(idCol).as("__kid"),
+          col("keep").getField("pos").as("__kpos"))
+      val fresh = priorState(spark, stateDir, batchId, Seq("snt"))
+        .fold(batchWin)(batchWin.join(_, Seq("snt"), "left_anti"))
+      val kept = sent.join(fresh, "snt")
+        .filter(col(idCol) === col("__kid") && col("pos") === col("__kpos"))
+      val rebuilt = kept.groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_kept"),
+          array_join(transform(
+            array_sort(collect_list(struct(col("pos"), col("snt")))),
+            s => s.getField("snt")), sep).as("cleaned"))
+      val counts = sent.groupBy(col(idCol)).agg(count(lit(1)).as("n_lines"))
+      batch.select(col(idCol))
+        .join(counts, Seq(idCol), "left")
+        .join(rebuilt, Seq(idCol), "left")
+        .select(col(idCol),
+          coalesce(col("n_lines"), lit(0L)).as("n_lines"),
+          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+          coalesce(col("cleaned"), lit("")).as("cleaned"))
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      fresh.select(col("snt"))
+        .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+    }
+
+  /** Prior state under `dir`, the current batch id excluded (a crashed
+    * attempt may have left its own partial write) — the same replay
+    * discipline as the ingest sinks' corpus reads. Shared by every
+    * ops-mode sink's tombstone/pair reads. */
+  private def priorBatches(spark: SparkSession, dir: String,
+                           batchId: Long): Option[DataFrame] = {
+    val prev = priorIds(dir, "batch=", batchId)
+    if (prev.isEmpty) None
+    else Some(prev.map(b => spark.read.parquet(s"$dir/batch=$b"))
+      .reduce(_ unionByName _))
+  }
+
+  /** Split an ops-mode micro-batch into (adds, tombstone ids), persist
+    * this batch's tombstones under `tdir/batch=N` (replay-safe
+    * overwrite), and return every tombstone id ever seen — this batch's
+    * included, so deletes apply BEFORE the batch's own adds dedup.
+    * NULL-safe: "everything that is not a tombstone is an arriving
+    * document" includes rows whose op is NULL — a plain =!= would
+    * evaluate to NULL and silently drop them from BOTH branches.
+    * Returns (adds, this batch's tombstones, all tombstones ever) —
+    * the latter two None outside ops mode. */
+  private def splitOps(batch: DataFrame, batchId: Long, opCol: String,
+                       tdir: String, idCol: String, payloadCols: Seq[String])
+      : (DataFrame, Option[DataFrame], Option[DataFrame]) = {
+    if (opCol == null) {
+      // loud guard — the INVERSE misconfiguration of the nearDup pre-ops
+      // check: tombstones exist from an earlier ops-mode run but this
+      // restart has opCol unset, so allTombs would be None and every
+      // corpus read would silently treat taken-down docs as dedup
+      // incumbents (dropping new arrivals that duplicate deleted
+      // content). Fail instead: restart with opCol set, or fold the
+      // tombstones physically with compactTakedowns (which drops the
+      // dir) before turning ops mode off.
+      if (new java.io.File(tdir).isDirectory)
+        throw new IllegalStateException(
+          s"ingest sink: tombstones exist under $tdir but opCol is " +
+            "null — earlier batches ran in ops mode and their " +
+            "takedowns would be silently ignored. Restart with opCol " +
+            "set, or run compactTakedowns first.")
+      (batch.select((idCol +: payloadCols).map(col): _*), None, None)
+    } else {
+      val adds = batch
+        .filter(coalesce(col(opCol), lit("")) =!= lit("delete"))
+        .select((idCol +: payloadCols).map(col): _*)
+      val dels = batch.filter(col(opCol) === lit("delete")).select(col(idCol))
+      dels.write.mode("overwrite").parquet(s"$tdir/batch=$batchId")
+      val allTombs = priorBatches(batch.sparkSession, tdir, batchId)
+        .fold(dels)(_ unionByName dels).distinct()
+      (adds, Some(dels), Some(allTombs))
+    }
+  }
 
   /** Streaming near-dup ingest filter — continuous MinHash dedup of an
     * arriving crawl against the accumulated corpus (the production form
@@ -368,62 +467,6 @@ object EventStreams {
     * (id → text) alongside the corpus; the LABEL stream needs no such
     * archive — labels cover every arrival and are rebuild-equal, which
     * is what StreamingSpec proves. */
-  /** Prior state under `dir`, the current batch id excluded (a crashed
-    * attempt may have left its own partial write) — the same replay
-    * discipline as the ingest sinks' corpus reads. Shared by every
-    * ops-mode sink's tombstone/pair reads. */
-  private def priorBatches(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, batchId: Long): Option[DataFrame] = {
-    val prev = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty)
-      .flatMap(f => scala.util.Try(
-        f.getName.stripPrefix("batch=").toLong).toOption)
-      .filter(_ != batchId)
-    if (prev.isEmpty) None
-    else Some(prev.map(b => spark.read.parquet(s"$dir/batch=$b"))
-      .reduce(_ unionByName _))
-  }
-
-  /** Split an ops-mode micro-batch into (adds, tombstone ids), persist
-    * this batch's tombstones under `tdir/batch=N` (replay-safe
-    * overwrite), and return every tombstone id ever seen — this batch's
-    * included, so deletes apply BEFORE the batch's own adds dedup.
-    * NULL-safe: "everything that is not a tombstone is an arriving
-    * document" includes rows whose op is NULL — a plain =!= would
-    * evaluate to NULL and silently drop them from BOTH branches.
-    * Returns (adds, this batch's tombstones, all tombstones ever) —
-    * the latter two None outside ops mode. */
-  private def splitOps(batch: DataFrame, batchId: Long, opCol: String,
-                       tdir: String, idCol: String, payloadCols: Seq[String])
-      : (DataFrame, Option[DataFrame], Option[DataFrame]) = {
-    if (opCol == null) {
-      // loud guard — the INVERSE misconfiguration of the nearDup pre-ops
-      // check: tombstones exist from an earlier ops-mode run but this
-      // restart has opCol unset, so allTombs would be None and every
-      // corpus read would silently treat taken-down docs as dedup
-      // incumbents (dropping new arrivals that duplicate deleted
-      // content). Fail instead: restart with opCol set, or fold the
-      // tombstones physically with compactTakedowns (which drops the
-      // dir) before turning ops mode off.
-      if (new java.io.File(tdir).isDirectory)
-        throw new IllegalStateException(
-          s"ingest sink: tombstones exist under $tdir but opCol is " +
-            "null — earlier batches ran in ops mode and their " +
-            "takedowns would be silently ignored. Restart with opCol " +
-            "set, or run compactTakedowns first.")
-      (batch.select((idCol +: payloadCols).map(col): _*), None, None)
-    } else {
-      val adds = batch
-        .filter(coalesce(col(opCol), lit("")) =!= lit("delete"))
-        .select((idCol +: payloadCols).map(col): _*)
-      val dels = batch.filter(col(opCol) === lit("delete")).select(col(idCol))
-      dels.write.mode("overwrite").parquet(s"$tdir/batch=$batchId")
-      val allTombs = priorBatches(batch.sparkSession, tdir, batchId)
-        .fold(dels)(_ unionByName dels).distinct()
-      (adds, Some(dels), Some(allTombs))
-    }
-  }
-
   def nearDupIngestSink(stream: DataFrame, idCol: String, textCol: String,
                         corpusDir: String, checkpointDir: String,
                         numBands: Int = 4, minJaccard: Double = 0.1,
@@ -445,108 +488,84 @@ object EventStreams {
       corpusDir.stripSuffix("/") + "_labels")
     val tdir = corpusDir.stripSuffix("/") + "_tombstones"
     val pdir = corpusDir.stripSuffix("/") + "_pairs"
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.Dedup
-        try {
-          val hasOps = opCol != null
-          // [[splitOps]]: NULL-safe add/tombstone split, this batch's
-          // tombstones persisted, allTombs includes this batch's — so
-          // deletes apply BEFORE the adds dedup
-          val (adds, dels, allTombs) =
-            splitOps(batch, batchId, opCol, tdir, idCol, Seq(textCol))
-          val hasDels = dels.exists(!_.isEmpty)
-          val pairs = Dedup.lshPairs(adds, idCol, textCol,
-            numBands, minJaccard, k, rowsPerBand)
-          val batchKept = Dedup.applyClusters(adds, idCol,
-            Dedup.dupClusters(pairs))
-          val (survivors, crossPairs) =
-            if (new java.io.File(corpusDir).isDirectory) {
-              val corpus0 = spark.read.parquet(corpusDir)
-                .filter(col("batch") =!= batchId)
-                .select(col(idCol), col(textCol))
-              val corpus = allTombs.fold(corpus0)(t =>
-                corpus0.join(t, Seq(idCol), "left_anti"))
-              val cross = Dedup.lshPairsAgainst(batchKept, corpus,
-                idCol, textCol, numBands, minJaccard, k, rowsPerBand)
-              val dupped = cross.select(col("new_id").as(idCol)).distinct()
-              (batchKept.join(dupped, Seq(idCol), "left_anti"),
-                Some(cross.select(col("new_id").as("a_id"),
-                  col("corpus_id").as("b_id"))))
-            } else (batchKept, None)
-          survivors.select(col(idCol), col(textCol))
-            .write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
-          // fold this batch's discovered pairs (within-batch + cross)
-          // into the live labeling
-          // the current batch id is EXCLUDED from the read (a crashed
-          // attempt may have left its own partial epoch) but the epoch
-          // it read FROM is never deleted in this batch — a replay after
-          // a crash anywhere in this body still finds it intact; only
-          // epochs already superseded when this batch STARTED are GC'd
-          val prevEpochs = Option(new java.io.File(ldir).listFiles())
-            .getOrElse(Array.empty)
-            .flatMap(f => scala.util.Try(
-              f.getName.stripPrefix("epoch=").toLong).toOption)
-            .filter(_ != batchId)
-          val prev = if (prevEpochs.isEmpty) None
-            else Some(spark.read.parquet(s"$ldir/epoch=${prevEpochs.max}"))
-          val newPairs = crossPairs.foldLeft(
-            pairs.select(col("a_id"), col("b_id")))(_ unionByName _)
-          // loud guard, checked on EVERY ops batch (not just delete
-          // batches — detection must fire at the first ops batch, or an
-          // ops add-only batch would create pair history and mask the
-          // gap from a later takedown): label epochs from earlier
-          // batches exist but no pair history does — those batches ran
-          // with opCol=null, so a future takedown's re-derivation would
-          // silently recompute labels from a truncated pair history and
-          // drop every component discovered pre-ops. opCol must be set
-          // from the stream's FIRST batch (ops-mode batches always
-          // write a — possibly empty — pairs frame, so a healthy ops
-          // history always has prior batch dirs here). Checked BEFORE
-          // this batch's own pairs write, which would otherwise mask
-          // the gap from a replay of this very batch.
-          if (hasOps && prevEpochs.nonEmpty &&
-              priorBatches(spark, pdir, batchId).isEmpty)
-            throw new IllegalStateException(
-              s"nearDupIngestSink: label epochs exist under $ldir " +
-                s"but no prior pair batches under $pdir — earlier " +
-                "batches ran without opCol; takedown label " +
-                "re-derivation would drop pre-ops components. " +
-                "Set opCol from the stream's first batch.")
-          // ops mode persists each batch's pair stream append-only: a
-          // future takedown re-derives labels from the residual pairs
-          // (a pairs-sized state, bounded by the bucket caps — never
-          // corpus²)
-          if (hasOps) newPairs.write.mode("overwrite")
-            .parquet(s"$pdir/batch=$batchId")
-          val labeled =
-            if (hasDels) {
-              // a takedown can split a component (the deleted doc may
-              // be its only bridge), which no label filter can express:
-              // re-run CC over every surviving pair ever discovered
-              val residual = priorBatches(spark, pdir, batchId)
-                .fold(newPairs)(_ unionByName newPairs)
-                .join(allTombs.get.select(col(idCol).as("a_id")),
-                  Seq("a_id"), "left_anti")
-                .join(allTombs.get.select(col(idCol).as("b_id")),
-                  Seq("b_id"), "left_anti")
-                .select(col("a_id"), col("b_id"))
-              Dedup.dupClustersStar(residual)
-            } else Dedup.incrementalClusters(prev, newPairs)
-          labeled.write.mode("overwrite").parquet(s"$ldir/epoch=$batchId")
-          prevEpochs.filter(e => prevEpochs.nonEmpty && e < prevEpochs.max)
-            .foreach(e => graft.operators.Convert.deleteRecursively(
-              java.nio.file.Paths.get(s"$ldir/epoch=$e")))
-        } finally {
-          graft.operators.OperatorCaches.release()
-          graft.operators.FramePool.release()
-        }
-        ()
-      }
-      .start()
+    everyBatch(stream, checkpointDir, releasePools) { (spark, batch, batchId) =>
+      import graft.operators.Dedup
+      val hasOps = opCol != null
+      // [[splitOps]]: NULL-safe add/tombstone split, this batch's
+      // tombstones persisted, allTombs includes this batch's — so
+      // deletes apply BEFORE the adds dedup
+      val (adds, dels, allTombs) =
+        splitOps(batch, batchId, opCol, tdir, idCol, Seq(textCol))
+      val hasDels = dels.exists(!_.isEmpty)
+      val pairs = Dedup.lshPairs(adds, idCol, textCol,
+        numBands, minJaccard, k, rowsPerBand)
+      val batchKept = Dedup.applyClusters(adds, idCol,
+        Dedup.dupClusters(pairs))
+      val cross = priorState(spark, corpusDir, batchId, Seq(idCol, textCol),
+        allTombs).map(Dedup.lshPairsAgainst(batchKept, _,
+          idCol, textCol, numBands, minJaccard, k, rowsPerBand))
+      val survivors = cross.fold(batchKept)(c => batchKept.join(
+        c.select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_anti"))
+      survivors.select(col(idCol), col(textCol))
+        .write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
+      // fold this batch's discovered pairs (within-batch + cross)
+      // into the live labeling
+      // the current batch id is EXCLUDED from the read (a crashed
+      // attempt may have left its own partial epoch) but the epoch
+      // it read FROM is never deleted in this batch — a replay after
+      // a crash anywhere in this body still finds it intact; only
+      // epochs already superseded when this batch STARTED are GC'd
+      val prevEpochs = priorIds(ldir, "epoch=", batchId)
+      val prev = if (prevEpochs.isEmpty) None
+        else Some(spark.read.parquet(s"$ldir/epoch=${prevEpochs.max}"))
+      val newPairs = cross.map(_.select(col("new_id").as("a_id"),
+        col("corpus_id").as("b_id")))
+        .foldLeft(pairs.select(col("a_id"), col("b_id")))(_ unionByName _)
+      // loud guard, checked on EVERY ops batch (not just delete
+      // batches — detection must fire at the first ops batch, or an
+      // ops add-only batch would create pair history and mask the
+      // gap from a later takedown): label epochs from earlier
+      // batches exist but no pair history does — those batches ran
+      // with opCol=null, so a future takedown's re-derivation would
+      // silently recompute labels from a truncated pair history and
+      // drop every component discovered pre-ops. opCol must be set
+      // from the stream's FIRST batch (ops-mode batches always
+      // write a — possibly empty — pairs frame, so a healthy ops
+      // history always has prior batch dirs here). Checked BEFORE
+      // this batch's own pairs write, which would otherwise mask
+      // the gap from a replay of this very batch.
+      if (hasOps && prevEpochs.nonEmpty &&
+          priorBatches(spark, pdir, batchId).isEmpty)
+        throw new IllegalStateException(
+          s"nearDupIngestSink: label epochs exist under $ldir " +
+            s"but no prior pair batches under $pdir — earlier " +
+            "batches ran without opCol; takedown label " +
+            "re-derivation would drop pre-ops components. " +
+            "Set opCol from the stream's first batch.")
+      // ops mode persists each batch's pair stream append-only: a
+      // future takedown re-derives labels from the residual pairs
+      // (a pairs-sized state, bounded by the bucket caps — never
+      // corpus²)
+      if (hasOps) newPairs.write.mode("overwrite")
+        .parquet(s"$pdir/batch=$batchId")
+      val labeled =
+        if (hasDels) {
+          // a takedown can split a component (the deleted doc may
+          // be its only bridge), which no label filter can express:
+          // re-run CC over every surviving pair ever discovered
+          val residual = priorBatches(spark, pdir, batchId)
+            .fold(newPairs)(_ unionByName newPairs)
+            .join(allTombs.get.select(col(idCol).as("a_id")),
+              Seq("a_id"), "left_anti")
+            .join(allTombs.get.select(col(idCol).as("b_id")),
+              Seq("b_id"), "left_anti")
+            .select(col("a_id"), col("b_id"))
+          Dedup.dupClustersStar(residual)
+        } else Dedup.incrementalClusters(prev, newPairs)
+      labeled.write.mode("overwrite").parquet(s"$ldir/epoch=$batchId")
+      prevEpochs.filter(e => e < prevEpochs.max)
+        .foreach(e => Convert.deleteRecursively(Paths.get(s"$ldir/epoch=$e")))
+    }
   }
 
   /** Streaming CONTAINMENT ingest filter — the subset/quotation axis of
@@ -586,48 +605,32 @@ object EventStreams {
                             k: Int = 3, minContainment: Double = 0.8,
                             opCol: String = null)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.Dedup
-        try {
-          val tdir = corpusDir.stripSuffix("/") + "_tombstones"
-          val (adds, _, allTombs) =
-            splitOps(batch, batchId, opCol, tdir, idCol, Seq(textCol))
-          val within = Dedup.containmentPairs(adds, idCol, textCol,
-            k, minContainment)
-            .filter(col("na") < col("nb") ||
-              (col("na") === col("nb") && col("a_id") > col("b_id")))
-            .select(col("a_id").as(idCol)).distinct()
-          val batchKept = adds.join(within, Seq(idCol), "left_anti")
-          val survivors =
-            if (new java.io.File(corpusDir).isDirectory) {
-              val corpus0 = spark.read.parquet(corpusDir)
-                .filter(col("batch") =!= batchId)
-                .select(col(idCol), col(textCol))
-              val corpus = allTombs.fold(corpus0)(t =>
-                corpus0.join(t, Seq(idCol), "left_anti"))
-              val contained = Dedup.containmentAgainst(batchKept, corpus,
-                idCol, textCol, k, minContainment)
-                // incumbent-aware size rule: drop the arrival only when
-                // the corpus container is at least as large (ids are
-                // namespaced by side, so arrival order — not id — is
-                // the tie-break: incumbent wins)
-                .filter(col("n_new") <= col("n_corpus"))
-                .select(col("new_id").as(idCol)).distinct()
-              batchKept.join(contained, Seq(idCol), "left_anti")
-            } else batchKept
-          survivors.select(col(idCol), col(textCol))
-            .write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
-        } finally {
-          graft.operators.OperatorCaches.release()
-          graft.operators.FramePool.release()
-        }
-        ()
+    everyBatch(stream, checkpointDir, releasePools) { (spark, batch, batchId) =>
+      import graft.operators.Dedup
+      val tdir = corpusDir.stripSuffix("/") + "_tombstones"
+      val (adds, _, allTombs) =
+        splitOps(batch, batchId, opCol, tdir, idCol, Seq(textCol))
+      val within = Dedup.containmentPairs(adds, idCol, textCol,
+        k, minContainment)
+        .filter(col("na") < col("nb") ||
+          (col("na") === col("nb") && col("a_id") > col("b_id")))
+        .select(col("a_id").as(idCol)).distinct()
+      val batchKept = adds.join(within, Seq(idCol), "left_anti")
+      val survivors = priorState(spark, corpusDir, batchId,
+          Seq(idCol, textCol), allTombs).fold(batchKept) { corpus =>
+        val contained = Dedup.containmentAgainst(batchKept, corpus,
+          idCol, textCol, k, minContainment)
+          // incumbent-aware size rule: drop the arrival only when
+          // the corpus container is at least as large (ids are
+          // namespaced by side, so arrival order — not id — is
+          // the tie-break: incumbent wins)
+          .filter(col("n_new") <= col("n_corpus"))
+          .select(col("new_id").as(idCol)).distinct()
+        batchKept.join(contained, Seq(idCol), "left_anti")
       }
-      .start()
+      survivors.select(col(idCol), col(textCol))
+        .write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
+    }
 
   /** Streaming SEMANTIC (embedding) near-dup ingest filter — the
     * [[nearDupIngestSink]] economics on the embedding axis: each
@@ -653,41 +656,25 @@ object EventStreams {
                           planes: Seq[Array[Double]], planesPerBand: Int,
                           minCos: Double, opCol: String = null)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.{Dedup, Similarity}
-        try {
-          val tdir = corpusDir.stripSuffix("/") + "_tombstones"
-          val (adds, _, allTombs) =
-            splitOps(batch, batchId, opCol, tdir, idCol, Seq(vecCol))
-          val pairs = Similarity.embeddingNearDupPairs(adds, idCol, vecCol,
-            blockCols = Nil, planes, planesPerBand, minCos)
-          val batchKept = Dedup.applyClusters(adds, idCol,
-            Dedup.dupClusters(pairs))
-          val survivors =
-            if (new java.io.File(corpusDir).isDirectory) {
-              val corpus0 = spark.read.parquet(corpusDir)
-                .filter(col("batch") =!= batchId)
-                .select(col(idCol), col(vecCol))
-              val corpus = allTombs.fold(corpus0)(t =>
-                corpus0.join(t, Seq(idCol), "left_anti"))
-              val dupped = Similarity.embeddingNearDupAgainst(batchKept,
-                corpus, idCol, vecCol, Nil, planes, planesPerBand, minCos)
-                .select(col("new_id").as(idCol)).distinct()
-              batchKept.join(dupped, Seq(idCol), "left_anti")
-            } else batchKept
-          survivors.select(col(idCol), col(vecCol))
-            .write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
-        } finally {
-          graft.operators.OperatorCaches.release()
-          graft.operators.FramePool.release()
-        }
-        ()
+    everyBatch(stream, checkpointDir, releasePools) { (spark, batch, batchId) =>
+      import graft.operators.{Dedup, Similarity}
+      val tdir = corpusDir.stripSuffix("/") + "_tombstones"
+      val (adds, _, allTombs) =
+        splitOps(batch, batchId, opCol, tdir, idCol, Seq(vecCol))
+      val pairs = Similarity.embeddingNearDupPairs(adds, idCol, vecCol,
+        blockCols = Nil, planes, planesPerBand, minCos)
+      val batchKept = Dedup.applyClusters(adds, idCol,
+        Dedup.dupClusters(pairs))
+      val survivors = priorState(spark, corpusDir, batchId,
+          Seq(idCol, vecCol), allTombs).fold(batchKept) { corpus =>
+        val dupped = Similarity.embeddingNearDupAgainst(batchKept,
+          corpus, idCol, vecCol, Nil, planes, planesPerBand, minCos)
+          .select(col("new_id").as(idCol)).distinct()
+        batchKept.join(dupped, Seq(idCol), "left_anti")
       }
-      .start()
+      survivors.select(col(idCol), col(vecCol))
+        .write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
+    }
 
   /** Streaming token-drift monitor — the production form of q160: each
     * micro-batch's token counts are compared against the ACCUMULATED
@@ -704,33 +691,23 @@ object EventStreams {
                        checkpointDir: String, minTotal: Long = 50L,
                        topN: Int = 30)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.CorpusStats
-        try {
-          val batchCounts = CorpusStats.tokenCounts(batch, textCol)
-          if (new java.io.File(stateDir).isDirectory) {
-            val corpusCounts = spark.read.parquet(stateDir)
-              .filter(col("batch") =!= batchId)
-              .groupBy("tok").agg(sum("c").as("c"))
-            // gate on the FILTERED baseline, not the directory: a batch-0
-            // replay (state written, checkpoint uncommitted) would
-            // otherwise report batch-vs-nothing — every token phantom-
-            // drifting against an empty corpus
-            if (!corpusCounts.isEmpty)
-              CorpusStats.tokenDriftFromCounts(
-                batchCounts, corpusCounts, minTotal, topN)
-                .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
-          }
-          batchCounts
-            .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-        } finally graft.operators.OperatorCaches.release()
-        ()
+    everyBatch(stream, checkpointDir, releaseCaches) { (spark, batch, batchId) =>
+      import graft.operators.CorpusStats
+      val batchCounts = CorpusStats.tokenCounts(batch, textCol)
+      priorState(spark, stateDir, batchId, Seq("tok", "c")).foreach { prior =>
+        val corpusCounts = prior.groupBy("tok").agg(sum("c").as("c"))
+        // gate on the FILTERED baseline, not the directory: a batch-0
+        // replay (state written, checkpoint uncommitted) would
+        // otherwise report batch-vs-nothing — every token phantom-
+        // drifting against an empty corpus
+        if (!corpusCounts.isEmpty)
+          CorpusStats.tokenDriftFromCounts(
+            batchCounts, corpusCounts, minTotal, topN)
+            .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
       }
-      .start()
+      batchCounts
+        .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+    }
 
   /** Streaming event-rate anomaly monitor — the production form of q163:
     * hourly count partials accumulate per batch (`stateDir/batch=N`,
@@ -744,20 +721,11 @@ object EventStreams {
                          stateDir: String, reportDir: String,
                          checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.groupBy(date_trunc("hour", col(tsCol)).as("h"))
-          .agg(count(lit(1)).as("c"))
-          .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-        graft.operators.Transforms.eventAnomalyFlags(
-          spark.read.parquet(stateDir).groupBy("h").agg(sum("c").as("c")))
-          .write.mode("overwrite").parquet(reportDir)
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir)(
+      batch => Seq("" -> batch.groupBy(date_trunc("hour", col(tsCol)).as("h"))
+        .agg(count(lit(1)).as("c"))),
+      Some(reportDir -> (spark => graft.operators.Transforms.eventAnomalyFlags(
+        spark.read.parquet(stateDir).groupBy("h").agg(sum("c").as("c"))))))
 
   /** The queryable index stats over everything [[indexPartialsSink]] has
     * published so far (the `batch` partition key exists for replay
@@ -780,17 +748,9 @@ object EventStreams {
                     stateDir: String, checkpointDir: String,
                     k: Int = 3, sketchK: Int = 256)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try graft.operators.CorpusStats
-          .kmvSourceSketch(batch, srcCol, textCol, k, sketchK)
-          .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-        finally graft.operators.OperatorCaches.release()
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir, releaseCaches)(batch =>
+      Seq("" -> graft.operators.CorpusStats
+        .kmvSourceSketch(batch, srcCol, textCol, k, sketchK)))
 
   /** The queryable per-source sketch over everything [[kmvSketchSink]]
     * has published: dedup + source-keyed re-rank of the partials. */
@@ -815,19 +775,11 @@ object EventStreams {
                          wCentsCol: String, stateDir: String,
                          checkpointDir: String, k: Int = 256)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try graft.operators.PrioritySample
-          .withPriority(batch, col(keyCol), col(wCentsCol))
-          .orderBy(desc("__prio"), asc("__key")).limit(k + 1)
-          .select(col("__key"), col("__w_c"), col("__prio"))
-          .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-        finally graft.operators.OperatorCaches.release()
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir, releaseCaches)(batch =>
+      Seq("" -> graft.operators.PrioritySample
+        .withPriority(batch, col(keyCol), col(wCentsCol))
+        .orderBy(desc("__prio"), asc("__key")).limit(k + 1)
+        .select(col("__key"), col("__w_c"), col("__prio"))))
 
   /** The queryable (sample, τ) pair over everything
     * [[prioritySampleSink]] has published. */
@@ -846,8 +798,9 @@ object EventStreams {
     * from the pair state (when the sink keeps one), and DROP the
     * tombstone dirs, so subsequent corpus reads pay no anti-join and
     * state stops growing with takedown history. Same crash discipline
-    * as [[graft.operators.Layout.compact]]: staged `.new` write, swap
-    * through `.old`, refuse to run if a previous swap crashed midway.
+    * as [[graft.operators.Layout.compact]] ([[graft.operators.Layout
+    * .swapIn]]): staged `.new` write, swap through `.old`, refuse to run
+    * if a previous swap crashed midway.
     * Run only while the ingest stream is STOPPED (the swap is not
     * concurrent-safe); the stream resumes cleanly afterwards — batch
     * ids keep counting from the checkpoint, and the corpus/pairs reads
@@ -859,28 +812,8 @@ object EventStreams {
     * tombstone dir — a takedown-free corpus is left untouched). */
   def compactTakedowns(spark: SparkSession, corpusDir: String,
                        idCol: String): Long = {
-    import java.nio.file.{Files, Paths}
     val tdir = corpusDir.stripSuffix("/") + "_tombstones"
     val pdir = corpusDir.stripSuffix("/") + "_pairs"
-    def swapIn(dir: String, write: String => Unit): Unit = {
-      val (nw, old) = (dir + ".new", dir + ".old")
-      if (Files.exists(Paths.get(old)))
-        throw new IllegalStateException(
-          s"compactTakedowns: $old exists — a previous swap crashed. " +
-            s"Inspect/restore it to $dir or delete it, then retry.")
-      // a leftover .new is always an INCOMPLETE artifact (it only
-      // becomes authoritative by being renamed away), so a retry may
-      // clobber it — without this, a crash mid-write wedges every
-      // retry on parquet's path-already-exists
-      if (Files.exists(Paths.get(nw)))
-        graft.operators.Convert.deleteRecursively(Paths.get(nw))
-      write(nw)
-      Files.move(Paths.get(dir), Paths.get(old))
-      try Files.move(Paths.get(nw), Paths.get(dir))
-      catch { case e: Throwable =>
-        Files.move(Paths.get(old), Paths.get(dir)); throw e }
-      graft.operators.Convert.deleteRecursively(Paths.get(old))
-    }
     if (!Files.isDirectory(Paths.get(tdir)))
       return -1L // nothing to fold: a takedown-free corpus is a no-op
     val tombs = spark.read.parquet(tdir).select(col(idCol)).distinct()
@@ -895,15 +828,17 @@ object EventStreams {
     // (a) hidden from dedup by the crash-replay filter
     // (batch =!= batchId) and (b) destroyed by the survivors'
     // mode(overwrite) write to corpus/batch=0
-    swapIn(corpusDir, nw => live.write.parquet(s"$nw/batch=-1"))
+    graft.operators.Layout.swapIn(corpusDir, corpusDir + ".new",
+      "compactTakedowns")(nw => live.write.parquet(s"$nw/batch=-1"))
     if (Files.isDirectory(Paths.get(pdir))) {
       val residual = spark.read.parquet(pdir)
         .join(tombs.select(col(idCol).as("a_id")), Seq("a_id"), "left_anti")
         .join(tombs.select(col(idCol).as("b_id")), Seq("b_id"), "left_anti")
         .drop("batch").localCheckpoint()
-      swapIn(pdir, nw => residual.write.parquet(s"$nw/batch=-1"))
+      graft.operators.Layout.swapIn(pdir, pdir + ".new",
+        "compactTakedowns")(nw => residual.write.parquet(s"$nw/batch=-1"))
     }
-    graft.operators.Convert.deleteRecursively(Paths.get(tdir))
+    Convert.deleteRecursively(Paths.get(tdir))
     live.count()
   }
 
@@ -922,21 +857,12 @@ object EventStreams {
                                textCol: String, stateDir: String,
                                reportDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.groupBy(col(srcCol).as("source"))
-          .agg(sum(size(split(col(textCol), " ")).cast("long")).as("x"))
-          .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-        graft.operators.CorpusStats.giniFromVolumes(
-          spark.read.parquet(stateDir)
-            .groupBy("source").agg(sum(col("x")).as("x")))
-          .write.mode("overwrite").parquet(reportDir)
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir)(
+      batch => Seq("" -> batch.groupBy(col(srcCol).as("source"))
+        .agg(sum(size(split(col(textCol), " ")).cast("long")).as("x"))),
+      Some(reportDir -> (spark => graft.operators.CorpusStats.giniFromVolumes(
+        spark.read.parquet(stateDir)
+          .groupBy("source").agg(sum(col("x")).as("x"))))))
 
   /** Serve the water-filled token budget from [[sourceBalanceMonitorSink]]
     * state — q242's production form: the per-source token volumes under
@@ -980,44 +906,29 @@ object EventStreams {
                             numBands: Int = 4, minJaccard: Double = 0.1,
                             k: Int = 3, rowsPerBand: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.Dedup
-        try {
-          val docs = batch.select(col(idCol), col(textCol), col(srcCol))
-          val within = Dedup.lshPairs(docs, idCol, textCol,
-            numBands, minJaccard, k, rowsPerBand)
-            .select(col("a_id"), col("b_id"))
-          val prior =
-            if (new java.io.File(corpusDir).isDirectory)
-              Some(spark.read.parquet(corpusDir)
-                .filter(col("batch") =!= batchId)
-                .select(col(idCol), col(textCol), col(srcCol)))
-            else None
-          val cross = prior.map(corpus =>
-            Dedup.lshPairsAgainst(docs, corpus, idCol, textCol,
-              numBands, minJaccard, k, rowsPerBand)
-              .select(col("new_id").as("a_id"),
-                col("corpus_id").as("b_id")))
-          docs.write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
-          val srcMap = prior.foldLeft(docs)(_ unionByName _)
-            .select(col(idCol).as("id"), col(srcCol).as("src"))
-          val es = cross.foldLeft(within)(_ unionByName _)
-            .join(srcMap.as("sa"), col("a_id") === col("sa.id"))
-            .join(srcMap.as("sb"), col("b_id") === col("sb.id"))
-            .select(col("sa.src").as("s_a"), col("sb.src").as("s_b"))
-          graft.operators.Graphs.sourceEdgeCounts(es)
-            .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-        } finally {
-          graft.operators.OperatorCaches.release()
-          graft.operators.FramePool.release()
-        }
-        ()
-      }
-      .start()
+    everyBatch(stream, checkpointDir, releasePools) { (spark, batch, batchId) =>
+      import graft.operators.Dedup
+      val docs = batch.select(col(idCol), col(textCol), col(srcCol))
+      val within = Dedup.lshPairs(docs, idCol, textCol,
+        numBands, minJaccard, k, rowsPerBand)
+        .select(col("a_id"), col("b_id"))
+      val prior = priorState(spark, corpusDir, batchId,
+        Seq(idCol, textCol, srcCol))
+      val cross = prior.map(corpus =>
+        Dedup.lshPairsAgainst(docs, corpus, idCol, textCol,
+          numBands, minJaccard, k, rowsPerBand)
+          .select(col("new_id").as("a_id"),
+            col("corpus_id").as("b_id")))
+      docs.write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
+      val srcMap = prior.foldLeft(docs)(_ unionByName _)
+        .select(col(idCol).as("id"), col(srcCol).as("src"))
+      val es = cross.foldLeft(within)(_ unionByName _)
+        .join(srcMap.as("sa"), col("a_id") === col("sa.id"))
+        .join(srcMap.as("sb"), col("b_id") === col("sb.id"))
+        .select(col("sa.src").as("s_a"), col("sb.src").as("s_b"))
+      graft.operators.Graphs.sourceEdgeCounts(es)
+        .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+    }
 
   /** Streaming burst monitor — q215's production form: each micro-batch
     * publishes its (event_type, hour) count partial, and the burst
@@ -1033,24 +944,15 @@ object EventStreams {
                        stateDir: String, reportDir: String,
                        checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.filter(col(tsCol).isNotNull)
-          .groupBy(col(typeCol).as("event_type"),
-            date_trunc("hour", col(tsCol)).as("hour"))
-          .agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-        graft.operators.Transforms.burstFlags(
-          spark.read.parquet(stateDir)
-            .groupBy(col("event_type"), col("hour"))
-            .agg(sum(col("n")).as("n")))
-          .write.mode("overwrite").parquet(reportDir)
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir)(
+      batch => Seq("" -> batch.filter(col(tsCol).isNotNull)
+        .groupBy(col(typeCol).as("event_type"),
+          date_trunc("hour", col(tsCol)).as("hour"))
+        .agg(count(lit(1)).as("n"))),
+      Some(reportDir -> (spark => graft.operators.Transforms.burstFlags(
+        spark.read.parquet(stateDir)
+          .groupBy(col("event_type"), col("hour"))
+          .agg(sum(col("n")).as("n"))))))
 
   /** Streaming Count-Min maintenance — q217's production form, and the
     * frequency sibling of [[kmvSketchSink]]: each micro-batch publishes
@@ -1064,33 +966,24 @@ object EventStreams {
   def cmsMonitorSink(stream: DataFrame, textCol: String,
                      terms: Seq[String], stateDir: String,
                      reportDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val toks = batch.filter(col(textCol).isNotNull)
-          .select(explode(split(col(textCol), " ")).as("term"))
-        val qt = terms.toDF("term")
-        graft.operators.CountMin.sketch(toks, "term")
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/counters/batch=$batchId")
-        toks.join(broadcast(qt), Seq("term"))
-          .groupBy(col("term")).agg(count(lit(1)).as("exact_cnt"))
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/exact/batch=$batchId")
-        graft.operators.CountMin.report(
-          spark.read.parquet(s"$stateDir/counters")
-            .groupBy(col("r"), col("bkt")).agg(sum(col("c")).as("c")),
-          spark.read.parquet(s"$stateDir/exact")
-            .groupBy(col("term")).agg(sum(col("exact_cnt")).as("exact_cnt")),
-          qt)
-          .write.mode("overwrite").parquet(reportDir)
-        ()
-      }
-      .start()
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    def probes(spark: SparkSession) = {
+      import spark.implicits._
+      terms.toDF("term")
+    }
+    monitor(stream, checkpointDir, stateDir)({ batch =>
+      val toks = batch.filter(col(textCol).isNotNull)
+        .select(explode(split(col(textCol), " ")).as("term"))
+      Seq("counters" -> graft.operators.CountMin.sketch(toks, "term"),
+        "exact" -> toks.join(broadcast(probes(batch.sparkSession)), Seq("term"))
+          .groupBy(col("term")).agg(count(lit(1)).as("exact_cnt")))
+    }, Some(reportDir -> (spark => graft.operators.CountMin.report(
+      spark.read.parquet(s"$stateDir/counters")
+        .groupBy(col("r"), col("bkt")).agg(sum(col("c")).as("c")),
+      spark.read.parquet(s"$stateDir/exact")
+        .groupBy(col("term")).agg(sum(col("exact_cnt")).as("exact_cnt")),
+      probes(spark)))))
+  }
 
   /** Streaming Bloom-filter maintenance — q219's production form, the
     * set-membership sibling of [[cmsMonitorSink]]: each micro-batch
@@ -1106,27 +999,16 @@ object EventStreams {
                        probes: DataFrame, stateDir: String,
                        reportDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val terms = batch.filter(col(textCol).isNotNull)
-          .select(explode(split(col(textCol), " ")).as("term"))
-          .filter(length(col("term")) > 0).distinct()
-        graft.operators.BloomSet.sketch(terms, "term")
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/bits/batch=$batchId")
-        terms.write.mode("overwrite")
-          .parquet(s"$stateDir/members/batch=$batchId")
-        graft.operators.BloomSet.report(
-          spark.read.parquet(s"$stateDir/bits").select(col("bit")).distinct(),
-          spark.read.parquet(s"$stateDir/members").select(col("term")).distinct(),
-          probes)
-          .write.mode("overwrite").parquet(reportDir)
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir)({ batch =>
+      val terms = batch.filter(col(textCol).isNotNull)
+        .select(explode(split(col(textCol), " ")).as("term"))
+        .filter(length(col("term")) > 0).distinct()
+      Seq("bits" -> graft.operators.BloomSet.sketch(terms, "term"),
+        "members" -> terms)
+    }, Some(reportDir -> (spark => graft.operators.BloomSet.report(
+      spark.read.parquet(s"$stateDir/bits").select(col("bit")).distinct(),
+      spark.read.parquet(s"$stateDir/members").select(col("term")).distinct(),
+      probes))))
 
   /** Streaming histogram-sketch maintenance — q224's production form,
     * the quantile sibling of [[cmsMonitorSink]]: each micro-batch
@@ -1142,36 +1024,16 @@ object EventStreams {
                       stateDir: String, reportDir: String,
                       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val y = batch.filter(col(valueCol).isNotNull)
+    monitor(stream, checkpointDir, stateDir)(
+      batch => Seq("bins" -> graft.operators.HistSketch.sketch(
+        batch.filter(col(valueCol).isNotNull)
           .select((col(valueCol).cast("decimal(18,6)") * lit(1000000))
-            .cast("long").as("y"))
-        graft.operators.HistSketch.sketch(y, "y")
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/bins/batch=$batchId")
-        val merged = spark.read.parquet(s"$stateDir/bins")
-          .groupBy(col("bin")).agg(sum(col("c")).as("c"))
-        graft.operators.HistSketch
-          .quantiles(merged, graft.queries.MiscQueries.HistPcts)
-          .write.mode("overwrite").parquet(reportDir)
-        ()
-      }
-      .start()
+            .cast("long").as("y")), "y")),
+      Some(reportDir -> (spark => graft.operators.HistSketch.quantiles(
+        spark.read.parquet(s"$stateDir/bins")
+          .groupBy(col("bin")).agg(sum(col("c")).as("c")),
+        graft.queries.MiscQueries.HistPcts))))
 
-  /** Streaming OLS trend maintenance — q222's production form: each
-    * micro-batch publishes its per-type 5-accumulator sufficient-
-    * statistic partial ([[graft.operators.Ols.suffStats]] over the
-    * SAME (x, y) mapping the batch query uses), and the trend report
-    * is re-solved over the per-type SUM of all partials
-    * ([[graft.operators.Ols.mergeStats]] → [[graft.operators.Ols.solve]]).
-    * Sufficient statistics merge by plain addition — exact longs and
-    * DECIMAL(38,0), no floating point anywhere — so the streamed
-    * report equals batch q222 over all arrivals, spec-proven; the live
-    * state is |event types| × 5 numbers regardless of stream length. */
   /** Streaming embedding-ANISOTROPY monitor — q250's production form
     * ("is the embedding space collapsing onto a few rogue directions
     * as ingestion proceeds"): each micro-batch publishes its ADDITIVE
@@ -1189,30 +1051,12 @@ object EventStreams {
                             reportDir: String, checkpointDir: String,
                             iterations: Int = 3)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        try {
-          val (mom, sums) = graft.operators.Similarity.scatterMoments(
-            batch, idCol, vecCol)
-          mom.write.mode("overwrite")
-            .parquet(s"$stateDir/moments/batch=$batchId")
-          sums.write.mode("overwrite")
-            .parquet(s"$stateDir/sums/batch=$batchId")
-          servingAnisotropy(spark, stateDir, iterations)
-            .write.mode("overwrite").parquet(reportDir)
-        } finally {
-          graft.operators.OperatorCaches.release()
-          // componentFrame pools per corpus plan; a stream's batches are
-          // each a distinct corpus, so release per batch (the ingest-sink
-          // discipline) rather than letting entries ride LRU eviction
-          graft.operators.FramePool.release()
-        }
-        ()
-      }
-      .start()
+    // componentFrame pools per corpus plan: release the pool per batch
+    monitor(stream, checkpointDir, stateDir, releasePools)({ batch =>
+      val (mom, sums) = graft.operators.Similarity.scatterMoments(
+        batch, idCol, vecCol)
+      Seq("moments" -> mom, "sums" -> sums)
+    }, Some(reportDir -> (servingAnisotropy(_, stateDir, iterations))))
 
   /** The queryable anisotropy report over everything
     * [[anisotropyMonitorSink]] has published — merged moment partials
@@ -1242,25 +1086,10 @@ object EventStreams {
                           stateDir: String, reportDir: String,
                           checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        try {
-          graft.operators.Similarity.labelMoments(
-              batch, idCol, vecCol, labelCol)
-            .write.mode("overwrite")
-            .parquet(s"$stateDir/moments/batch=$batchId")
-          servingCentroids(spark, stateDir)
-            .write.mode("overwrite").parquet(reportDir)
-        } finally {
-          graft.operators.OperatorCaches.release()
-          graft.operators.FramePool.release() // see anisotropy sink
-        }
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir, releasePools)(
+      batch => Seq("moments" -> graft.operators.Similarity.labelMoments(
+        batch, idCol, vecCol, labelCol)),
+      Some(reportDir -> (servingCentroids(_, stateDir))))
 
   /** The queryable centroid table over everything
     * [[centroidMonitorSink]] has published — merged moment partials
@@ -1284,25 +1113,10 @@ object EventStreams {
                                 stateDir: String, reportDir: String,
                                 checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        try {
-          graft.operators.Similarity.driftMoments(
-              batch, idCol, vecCol, labelCol)
-            .write.mode("overwrite")
-            .parquet(s"$stateDir/moments/batch=$batchId")
-          servingEmbeddingDrift(spark, stateDir)
-            .write.mode("overwrite").parquet(reportDir)
-        } finally {
-          graft.operators.OperatorCaches.release()
-          graft.operators.FramePool.release() // see anisotropy sink
-        }
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir, releasePools)(
+      batch => Seq("moments" -> graft.operators.Similarity.driftMoments(
+        batch, idCol, vecCol, labelCol)),
+      Some(reportDir -> (servingEmbeddingDrift(_, stateDir))))
 
   /** The queryable drift report over everything
     * [[embeddingDriftMonitorSink]] has published — merged moment
@@ -1328,21 +1142,10 @@ object EventStreams {
                                textCol: String, stateDir: String,
                                reportDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.groupBy(col(srcCol).as("source"))
-          .agg(sum(size(split(col(textCol), " ")).cast("long"))
-            .as("tokens"))
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/tokens/batch=$batchId")
-        servingEpochSchedule(spark, stateDir)
-          .write.mode("overwrite").parquet(reportDir)
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir)(
+      batch => Seq("tokens" -> batch.groupBy(col(srcCol).as("source"))
+        .agg(sum(size(split(col(textCol), " ")).cast("long")).as("tokens"))),
+      Some(reportDir -> (servingEpochSchedule(_, stateDir))))
 
   /** The queryable epoch schedule over everything
     * [[epochScheduleMonitorSink]] has published — merged token partials
@@ -1375,19 +1178,11 @@ object EventStreams {
                        stateDir: String, reportDir: String,
                        checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.operators.Logit.rawFeatures(graft.operators.Logit.augment(
-            batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))))
-          .write.mode("overwrite").parquet(s"$stateDir/feat/batch=$batchId")
-        servingLogit(spark, stateDir)
-          .write.mode("overwrite").parquet(reportDir)
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir)(
+      batch => Seq("feat" -> graft.operators.Logit.rawFeatures(
+        graft.operators.Logit.augment(
+          batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))))),
+      Some(reportDir -> (servingLogit(_, stateDir))))
 
   /** The queryable trained trajectory (round, w0..w3) over everything
     * [[logitMonitorSink]] has published — serve-time means over the
@@ -1426,67 +1221,45 @@ object EventStreams {
                             sensCol: String, stateDir: String,
                             reportDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import java.nio.file.{Files => NioFiles, Paths}
-        val spark = batch.sparkSession
-        val qc = qidCols.map(col)
-        val marker = Paths.get(s"$stateDir/applied/batch=$batchId")
-        if (!NioFiles.exists(marker)) {
-          // The directory marker alone is NOT atomic with the swap: a
-          // crash after a rotate's staging→base move but before the
-          // marker would re-merge this batch's gsz on replay (permanent
-          // overcount — ADVICE r15). So each staged snapshot carries the
-          // batch id INSIDE it as a '_'-prefixed sentinel file (invisible
-          // to parquet readers): the applied evidence moves in the same
-          // rename as the state, and a per-rotate skip makes each rotate
-          // individually idempotent even when the crash lands BETWEEN
-          // the two rotates.
-          val sentinelName = s"_applied_batch_$batchId"
-          // rotate one compacted base snapshot (recovery-safe swap:
-          // base → .old only after .staging is fully written)
-          def rotate(df: DataFrame, dir: String)
-                    (compact: DataFrame => DataFrame): Unit = {
-            val basePath = Paths.get(dir)
-            val oldPath = Paths.get(dir + ".old")
-            if (NioFiles.exists(basePath.resolve(sentinelName))) {
-              // this batch's merge already swapped in — merging again
-              // would double-count; a leftover .old is just the
-              // completed swap's debris
-              graft.operators.Convert.deleteRecursively(oldPath)
-            } else {
-              if (!NioFiles.exists(basePath) && NioFiles.exists(oldPath))
-                NioFiles.move(oldPath, basePath)
-              else if (NioFiles.exists(oldPath))
-                graft.operators.Convert.deleteRecursively(oldPath)
-              val merged =
-                if (NioFiles.exists(basePath))
-                  spark.read.parquet(dir).unionByName(df)
-                else df
-              val staging = Paths.get(dir + ".staging")
-              graft.operators.Convert.deleteRecursively(staging)
-              compact(merged).write.mode("overwrite")
-                .parquet(staging.toString)
-              NioFiles.createFile(staging.resolve(sentinelName))
-              if (NioFiles.exists(basePath)) NioFiles.move(basePath, oldPath)
-              NioFiles.move(staging, basePath)
-              graft.operators.Convert.deleteRecursively(oldPath)
-            }
+    everyBatch(stream, checkpointDir) { (spark, batch, batchId) =>
+      val qc = qidCols.map(col)
+      val marker = Paths.get(s"$stateDir/applied/batch=$batchId")
+      if (!Files.exists(marker)) {
+        // The directory marker alone is NOT atomic with the swap: a
+        // crash after a rotate's staging→base move but before the
+        // marker would re-merge this batch's gsz on replay (permanent
+        // overcount — ADVICE r15). So each staged snapshot carries the
+        // batch id INSIDE it as a '_'-prefixed sentinel file (invisible
+        // to parquet readers): the applied evidence moves in the same
+        // rename as the state, and a per-rotate skip makes each rotate
+        // individually idempotent even when the crash lands BETWEEN
+        // the two rotates.
+        val sentinelName = s"_applied_batch_$batchId"
+        // merge one batch into one compacted base snapshot
+        def rotate(df: DataFrame, dir: String)
+                  (compact: DataFrame => DataFrame): Unit =
+          // this batch's merge already swapped in — merging again
+          // would double-count; a leftover .old is just the
+          // completed swap's debris
+          if (Files.exists(Paths.get(dir, sentinelName)))
+            Convert.deleteRecursively(Paths.get(dir + ".old"))
+          else promote(dir) { staging =>
+            val merged =
+              if (Files.exists(Paths.get(dir))) spark.read.parquet(dir).unionByName(df)
+              else df
+            compact(merged).write.mode("overwrite").parquet(staging)
+            Files.createFile(Paths.get(staging, sentinelName))
           }
-          rotate(batch.groupBy(qc: _*).agg(count(lit(1)).as("gsz")),
-            s"$stateDir/sizes")(
-            _.groupBy(qc: _*).agg(sum(col("gsz")).as("gsz")))
-          rotate(batch.select((qc :+ col(sensCol).as("__sens")): _*)
-            .distinct(), s"$stateDir/pairs")(_.distinct())
-          NioFiles.createDirectories(marker)
-        }
-        servingLDiversity(spark, qidCols, stateDir)
-          .write.mode("overwrite").parquet(reportDir)
-        ()
+        rotate(batch.groupBy(qc: _*).agg(count(lit(1)).as("gsz")),
+          s"$stateDir/sizes")(
+          _.groupBy(qc: _*).agg(sum(col("gsz")).as("gsz")))
+        rotate(batch.select((qc :+ col(sensCol).as("__sens")): _*)
+          .distinct(), s"$stateDir/pairs")(_.distinct())
+        Files.createDirectories(marker)
       }
-      .start()
+      servingLDiversity(spark, qidCols, stateDir)
+        .write.mode("overwrite").parquet(reportDir)
+    }
 
   /** The queryable l-diversity report over everything
     * [[lDiversityMonitorSink]] has published — the COMPACTED size and
@@ -1531,19 +1304,9 @@ object EventStreams {
                     qualityCol: String, cap: Int, baseDir: String,
                     auditDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import java.nio.file.{Files => NioFiles, Paths}
-        val spark = batch.sparkSession
-        val basePath = Paths.get(baseDir)
-        val oldPath = Paths.get(baseDir + ".old")
-        if (!NioFiles.exists(basePath) && NioFiles.exists(oldPath))
-          NioFiles.move(oldPath, basePath)
-        else if (NioFiles.exists(oldPath))
-          graft.operators.Convert.deleteRecursively(oldPath)
-        val arrivals = batch.dropDuplicates(Seq(srcCol, idCol))
+    everyBatch(stream, checkpointDir) { (spark, batch, batchId) =>
+      val arrivals = batch.dropDuplicates(Seq(srcCol, idCol))
+      promote(baseDir) { staging =>
         // dedupe across the MERGE, not just within the batch: a
         // checkpoint-replayed batch's rows are already in base, so the
         // union would carry each key twice — both copies would rank
@@ -1552,7 +1315,7 @@ object EventStreams {
         // one row makes the replay truly re-derive the identical
         // survivor set.
         val all =
-          (if (NioFiles.exists(basePath))
+          (if (Files.exists(Paths.get(baseDir)))
              spark.read.parquet(baseDir).unionByName(arrivals)
            else arrivals)
             .dropDuplicates(Seq(srcCol, idCol))
@@ -1560,19 +1323,13 @@ object EventStreams {
             all, srcCol, idCol, col(qualityCol), cap)
           .filter(col("rk") <= cap)
           .select(col(srcCol), col(idCol))
-        val kept = all.join(keepIds, Seq(srcCol, idCol))
         all.join(keepIds, Seq(srcCol, idCol), "left_anti")
           .withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(auditDir)
-        val staging = Paths.get(baseDir + ".staging")
-        graft.operators.Convert.deleteRecursively(staging)
-        kept.write.mode("overwrite").parquet(staging.toString)
-        if (NioFiles.exists(basePath)) NioFiles.move(basePath, oldPath)
-        NioFiles.move(staging, basePath)
-        graft.operators.Convert.deleteRecursively(oldPath)
-        ()
+        all.join(keepIds, Seq(srcCol, idCol))
+          .write.mode("overwrite").parquet(staging)
       }
-      .start()
+    }
 
   /** Streaming media ingest with quarantine — the q269 acceptance gate
     * as a sink: every arriving asset is format-sniffed and REALLY
@@ -1591,46 +1348,42 @@ object EventStreams {
   def mediaIngestSink(stream: DataFrame, corpusDir: String,
                       quarantineDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist so the decode (the expensive half) runs once, not once
-        // per destination filter
-        val classified =
-          graft.multimodal.Multimodal.classifyMedia(batch).persist()
-        try {
-          classified.filter(!col("bucket").isin(
-              "png_corrupt", "wav_corrupt", "unknown_format"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(corpusDir)
-          classified.filter(col("bucket").isin(
-              "png_corrupt", "wav_corrupt", "unknown_format"))
-            .select(col("asset_id"), col("bucket"),
-              lit(batchId).as("batch_id"))
-            .write.mode("append").parquet(quarantineDir)
-        } finally classified.unpersist()
-        ()
-      }
-      .start()
+    everyBatch(stream, checkpointDir) { (_, batch, batchId) =>
+      // persist so the decode (the expensive half) runs once, not once
+      // per destination filter
+      val classified =
+        graft.multimodal.Multimodal.classifyMedia(batch).persist()
+      try {
+        classified.filter(!col("bucket").isin(
+            "png_corrupt", "wav_corrupt", "unknown_format"))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(corpusDir)
+        classified.filter(col("bucket").isin(
+            "png_corrupt", "wav_corrupt", "unknown_format"))
+          .select(col("asset_id"), col("bucket"),
+            lit(batchId).as("batch_id"))
+          .write.mode("append").parquet(quarantineDir)
+      } finally classified.unpersist()
+    }
 
+  /** Streaming OLS trend maintenance — q222's production form: each
+    * micro-batch publishes its per-type 5-accumulator sufficient-
+    * statistic partial ([[graft.operators.Ols.suffStats]] over the
+    * SAME (x, y) mapping the batch query uses), and the trend report
+    * is re-solved over the per-type SUM of all partials
+    * ([[graft.operators.Ols.mergeStats]] → [[graft.operators.Ols.solve]]).
+    * Sufficient statistics merge by plain addition — exact longs and
+    * DECIMAL(38,0), no floating point anywhere — so the streamed
+    * report equals batch q222 over all arrivals, spec-proven; the live
+    * state is |event types| × 5 numbers regardless of stream length. */
   def olsMonitorSink(stream: DataFrame, stateDir: String,
                      reportDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.operators.Ols.suffStats(graft.operators.Ols.xy(batch))
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/stats/batch=$batchId")
-        graft.operators.Ols.solve(graft.operators.Ols.mergeStats(
-            spark.read.parquet(s"$stateDir/stats")))
-          .write.mode("overwrite").parquet(reportDir)
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir)(
+      batch => Seq("stats" ->
+        graft.operators.Ols.suffStats(graft.operators.Ols.xy(batch))),
+      Some(reportDir -> (spark => graft.operators.Ols.solve(
+        graft.operators.Ols.mergeStats(spark.read.parquet(s"$stateDir/stats"))))))
 
   /** Streaming KS drift maintenance — q225's production form: each
     * micro-batch publishes its (source, value) count partial
@@ -1647,22 +1400,13 @@ object EventStreams {
                     baselineSource: String, stateDir: String,
                     reportDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.operators.KsDrift.counts(batch, sourceCol, valueCol)
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/counts/batch=$batchId")
-        graft.operators.KsDrift.report(
-            graft.operators.KsDrift.mergeCounts(
-              spark.read.parquet(s"$stateDir/counts")),
-            baselineSource)
-          .write.mode("overwrite").parquet(reportDir)
-        ()
-      }
-      .start()
+    monitor(stream, checkpointDir, stateDir)(
+      batch => Seq("counts" ->
+        graft.operators.KsDrift.counts(batch, sourceCol, valueCol)),
+      Some(reportDir -> (spark => graft.operators.KsDrift.report(
+        graft.operators.KsDrift.mergeCounts(
+          spark.read.parquet(s"$stateDir/counts")),
+        baselineSource))))
 
   /** The queryable modularity report over everything
     * [[modularityMonitorSink]] has published: sum the per-batch counter

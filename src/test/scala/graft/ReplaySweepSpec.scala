@@ -276,16 +276,14 @@ class ReplaySweepSpec extends SparkSpec {
         s"$t/ckpt", seqCol = Some("seq")),
       t => allParquet(s"$t/base")))
 
-  // every *Sink in EventStreams must appear above — a NEW sink cannot
-  // ship without a replay case (the sweep is the repo's at-least-once
-  // regression harness)
+  // every public method of EventStreams that starts a StreamingQuery
+  // must appear above — a NEW sink cannot ship without a replay case
+  // (the sweep is the repo's at-least-once regression harness)
   test("sweep covers every sink defined in EventStreams") {
-    val defined = scala.io.Source.fromFile(
-      "src/main/scala/graft/streaming/EventStreams.scala", "UTF-8")
-    val sinkNames =
-      try "def (\\w*Sink)".r.findAllMatchIn(defined.mkString)
-        .map(_.group(1)).toSet - "mergingSink" // private dispatch helper
-      finally defined.close()
+    val sinkNames = EventStreams.getClass.getMethods.toSeq
+      .filter(m => m.getReturnType ==
+        classOf[org.apache.spark.sql.streaming.StreamingQuery])
+      .map(_.getName).toSet
     assert(sinkNames === cases.map(_.name).toSet,
       s"uncovered sinks: ${sinkNames -- cases.map(_.name).toSet}; " +
         s"stale cases: ${cases.map(_.name).toSet -- sinkNames}")
