@@ -453,7 +453,6 @@ object Bench {
     // so per-cell claims are adjudicable as build+serve. Captured BEFORE
     // release() clears the ledger.
     val poolBuilds = graft.operators.FramePool.buildSeconds
-    graft.operators.Postings.release()
     graft.operators.FramePool.release()
 
     def entries(rs: Seq[(String, (Double, Boolean))]): String =

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{FramePool, OperatorCaches, Postings}
+import graft.operators.{FramePool, OperatorCaches}
 import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -37,9 +37,10 @@ object SparkEntry {
   /** The registry's one cache lifecycle: runs `body` on each query in the
     * caller's order and returns, per query, its result or whatever it
     * threw — a failing query is reported by name and the rest still run.
-    * `OperatorCaches` is released after each query; the cross-query pools
-    * (`Postings`, `FramePool`) live for the whole sweep — later queries
-    * reuse what earlier ones built — and are released once at the end. */
+    * The two scopes: `OperatorCaches` (per query) is released after each
+    * query; `FramePool` (per run: posting indexes, pooled frames, served
+    * artifact directories) lives for the whole sweep — later queries
+    * reuse what earlier ones built — and is released once at the end. */
   def sweep[A](queries: Seq[(String, Query)])(body: (String, Query) => A)
       : Seq[(String, Either[Throwable, A])] = {
     val results = queries.map { case (name, fn) =>
@@ -47,7 +48,6 @@ object SparkEntry {
       OperatorCaches.release()
       name -> r
     }
-    Postings.release()
     FramePool.release()
     results
   }

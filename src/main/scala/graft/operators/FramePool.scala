@@ -1,19 +1,24 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Generic named pool of persisted frames shared ACROSS queries — the
-  * ad-hoc sibling of [[Postings]] (which owns the typed corpus posting
-  * index). Use it for any expensive pipeline head several queries
-  * rebuild identically: PQ codebook training, IVF cell assignments —
-  * artifacts a real system trains once and serves many times. Same
-  * lifecycle contract as Postings: entries survive the per-query
-  * [[OperatorCaches.release]] (that pool is for single-query
-  * intermediates) and are dropped by [[release]] at end of run, or when
-  * the pool would exceed [[MaxEntries]] keys.
+/** The RUN-SCOPED artifact store (the per-query scope is
+  * [[OperatorCaches]]): artifacts a real system trains once and serves
+  * many times. Two kinds of entry share one monitor, one build-seconds
+  * ledger and one [[release]] at end of run; both survive the per-query
+  * [[OperatorCaches.release]]:
+  *   - frame sets ([[frames]]): persisted pipeline heads several queries
+  *     rebuild identically — the posting index ([[Postings]], tag
+  *     `postings`), PQ codebooks, IVF cell assignments, shingle
+  *     signatures. LRU over [[MaxEntries]] keys.
+  *   - directories ([[dir]]): files a query writes once and reads on
+  *     every call (q09, q112, q177, q203). Never evicted: a lazy frame
+  *     may still scan one.
   *
   * Callers key by a stable corpus identity — a tuple of a pipeline tag
   * with the corpus's CANONICALIZED ANALYZED PLAN (structural equality,
@@ -21,6 +26,17 @@ import org.apache.spark.storage.StorageLevel
   * data, where the plan's toString or a 32-bit hash would collide) plus
   * parameters, or a scale-factor-dir string where the corpus is a fixed
   * fixture. The builder runs at most once per key per run.
+  *
+  * Locking: one REENTRANT monitor (this object's), not a concurrent
+  * map's atomic get-or-build: a builder may itself resolve pooled
+  * entries (Logit.pooledTrajectory from pooledFeatures, q177's directory
+  * from the posting index), and a nested atomic update of one hash map
+  * throws "Recursive update" whenever the two keys share a bin — a
+  * nondeterministic failure that fired in round 15. A miss builds while
+  * holding the monitor, so a build's Spark jobs block every other
+  * caller, even for unrelated keys. Harmless for the single-threaded
+  * query loops that drive the store; a caller resolving entries from
+  * several threads serializes behind each build.
   */
 object FramePool {
 
@@ -30,17 +46,17 @@ object FramePool {
     * eviction fires at all. */
   val MaxEntries = 32
 
-  private val pool = new ConcurrentHashMap[Any, Seq[DataFrame]]()
-  private val order = new java.util.concurrent.ConcurrentLinkedQueue[Any]()
+  // every field is guarded by this object's monitor; `pool` iterates in
+  // LRU order (a hit re-inserts its key at the back)
+  private val pool = mutable.LinkedHashMap.empty[Any, Seq[DataFrame]]
+  private val dirs = mutable.HashMap.empty[Any, Path]
 
-  /** Build cost per pool TAG (the key tuple's leading string), summed
-    * across keys sharing the tag: seconds spent constructing AND
-    * materializing pooled frames on a miss. Recorded so a bench artifact
-    * can report `pool_builds` — pooled per-query numbers are pool-warm
-    * by design (the train-once/serve-many artifact pattern), and the
-    * adjudicator needs the build cost they amortize in the same artifact
-    * (VERDICT r16 item 7). Cleared by [[release]]. */
-  private val buildSecs = new ConcurrentHashMap[String, Double]()
+  /** Build seconds per TAG (the key tuple's leading string), summed
+    * over keys: constructing AND materializing a frame set, or writing a
+    * directory, on a miss. Bench reports it as `pool_builds`, the build
+    * cost that pool-warm per-query numbers amortize (VERDICT r16 item 7).
+    * Cleared by [[release]]. */
+  private val buildSecs = mutable.HashMap.empty[String, Double]
 
   private def tagOf(key: Any): String = key match {
     case p: Product if p.productArity >= 1 => p.productElement(0) match {
@@ -51,17 +67,22 @@ object FramePool {
     case other => other.getClass.getSimpleName
   }
 
-  /** Snapshot of accumulated pool-build seconds by tag (bench hook). */
-  def buildSeconds: Map[String, Double] = {
-    val b = Map.newBuilder[String, Double]
-    buildSecs.forEach((k, v) => b += k -> v)
-    b.result()
+  /** Run `build`, adding its seconds to `key`'s tag in the ledger. */
+  private def timed[A](key: Any)(build: => A): A = {
+    val t0 = System.nanoTime()
+    val built = build
+    val tag = tagOf(key)
+    buildSecs(tag) = buildSecs.getOrElse(tag, 0.0) + (System.nanoTime() - t0) / 1e9
+    built
   }
 
+  /** Snapshot of accumulated pool-build seconds by tag (bench hook). */
+  def buildSeconds: Map[String, Double] = synchronized { buildSecs.toMap }
+
   /** Get-or-build the named frame set; frames are persisted
-    * MEMORY_AND_DISK on first build. The builder's frames may already be
-    * persisted (e.g. so later frames in the set reuse earlier ones while
-    * building) — re-persisting at the same level is a no-op.
+    * MEMORY_AND_DISK on first build, in order, so a later frame of the
+    * set reads the earlier ones' cache. The builder's frames may already
+    * be persisted — re-persisting at the same level is a no-op.
     *
     * Capacity: exceeding [[MaxEntries]] evicts the LEAST-RECENTLY-USED
     * entry only — a flush-all would also drop the hot frames the
@@ -71,66 +92,67 @@ object FramePool {
     * (lineage-truncated — e.g. the PQ codebook/codes artifacts), and
     * unpersisting one while an in-flight plan still references it is
     * unrecoverable, not a recompute. LRU keeps the active family's keys
-    * at the back of the eviction order.
-    *
-    * Locking: a miss builds and `count()`s its frames while holding the
-    * one global pool monitor, so a build's whole Spark job blocks every
-    * other caller of [[frames]] and [[release]], even for unrelated keys,
-    * until it finishes. Harmless for the single-threaded query loops that
-    * drive the pool; a caller resolving pooled frames from several threads
-    * (a streaming sink beside a query loop) serializes behind each build. */
-  def frames(key: Any)(build: => Seq[DataFrame]): Seq[DataFrame] =
-    // one REENTRANT monitor, not ConcurrentHashMap.computeIfAbsent: a
-    // builder may itself resolve pooled frames (Logit.pooledTrajectory
-    // builds from pooledFeatures; PqQueries.encoded from trained), and
-    // nested computeIfAbsent on one map throws IllegalStateException
-    // ("Recursive update") whenever the two keys land in the same bin —
-    // a nondeterministic landmine that fired in round 15. Intrinsic
-    // locks are reentrant, so nested frames() calls are safe; the pool
-    // is driven by single-threaded query loops, so one global monitor
-    // costs nothing.
-    pool.synchronized {
-      val hit = pool.get(key)
-      if (hit != null) {
-        // LRU touch: move the key to the back of the eviction order
-        if (order.remove(key)) order.add(key)
+    * at the back of the eviction order. */
+  def frames(key: Any)(build: => Seq[DataFrame]): Seq[DataFrame] = synchronized {
+    pool.remove(key) match {
+      case Some(hit) =>
+        pool(key) = hit
         hit
-      } else {
-        while (pool.size >= MaxEntries && !order.isEmpty) {
-          val dropped = pool.remove(order.poll())
-          if (dropped != null) dropped.foreach(_.unpersist(blocking = false))
+      case None =>
+        while (pool.size >= MaxEntries)
+          pool.remove(pool.head._1).foreach(_.foreach(_.unpersist(blocking = false)))
+        val built = timed(key) {
+          val fs = build.map(_.persist(StorageLevel.MEMORY_AND_DISK))
+          // Materialize eagerly so the recorded build seconds are the TRUE
+          // cost (plan construction + execution), not just plan-build time.
+          // Every pooled frame is fully scanned by its consumers anyway
+          // (that is why it is pooled), so the count() adds one cached
+          // read, never new work — and the cost still lands inside the
+          // FIRST consumer's timed region, exactly where it landed before.
+          fs.foreach(_.count())
+          fs
         }
-        val t0 = System.nanoTime()
-        val built = build.map(_.persist(StorageLevel.MEMORY_AND_DISK))
-        // Materialize eagerly so the recorded build seconds are the TRUE
-        // cost (plan construction + execution), not just plan-build time.
-        // Every pooled frame is fully scanned by its consumers anyway
-        // (that is why it is pooled), so the count() adds one cached read,
-        // never new work — and the cost still lands inside the FIRST
-        // consumer's timed region, exactly where it landed before.
-        built.foreach(_.count())
-        buildSecs.merge(tagOf(key), (System.nanoTime() - t0) / 1e9,
-          (a, b) => a + b)
-        pool.put(key, built)
-        order.add(key)
+        pool(key) = built
         built
-      }
     }
+  }
 
-  /** Unpersist and forget every pooled entry (non-blocking). Takes the
-    * same monitor as [[frames]] so a lifecycle sweep (end of a Verify/
-    * Bench run, a streaming sink's per-batch release) cannot clear or
+  /** The run-scoped directory for `key`: created in the temp dir as
+    * `graft_<tag>…` and written by `fill` on the first call, then
+    * returned as-is until [[release]] deletes it — the run-scope twin of
+    * [[OperatorCaches.deleteOnRelease]]. A `fill` that throws leaves no
+    * directory and no entry behind. */
+  def dir(key: Any)(fill: Path => Unit): Path = synchronized {
+    dirs.getOrElse(key, {
+      val d = timed(key) {
+        val d = Files.createTempDirectory(s"graft_${tagOf(key)}")
+        try fill(d)
+        catch { case e: Throwable => Convert.deleteRecursively(d); throw e }
+        d
+      }
+      dirs(key) = d
+      d
+    })
+  }
+
+  /** Unpersist (non-blocking) and forget every frame set, delete every
+    * directory, and clear the ledger. Takes the monitor, so a lifecycle
+    * sweep (end of a run, a streaming sink's per-batch release) cannot
     * unpersist frames another thread is resolving mid-plan — for
-    * localCheckpoint'ed entries that would be unrecoverable, not a
-    * recompute. NOTE the release is JVM-GLOBAL: concurrently running
-    * queries that share the pool must not interleave with it. */
-  def release(): Unit = pool.synchronized {
-    pool.values.forEach(_.foreach(_.unpersist(blocking = false)))
+    * localCheckpoint'ed entries that is unrecoverable, not a recompute.
+    * NOTE the release is JVM-GLOBAL: concurrently running queries that
+    * share the store must not interleave with it. */
+  def release(): Unit = synchronized {
+    pool.values.foreach(_.foreach(_.unpersist(blocking = false)))
     pool.clear()
-    order.clear()
+    dirs.values.foreach(Convert.deleteRecursively)
+    dirs.clear()
     buildSecs.clear()
   }
 
-  /** Currently pooled key count (test/monitoring hook). */
-  def pooledCount: Int = pool.synchronized { pool.size() }
+  /** Currently pooled frame-set key count (test/monitoring hook). */
+  def pooledCount: Int = synchronized { pool.size }
+
+  /** Currently pooled directories (test hook). */
+  private[graft] def pooledDirs: Set[Path] = synchronized { dirs.values.toSet }
 }

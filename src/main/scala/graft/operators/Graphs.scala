@@ -58,15 +58,6 @@ object Graphs {
       .min(BigInt(conf)).max(BigInt(1)).toInt
   }
 
-  /** The input edge frame, persisted for its fan-out — unless it already
-    * is (a FramePool-pooled frame): persistTracked would hand the pool's
-    * copy to the per-query release, silently unpersisting it for the
-    * rest of the run. */
-  private def persistInput(edges: DataFrame): DataFrame =
-    if (edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      OperatorCaches.persistTracked(edges)
-    else edges
-
   /** Degree-annotated, src-partitioned, persisted edge frame. `parts`
     * (from [[sizedParts]]) keeps the loop's per-iteration map stages at
     * data-sized task counts. */
@@ -93,7 +84,7 @@ object Graphs {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampNum >= 0 && dampNum <= 100, s"dampNum in [0,100], got $dampNum")
     require(checkpointEvery >= 1, s"checkpointEvery >= 1, got $checkpointEvery")
-    val e = persistInput(edges)
+    val e = OperatorCaches.persistTracked(edges)
     val parts = sizedParts(edges)
     val ed = edgesWithDeg(e, parts)
     val nodes = OperatorCaches.persistTracked(
@@ -132,7 +123,7 @@ object Graphs {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampNum >= 0 && dampNum <= 100, s"dampNum in [0,100], got $dampNum")
     require(checkpointEvery >= 1, s"checkpointEvery >= 1, got $checkpointEvery")
-    val e = persistInput(edges)
+    val e = OperatorCaches.persistTracked(edges)
     val parts = sizedParts(edges)
     val ed = edgesWithDeg(e, parts)
     val nodes = OperatorCaches.persistTracked(
@@ -213,7 +204,7 @@ object Graphs {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampNum >= 0 && dampNum <= 100, s"dampNum in [0,100], got $dampNum")
     require(checkpointEvery >= 1, s"checkpointEvery >= 1, got $checkpointEvery")
-    val e = persistInput(edges)
+    val e = OperatorCaches.persistTracked(edges)
     val parts = sizedParts(edges)
     val sw = e.groupBy(col("src")).agg(sum(col("w")).as("sw"))
     val ed = OperatorCaches.persistTracked(
@@ -262,7 +253,7 @@ object Graphs {
   def hits(edges: DataFrame, iterations: Int,
            scale: Long = 1000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = persistInput(edges)
+    val e = OperatorCaches.persistTracked(edges)
     var h = e.select(col("src")).distinct().withColumn("h", lit(scale))
     var a: DataFrame = null
     // normalization totals cross the DRIVER as one-row aggregates (the

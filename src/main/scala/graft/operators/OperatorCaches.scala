@@ -4,13 +4,15 @@ import java.nio.file.Path
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
-/** Registry of the SINGLE-QUERY intermediate frames graft operators
-  * persist ([[Dedup.simhashPairs]], [[Similarity.embeddingNearDupPairs]],
-  * [[CorpusStats.cmsHeavyHitters]]'s vocabulary, …). Cross-query
-  * artifacts (posting index, codebooks, shingle signatures) live in
-  * [[Postings]]/[[FramePool]] instead, which deliberately survive this
-  * registry's per-query release.
+/** The PER-QUERY cache scope: the single-query intermediate frames
+  * graft operators persist ([[Dedup.simhashPairs]],
+  * [[Similarity.embeddingNearDupPairs]],
+  * [[CorpusStats.cmsHeavyHitters]]'s vocabulary, …) and the scratch
+  * directories a query's result reads. The run scope is [[FramePool]],
+  * which survives this registry's per-query release. It owns only what
+  * it cached: a per-query release never unpersists a pooled frame.
   *
   * Spark's cache is keyed by analyzed plan, so repeated operator calls
   * over the SAME input reuse one entry — but a long-lived session running
@@ -38,12 +40,16 @@ object OperatorCaches {
   private val scratchDirs = new ConcurrentLinkedQueue[Path]()
 
   /** Persist `df` at the operator's storage level and remember it for
-    * [[release]]. */
-  private[graft] def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tracked.add(p)
-    p
-  }
+    * [[release]] — unless its plan is already cached, in which case `df`
+    * comes back unchanged and untracked: that cache belongs to whoever
+    * persisted it (a [[FramePool]] entry outlives this query). */
+  private[graft] def persistTracked(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      tracked.add(p)
+      p
+    }
 
   /** Remember `dir` for [[release]] to delete; returns it. */
   private[graft] def deleteOnRelease(dir: Path): Path = {

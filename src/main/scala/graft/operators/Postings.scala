@@ -1,14 +1,14 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Corpus-keyed pool of the whitespace-token posting frames every
+/** The corpus posting index — the whitespace-token posting frames every
   * retrieval-family operator starts from (BM25, sparse TF-IDF cosine,
-  * inverted-index stats, vocabulary coverage, corpus TF-IDF).
+  * inverted-index stats, vocabulary coverage, corpus TF-IDF) — and its
+  * parquet artifact format. This object holds no state: live indexes are
+  * [[FramePool]] entries.
   *
   * Rationale: q27/q95/q101/q132/q138/q145 each begin with the identical
   * tokenize→explode→(term, doc) count pipeline over the same documents
@@ -27,22 +27,16 @@ import org.apache.spark.storage.StorageLevel
   * `length(term) > 0` downstream, which commutes with the (term, doc)
   * grouping because empty tokens form their own groups.
   *
-  * Lifecycle: entries are persisted MEMORY_AND_DISK and deliberately NOT
-  * registered with [[OperatorCaches]] — that pool is released after every
-  * query (standalone timings for operator intermediates), while the
-  * posting index is meant to survive across queries like any index.
-  * MEMORY_AND_DISK spills to executor-local disk, so the bound is
-  * cluster disk, not RAM; at full 100 TB production scale the same
-  * amortization is realized by materializing these frames ONCE to a
-  * parquet index table and scanning it (the streaming
+  * Lifecycle: [[forCorpus]] pools the index in [[FramePool]] (tag
+  * `postings`), so it survives the per-query [[OperatorCaches.release]]
+  * like any index, shares the pool's LRU bound, and is dropped by
+  * `FramePool.release()` at end of run. MEMORY_AND_DISK spills to
+  * executor-local disk, so the bound is cluster disk, not RAM; at full
+  * 100 TB production scale the same amortization is realized by
+  * materializing these frames ONCE to a parquet index table ([[save]])
+  * and scanning it ([[load]]) — the streaming
   * `EventStreams.indexPartialsSink` + `servingTermStats` pair is exactly
-  * that shape, incrementally maintained) — the session pool is the
-  * right form for a long-lived interactive/bench session.
-  * [[release]] drops the pool explicitly (end of a bench/verify run, or a
-  * corpus switch); when a new corpus would exceed [[MaxCorpora]] live
-  * entries the OLDEST pooled corpus is evicted, so a long-lived session
-  * scanning many unrelated corpora cannot accrete persisted frames
-  * indefinitely while the hot working set stays pooled.
+  * that shape, incrementally maintained.
   */
 object Postings {
 
@@ -53,49 +47,39 @@ object Postings {
     *   - `nd`: 1 row (n_docs)
     *   - `tt`: 1 row (t_total) — corpus token count */
   final case class Index(tf: DataFrame, df: DataFrame, dl: DataFrame,
-                         nd: DataFrame, tt: DataFrame) {
-    private[Postings] def frames: Seq[DataFrame] = Seq(tf, df, dl, nd, tt)
-  }
+                         nd: DataFrame, tt: DataFrame)
 
-  /** Bound on simultaneously persisted corpora; crossing it evicts the
-    * OLDEST pooled corpus (insertion-order FIFO — a flush-all would also
-    * drop the corpus the in-flight query family is amortizing). */
-  val MaxCorpora = 4
-
-  private type Key = (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    String, String)
-  private val pool = new ConcurrentHashMap[Key, Index]()
-  private val order = new java.util.concurrent.ConcurrentLinkedQueue[Key]()
-
-  /** The posting index for `docs`, built and persisted on first request.
-    * Keyed by the CANONICALIZED analyzed plan itself (structural
-    * equality — exactly the comparison Spark's cache manager `sameResult`
-    * performs), so repeated `spark.read.parquet(samePath)` frames — each
-    * a fresh `LogicalRelation` — resolve to one entry, and two genuinely
+  /** The pooled posting index for `docs`, built and materialized on the
+    * first request of a run. Keyed by the CANONICALIZED analyzed plan
+    * itself (structural equality — exactly the comparison Spark's cache
+    * manager `sameResult` performs), so repeated
+    * `spark.read.parquet(samePath)` frames — each a fresh
+    * `LogicalRelation` — resolve to one entry, and two genuinely
     * different corpora can never collide (a 32-bit `semanticHash` key
     * could, silently serving the wrong corpus). */
   def forCorpus(docs: DataFrame, idCol: String, textCol: String): Index = {
-    val key = (docs.queryExecution.analyzed.canonicalized, idCol, textCol)
-    if (!pool.containsKey(key)) {
-      while (pool.size >= MaxCorpora && !order.isEmpty) {
-        val dropped = pool.remove(order.poll())
-        if (dropped != null) dropped.frames.foreach(_.unpersist(blocking = false))
-      }
-    }
-    pool.computeIfAbsent(key, _ => { order.add(key); build(docs, idCol, textCol) })
+    val key = ("postings", docs.queryExecution.analyzed.canonicalized, idCol, textCol)
+    val Seq(tf, df, dl, nd, tt) = FramePool.frames(key)(build(docs, idCol, textCol))
+    Index(tf, df, dl, nd, tt)
   }
 
-  private def build(docs: DataFrame, idCol: String, textCol: String): Index = {
+  /** The index frames in [[Index]] field order. The two corpus scalars
+    * are computed here and served as one-row LOCAL frames: consumers
+    * cross-join them, and a literal row carries no single-partition
+    * aggregate into every consumer's plan. tf and dl are persisted
+    * first so that computing t_total fills their caches. */
+  private def build(docs: DataFrame, idCol: String, textCol: String): Seq[DataFrame] = {
     def p(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
+    def scalar(agg: DataFrame): DataFrame =
+      agg.sparkSession.createDataFrame(agg.collectAsList(), agg.schema)
     val tf = p(docs
       .select(col(idCol).as("doc"), explode(split(col(textCol), " ")).as("term"))
       .groupBy(col("term"), col("doc"))
       .agg(count(lit(1)).as("tf")))
-    val df_ = p(tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
     val dl = p(tf.groupBy(col("doc")).agg(sum(col("tf")).as("dl")))
-    val nd = p(docs.agg(count(lit(1)).as("n_docs")))
-    val tt = p(dl.agg(sum(col("dl")).as("t_total")))
-    Index(tf, df_, dl, nd, tt)
+    Seq(tf, tf.groupBy(col("term")).agg(count(lit(1)).as("df")), dl,
+      scalar(docs.agg(count(lit(1)).as("n_docs"))),
+      scalar(dl.agg(sum(col("dl")).as("t_total"))))
   }
 
   /** Materialize an index as a parquet ARTIFACT — five plain parquet
@@ -165,14 +149,10 @@ object Postings {
       nd = spark.read.parquet(s"$dir/nd"),
       tt = spark.read.parquet(s"$dir/tt"))
 
-  /** Unpersist and forget every pooled index. Non-blocking; in-flight
-    * frames derived from a released index recompute from source. */
-  def release(): Unit = {
-    pool.values.forEach(ix => ix.frames.foreach(_.unpersist(blocking = false)))
-    pool.clear()
-    order.clear()
-  }
-
-  /** Currently pooled corpus count (test/monitoring hook). */
-  def pooledCount: Int = pool.size()
+  // Shims for perfbench, which predates the merge into FramePool; nothing
+  // under src/ may use them (ToolingSpec). `pooledCount` is 0 because
+  // indexes count in `FramePool.pooledCount`, and perfbench sums the two.
+  def release(): Unit = FramePool.release()
+  def pooledCount: Int = 0
+  val MaxCorpora = 4
 }

@@ -14,25 +14,18 @@ import Q._
   */
 object CurationQueries {
 
-  /** One served-index artifact per corpus dir per JVM for q177: the
-    * build-and-save runs once (memoized) instead of on every DataFrame
-    * construction — plan screening, golden sweeps, and bench warm+timed
-    * runs previously each rebuilt AND leaked a full index copy under a
-    * fresh temp dir. The one dir is removed at JVM exit. */
-  private val servedIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** One served-index artifact per corpus dir per run for q177 (a
+    * FramePool directory): the build-and-save runs once instead of on
+    * every DataFrame construction — plan screening, golden sweeps, and
+    * bench warm+timed runs would otherwise each rebuild a full index
+    * copy. */
   private def servedTextIndexDir(s: org.apache.spark.sql.SparkSession,
                                  d: String): String =
-    servedIndexDirs.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_text_index")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try graft.operators.Convert.deleteRecursively(dir)
-        catch { case _: Throwable => () }))
+    graft.operators.FramePool.dir(("text_index", d)) { dir =>
       graft.operators.Postings.save(
         graft.operators.Postings.forCorpus(
           t(s, d, "documents"), "doc_id", "text"), dir.toString)
-      dir.toString
-    })
+    }.toString
 
   /** The BM25 query set + oracle shared by q138 (live pooled index) and
     * q177 (served from the persisted parquet index artifact): both must

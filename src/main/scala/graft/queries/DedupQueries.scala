@@ -1929,21 +1929,15 @@ object DedupQueries {
         |ORDER BY affall.cluster_id""".stripMargin))
   )
 
-  /** One served dup-graph artifact per corpus dir per JVM for q203 —
-    * the q177 memoization pattern (build+save once, serve many). */
-  private val servedGraphDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** One served dup-graph artifact per corpus dir per run for q203 —
+    * the q177 pattern (a FramePool directory: build+save once, serve
+    * many). */
   private def servedDupGraphDir(s: org.apache.spark.sql.SparkSession,
                                 d: String): String =
-    servedGraphDirs.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_dup_graph")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try graft.operators.Convert.deleteRecursively(dir)
-        catch { case _: Throwable => () }))
+    graft.operators.FramePool.dir(("dup_graph", d)) { dir =>
       graft.operators.DupGraph.save(
         graft.operators.DupGraph.build(t(s, d, "documents"), "doc_id",
           "text", numBands = NumBands, minJaccard = 0.1, k = 3,
           rowsPerBand = RowsPerBand), dir.toString)
-      dir.toString
-    })
+    }.toString
 }

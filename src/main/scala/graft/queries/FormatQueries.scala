@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Convert
+import graft.operators.{Convert, OperatorCaches}
 import graft.sources.Scan
 import Q._
 
@@ -26,7 +26,8 @@ object FormatQueries {
     QuerySpec("q133_codec_roundtrip",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val tmp = Files.createTempDirectory("graft_codec").toString
+        val tmp = OperatorCaches.deleteOnRelease(
+          Files.createTempDirectory("graft_codec")).toString
         Convert.toParquet(docs, s"$tmp/zstd_pq", codec = "zstd")
         docs.write.option("compression", "gzip").option("header", "true")
           .mode("overwrite").csv(s"$tmp/gz_csv")
@@ -53,7 +54,8 @@ object FormatQueries {
     QuerySpec("q71_jsonl_roundtrip",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val tmp = Files.createTempDirectory("graft_jsonl").toString
+        val tmp = OperatorCaches.deleteOnRelease(
+          Files.createTempDirectory("graft_jsonl")).toString
         Convert.toJsonl(docs, s"$tmp/docs")
         Scan.jsonlWithSchema(s, docs.schema, s"$tmp/docs")
           .groupBy(col("lang"))
@@ -70,7 +72,8 @@ object FormatQueries {
     QuerySpec("q72_orc_roundtrip",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val tmp = Files.createTempDirectory("graft_orc").toString
+        val tmp = OperatorCaches.deleteOnRelease(
+          Files.createTempDirectory("graft_orc")).toString
         Convert.toOrc(docs, s"$tmp/docs")
         Scan.orc(s, s"$tmp/docs")
           .groupBy(col("source"))

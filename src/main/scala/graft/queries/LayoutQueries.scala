@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Layout
+import graft.operators.{FramePool, Layout}
 import Q._
 
 /** Physical-layout operators inside the correctness gate: the bucketed
@@ -16,13 +16,6 @@ import Q._
   * now fails the gate loudly instead of silently re-shuffling 10 TB a day.
   */
 object LayoutQueries {
-
-  /** One bucketed-layout write per corpus dir, memoized — "pay the
-    * shuffle once" is the entire point of bucketing, so the layout write
-    * is amortized across calls exactly like a real warehouse table; every
-    * call still runs (and plan-asserts) the exchange-free join itself. */
-  private val bucketedFor =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -46,8 +39,12 @@ object LayoutQueries {
           .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
         val tag = d.replaceAll("[^A-Za-z0-9]", "_") + "_" + md5tag
         val (ordersTbl, lineitemTbl) = (s"q112_orders_$tag", s"q112_lineitem_$tag")
-        bucketedFor.computeIfAbsent(d, _ => {
-          val tmp = Files.createTempDirectory("graft_bucketed").toString
+        // one bucketed-layout write per corpus dir per run (a FramePool
+        // directory) — "pay the shuffle once" is the entire point of
+        // bucketing, so the layout write is amortized across calls
+        // exactly like a real warehouse table; every call still runs (and
+        // plan-asserts) the exchange-free join itself
+        FramePool.dir(("bucketed", d)) { tmp =>
           val orders = t(s, d, "orders")
             .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
           val lineitem = t(s, d, "lineitem")
@@ -57,8 +54,7 @@ object LayoutQueries {
             Some(s"$tmp/orders_b"))
           Layout.writeBucketed(lineitem, lineitemTbl, "o_orderkey", 8,
             Some(s"$tmp/lineitem_b"))
-          tmp
-        })
+        }
         val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try {
           s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -136,7 +132,8 @@ object LayoutQueries {
     // changes the plan, never the answer.
     QuerySpec("q134_partition_pruning",
       (s, d) => {
-        val tmp = Files.createTempDirectory("graft_hive").toString
+        val tmp = graft.operators.OperatorCaches.deleteOnRelease(
+          Files.createTempDirectory("graft_hive")).toString
         val li = t(s, d, "lineitem")
           .select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"))
         graft.operators.Convert.toParquetPartitioned(

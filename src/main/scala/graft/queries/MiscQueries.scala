@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,21 +12,19 @@ import Q._
   */
 object MiscQueries {
 
-  /** q09's drifted-schema parquet sides, staged once per (session, sfDir) —
-    * the operator under test is the MERGE SCAN, not the fixture
-    * construction; re-writing the sides on every call would dominate its
-    * wall time (and a bench cell would time fixture setup, not the scan). */
-  private val mergeSides = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** q09's drifted-schema parquet sides, staged once per sfDir per run
+    * (a FramePool directory) — the operator under test is the MERGE SCAN,
+    * not the fixture construction; re-writing the sides on every call
+    * would dominate its wall time (and a bench cell would time fixture
+    * setup, not the scan). */
   private def stagedMergeSides(s: org.apache.spark.sql.SparkSession, d: String): String =
-    mergeSides.getOrElseUpdate(s.hashCode() + "|" + d, {
+    graft.operators.FramePool.dir(("merge", d)) { tmp =>
       val c = t(s, d, "customer")
-      val tmp = Files.createTempDirectory("graft_merge").toString
       c.select(col("c_custkey"), col("c_acctbal"))
         .write.mode("overwrite").parquet(s"$tmp/side_a")
       c.select(col("c_custkey"), col("c_mktsegment"))
         .write.mode("overwrite").parquet(s"$tmp/side_b")
-      tmp
-    })
+    }.toString
 
   val specs: Seq[QuerySpec] = Seq(
 

@@ -220,7 +220,8 @@ object SnapshotQueries {
     QuerySpec("q83_json_corrupt",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val tmp = Files.createTempDirectory("graft_badjson").toString
+        val tmp = graft.operators.OperatorCaches.deleteOnRelease(
+          Files.createTempDirectory("graft_badjson")).toString
         docs.select(
           when(pmod(col("doc_id"), lit(13)) === 0,
             concat(lit("{\"doc_id\": "), col("doc_id"), lit(", BROKEN")))

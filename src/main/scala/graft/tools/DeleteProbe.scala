@@ -69,7 +69,7 @@ object DeleteProbe {
       // ---- posting index: build + save the artifact (untimed; the
       // production index already exists when a takedown arrives)
       Postings.save(Postings.forCorpus(docs, "doc_id", "text"), s"$tmp/pix")
-      Postings.release()
+      graft.operators.FramePool.release()
       val ix = Postings.load(spark, s"$tmp/pix")
       val del = spark.range(500).select(col("id").as("doc_id"))
       out("postings_delta") = timed {
@@ -129,7 +129,6 @@ object DeleteProbe {
       }
       histFull.unpersist(blocking = false)
       graft.operators.OperatorCaches.release()
-      Postings.release()
       graft.operators.FramePool.release()
       // the replicated corpus + artifacts can be multiple GB per call
       // and /tmp may be RAM-backed — never leak them across the four

@@ -13,7 +13,7 @@ class InvertedIndexSpec extends SparkSpec {
 
   test("mergeTermStats over disjoint batches equals direct stats; threshold crossers survive") {
     graft.operators.FramePool.release()
-    graft.operators.Postings.release()
+    graft.operators.FramePool.release()
     val docs = Seq(
       (1L, "apple banana apple"),
       (2L, "apple cherry"),
@@ -30,7 +30,7 @@ class InvertedIndexSpec extends SparkSpec {
       minDf = 2L)
       .orderBy("term").collect().toSeq
     assert(merged === direct)
-    graft.operators.Postings.release()
+    graft.operators.FramePool.release()
   }
 
   test("near-identical twins pair with cosine ≈ 1; disjoint docs never pair") {

@@ -92,6 +92,7 @@ class LayoutSpec extends SparkSpec {
     fn(spark, "/root/testdata/sf0.01").collect() // second corpus registers its OWN tables
     val a2 = fn(spark, "/root/testdata/sf0.001").collect().toSeq
     assert(a2 === a1, "memoized layout served the wrong corpus after an sfDir switch")
+    graft.operators.FramePool.release() // deletes both layouts
   }
 
   test("compact shrinks a small-files directory without losing rows") {

@@ -2,27 +2,27 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Postings
+import graft.operators.{FramePool, Postings}
 
-/** The shared corpus posting index: one pooled entry per logical corpus
-  * (plan-keyed, so repeated reads of the same path unify), exact frame
-  * contents, and explicit release. */
+/** The shared corpus posting index: one FramePool entry per logical
+  * corpus (plan-keyed, so repeated reads of the same path unify), exact
+  * frame contents, and explicit release. */
 class PostingsSpec extends SparkSpec {
 
   test("repeated reads of the same corpus resolve to one pooled index") {
-    Postings.release()
+    FramePool.release()
     val a = Postings.forCorpus(
       spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text")
     val b = Postings.forCorpus(
       spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text")
-    assert(Postings.pooledCount === 1)
+    assert(FramePool.pooledCount === 1)
     assert(a.tf eq b.tf) // the identical persisted frame, not a rebuild
-    Postings.release()
-    assert(Postings.pooledCount === 0)
+    FramePool.release()
+    assert(FramePool.pooledCount === 0)
   }
 
   test("posting frames carry exact tf/df/dl/n/t over a known corpus") {
-    Postings.release()
+    FramePool.release()
     import spark.implicits._
     val docs = Seq(
       (1L, "a b a"),    // tf: a->2, b->1; dl=3
@@ -39,11 +39,11 @@ class PostingsSpec extends SparkSpec {
     assert(dl === Set((1L, 3L), (2L, 3L), (3L, 1L)))
     assert(ix.nd.head().getLong(0) === 3L)
     assert(ix.tt.head().getLong(0) === 7L)
-    Postings.release()
+    FramePool.release()
   }
 
   test("delete adjusts every frame incrementally, equal to a rebuild") {
-    Postings.release()
+    FramePool.release()
     import spark.implicits._
     val docs = Seq(
       (1L, "a b a"), (2L, "b c"), (3L, "a"), (4L, "c d d")
@@ -84,31 +84,45 @@ class PostingsSpec extends SparkSpec {
       === Set(("a", 2L), ("b", 1L)))
     assert(dup.nd.head().getLong(0) === 2L)
     assert(dup.tt.head().getLong(0) === 4L)
-    Postings.release()
+    FramePool.release()
   }
 
-  test("distinct corpora pool separately; overflow evicts only the oldest") {
-    Postings.release()
+  test("distinct corpora pool separately") {
+    FramePool.release()
     import spark.implicits._
     val base = Seq((1L, "x y")).toDF("doc_id", "text")
-    (0 until Postings.MaxCorpora).foreach { i =>
-      Postings.forCorpus(base.filter(col("doc_id") >= i), "doc_id", "text")
+    val corpora = (0 until 4).map(i => base.filter(col("doc_id") >= i))
+    val first = corpora.map(Postings.forCorpus(_, "doc_id", "text"))
+    assert(FramePool.pooledCount === corpora.size)
+    // each corpus resolves back to its own entry: no growth, no rebuild
+    corpora.zip(first).foreach { case (c, ix) =>
+      assert(Postings.forCorpus(c, "doc_id", "text").tf eq ix.tf)
     }
-    assert(Postings.pooledCount === Postings.MaxCorpora)
-    // one more distinct corpus evicts only the oldest entry
-    Postings.forCorpus(base.filter(col("doc_id") >= 99), "doc_id", "text")
-    assert(Postings.pooledCount === Postings.MaxCorpora)
-    // the most recent pre-overflow corpus is still pooled (same frame back)
-    val recent = Postings.forCorpus(
-      base.filter(col("doc_id") >= Postings.MaxCorpora - 1), "doc_id", "text")
-    assert(Postings.pooledCount === Postings.MaxCorpora) // no growth, no rebuild slot
-    assert(recent.tf eq Postings.forCorpus(
-      base.filter(col("doc_id") >= Postings.MaxCorpora - 1), "doc_id", "text").tf)
-    Postings.release()
+    assert(FramePool.pooledCount === corpora.size)
+    FramePool.release()
+  }
+
+  test("a posting index is one FramePool key, built eagerly under the postings tag") {
+    FramePool.release()
+    val ix = Postings.forCorpus(
+      spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text")
+    assert(FramePool.pooledCount === 1)
+    assert(FramePool.buildSeconds.keySet === Set("postings"))
+    assert(FramePool.buildSeconds("postings") > 0.0)
+    // materialized by the build, not by a consumer
+    Seq(ix.tf, ix.df, ix.dl, ix.nd, ix.tt).foreach { f =>
+      assert(f.queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+          r.cacheBuilder.isCachedColumnBuffersLoaded
+      } === Some(true))
+    }
+    FramePool.release()
+    assert(FramePool.pooledCount === 0)
+    assert(FramePool.buildSeconds.isEmpty)
   }
 
   test("BM25 served from a saved/loaded artifact is row-identical to the live index") {
-    Postings.release()
+    FramePool.release()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val qs = Seq("q1" -> Seq("spark", "join"), "q2" -> Seq("window", "scan"))
     val live = graft.operators.InvertedIndex
@@ -116,12 +130,13 @@ class PostingsSpec extends SparkSpec {
       .orderBy("q_id", "rank").collect().toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_pidx").toString
     Postings.save(Postings.forCorpus(docs, "doc_id", "text"), dir)
-    Postings.release() // serving must not lean on the session pool
+    FramePool.release() // serving must not lean on the session pool
     val served = graft.operators.InvertedIndex
       .bm25TopKFromIndex(Postings.load(spark, dir), qs, k = 5)
       .orderBy("q_id", "rank").collect().toSeq
     assert(served === live)
     assert(served.nonEmpty)
-    Postings.release()
+    FramePool.release()
+    graft.operators.Convert.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 }

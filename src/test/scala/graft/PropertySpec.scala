@@ -177,7 +177,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("Postings pool equals a from-scratch recompute of tf/df/dl") {
-    graft.operators.Postings.release()
+    graft.operators.FramePool.release()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val ix = graft.operators.Postings.forCorpus(docs, "doc_id", "text")
     val fresh = docs
@@ -187,11 +187,11 @@ class PropertySpec extends SparkSpec {
       fresh.orderBy("term", "doc").collect().toSeq)
     assert(ix.tt.head().getLong(0) ===
       fresh.agg(sum("tf")).head().getLong(0))
-    graft.operators.Postings.release()
+    graft.operators.FramePool.release()
   }
 
   test("mergeTermStats is split-invariant: any disjoint batching merges to the direct stats") {
-    graft.operators.Postings.release()
+    graft.operators.FramePool.release()
     val word3 = Gen.oneOf("ash", "birch", "cedar", "dale", "elm", "fern")
     val doc = Gen.choose(1, 10).flatMap(n => Gen.listOfN(n, word3))
     val docs = sample(doc, 60, 41L).zipWithIndex

@@ -20,13 +20,13 @@ class SweepSpec extends SparkSpec {
     }
     val throws: SparkEntry.Query = (_, _) => throw new IllegalStateException("boom")
     OperatorCaches.release()
-    // (query, tracked, pooled frames, pooled indexes) as each query starts
-    val seen = scala.collection.mutable.ArrayBuffer[(String, Int, Int, Int)]()
+    // (query, tracked, pooled keys) as each query starts; a posting index
+    // is one FramePool key
+    val seen = scala.collection.mutable.ArrayBuffer[(String, Int, Int)]()
     val results = SparkEntry.sweep(Seq(
       "persists" -> persists, "pools" -> pools, "throws" -> throws,
       "persists_again" -> persists)) { (name, fn) =>
-      seen += ((name, OperatorCaches.trackedCount, FramePool.pooledCount,
-        Postings.pooledCount))
+      seen += ((name, OperatorCaches.trackedCount, FramePool.pooledCount))
       fn(spark, sfDir).count()
     }
 
@@ -39,12 +39,10 @@ class SweepSpec extends SparkSpec {
     // no query starts with an earlier query's operator caches
     assert(seen.map(_._2).toSeq === Seq(0, 0, 0, 0))
     // the pooled entries built by "pools" survive into every later query
-    assert(seen.map(s => (s._1, s._3, s._4)).toSeq === Seq(
-      ("persists", 0, 0), ("pools", 0, 0), ("throws", 1, 1),
-      ("persists_again", 1, 1)))
+    assert(seen.map(s => (s._1, s._3)).toSeq === Seq(
+      ("persists", 0), ("pools", 0), ("throws", 2), ("persists_again", 2)))
     // ... and not past the sweep
     assert(OperatorCaches.trackedCount === 0)
     assert(FramePool.pooledCount === 0)
-    assert(Postings.pooledCount === 0)
   }
 }

@@ -35,7 +35,7 @@ class TextFunctionsSpec extends SparkSpec {
     val live = plan.split("InMemoryRelation")(0) // above the cached build
     val exchanges = "Exchange".r.findAllIn(live).length
     assert(exchanges <= 1, s"expected <=1 live exchange, had $exchanges:\n$plan")
-    graft.operators.Postings.release()
+    graft.operators.FramePool.release()
   }
 
   test("shingles builds ordered k-grams, deduplicated") {

@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tripwire against one-off tooling growing back: sessions come from
-  * `GraftSession` only, and every runnable main is one README documents. */
+  * `GraftSession` only, every runnable main is one README documents, and
+  * cross-query state lives in the two cache scopes (`OperatorCaches` per
+  * query, `FramePool` per run) rather than in private memos. */
 class ToolingSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(Path, String)] = {
@@ -39,5 +41,30 @@ class ToolingSpec extends AnyFunSuite {
       .map(_.group(1)).toSet
     assert(mains.diff(listed).isEmpty, s"mains missing from README Running: ${mains.diff(listed)}")
     assert(listed.diff(mains).isEmpty, s"README Running lists absent mains: ${listed.diff(mains)}")
+  }
+
+  private def sitesOf(needle: String): Seq[String] = mainSources.collect {
+    case (p, src) if src.contains(needle) => p.toString
+  }.sorted
+
+  test("no JVM-lifetime memo: computeIfAbsent and addShutdownHook appear nowhere under src/main") {
+    assert(sitesOf("computeIfAbsent") === Nil)
+    assert(sitesOf("addShutdownHook") === Nil)
+  }
+
+  test("StorageLevel.NONE appears only in OperatorCaches.scala") {
+    assert(sitesOf("StorageLevel.NONE") ===
+      Seq("src/main/scala/graft/operators/OperatorCaches.scala"))
+  }
+
+  test("the Postings pool shims have no caller under src/") {
+    val shims = """Postings\s*\.\s*(release|pooledCount|MaxCorpora)\b""".r
+    val s = Files.walk(Paths.get("src"))
+    val callers =
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        .filter(p => shims.findFirstIn(Files.readString(p)).isDefined)
+        .map(_.toString)
+      finally s.close()
+    assert(callers === Nil)
   }
 }
