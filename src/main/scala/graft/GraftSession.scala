@@ -8,6 +8,10 @@ import org.apache.spark.sql.SparkSession
   * posture. Everything here is a DEFAULT (`.config` before `getOrCreate`
   * loses to explicit submit-time conf), and the graft extensions
   * (functions + custom operators + optional rewrites) come along.
+  *
+  * There is one posture: [[local]] is [[builder]] at `local[n]` scale, and
+  * [[harness]] is [[local]] plus deployment settings. perfbench, the test
+  * suite, Bench, Verify and the tools all plan under it.
   */
 object GraftSession {
 
@@ -20,9 +24,10 @@ object GraftSession {
     *    (callers pass cores; AQE coalesces down from there);
     *  - 128 MiB file partitions (the parquet row-group sweet spot),
     *    [[FileOpenCostBytes]] for split packing, and vectorized reads;
-    *  - extensions: graft_dot / graft_shingle_hashes / graft_simhash /
-    *    graft_minhash in SQL + the TopKPerKey strategy and window-top-k
-    *    rewrite.
+    *  - Kryo serialization;
+    *  - extensions: the graft functions in SQL (the DataFrame helpers in
+    *    `GraftFunctions` need no registration) + the TopKPerKey strategy
+    *    and window-top-k rewrite.
     */
   def builder(appName: String, defaultParallelism: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -38,27 +43,32 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
 
-  /** `spark.sql.files.openCostInBytes` in both postures ([[builder]] and
-    * [[harness]]): 1 MiB instead of Spark's 4 MiB. The open cost is also
-    * the floor of a scan split's size, so at 4 MiB a 9 MB file of six
-    * equal row groups packs into three splits of 3, 2 and 1 groups on
-    * four cores; at 1 MiB it packs 2/1/2/1 and no core idles. Files under
-    * 1 MiB still scan as one split. */
+  /** `spark.sql.files.openCostInBytes`: 1 MiB instead of Spark's 4 MiB.
+    * The open cost is also the floor of a scan split's size, so at 4 MiB
+    * a 9 MB file of six equal row groups packs into three splits of 3, 2
+    * and 1 groups on four cores; at 1 MiB it packs 2/1/2/1 and no core
+    * idles. Files under 1 MiB still scan as one split. */
   val FileOpenCostBytes: Long = 1L << 20
 
-  /** Local development/test session with the same engine posture at
-    * `local[n]` scale. */
-  def local(appName: String, cores: Int): SparkSession = {
-    val spark = builder(appName, cores)
+  /** Local development/test session: the [[builder]] posture at
+    * `local[n]` scale, with `cores` shuffle partitions and no UI.
+    * perfbench and the test suite run on it. */
+  def local(appName: String, cores: Int): SparkSession =
+    start(localBuilder(appName, cores))
+
+  private def localBuilder(appName: String, cores: Int): SparkSession.Builder =
+    builder(appName, cores)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // getOrCreate may return a pre-existing session whose builder confs
-    // (incl. extensions) did NOT apply — make the FULL graft surface
-    // (functions, strategy, AND the window-top-k rewrite the builder
-    // advertises) present either way, so fresh and reused sessions plan
-    // identically.
+
+  /** getOrCreate may return a pre-existing session whose builder confs
+    * (incl. extensions) did NOT apply: make the FULL graft surface (SQL
+    * functions, strategy, AND the window-top-k rewrite the builder
+    * advertises) present either way, so fresh and reused sessions plan
+    * identically. */
+  private def start(b: SparkSession.Builder): SparkSession = {
+    val spark = b.getOrCreate()
     graft.plans.GraftFunctions.ensureRegistered(spark)
     graft.plans.TopKPerKeyPlans.ensureRewrite(spark) // includes the strategy
     spark
@@ -68,35 +78,20 @@ object GraftSession {
   def envCores(default: Int): Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(default)
 
-  /** The measurement-harness session Bench, Verify and the tools run on:
-    * `local[cores]` with `cores` shuffle partitions, UTC, no UI, log level
-    * WARN; long network/heartbeat timeouts, so I/O-stalled tasks on
-    * degraded storage cannot starve the heartbeat into a local-mode
-    * self-kill (exit 56); and shuffle/spill files on RAM-backed
+  /** The session Bench, Verify and the tools run on: [[local]]'s posture
+    * plus deployment settings only. Shuffle/spill files go to RAM-backed
     * `/dev/shm` when it exists, so shuffle I/O measures the engine, not
-    * the disk (conversion outputs still pay real output I/O). Scan splits
-    * pack with the shipped posture's [[FileOpenCostBytes]].
-    *
-    * It differs from the shipped [[builder]] posture: no Kryo, and no
-    * graft extensions at build time (queries register what they use).
-    * The builder's explicit AQE skew-join and 128 MiB file partitions are
-    * Spark defaults the harness gets anyway. Bench timings and
-    * `plan_golden.tsv` are recorded under this posture, so converging
-    * the two is a harness change that needs its own matched A/B. */
+    * the disk (conversion outputs still pay real output I/O); long
+    * network/heartbeat timeouts keep I/O-stalled tasks on degraded
+    * storage from starving the heartbeat into a local-mode self-kill
+    * (exit 56); and the log level is WARN. */
   def harness(appName: String, cores: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .appName(appName)
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = start(localBuilder(appName, cores)
       .config("spark.local.dir",
         if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
         else System.getProperty("java.io.tmpdir"))
       .config("spark.network.timeout", "1800s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.sql.files.openCostInBytes", FileOpenCostBytes.toString)
-      .getOrCreate()
+      .config("spark.executor.heartbeatInterval", "60s"))
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

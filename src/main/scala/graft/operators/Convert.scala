@@ -49,6 +49,14 @@ object Convert {
     * alone does not trigger quoting, and reads back as null. */
   val ReaderNullSentinel = "\\N"
 
+  /** The reader's pinned CSV options: [[graft.sources.Scan.csvWithSchema]]
+    * and [[csvToParquet]]'s schema inference read with these. */
+  val CsvReadOptions: Map[String, String] = Map(
+    "header" -> "true",
+    "timestampFormat" -> TimestampFormat,
+    "timestampNTZFormat" -> TimestampFormat,
+    "nullValue" -> ReaderNullSentinel)
+
   /** The sink's pinned CSV options (`maxRecordsPerFile` is per call). */
   val CsvOptions: Map[String, String] = Map(
     "header" -> "true",
@@ -137,10 +145,8 @@ object Convert {
     * read through [[graft.sources.Scan.csvWithSchema]], so a quoted `""`
     * comes back as an empty string and only a bare empty field as null. */
   def csvToParquet(spark: SparkSession, in: String, outDir: String): Unit = {
-    val schema = spark.read.option("header", "true").option("inferSchema", "true")
-      .option("timestampFormat", TimestampFormat)
-      .option("timestampNTZFormat", TimestampFormat)
-      .option("nullValue", ReaderNullSentinel).csv(in).schema
+    val schema = spark.read.options(CsvReadOptions).option("inferSchema", "true")
+      .csv(in).schema
     toParquet(graft.sources.Scan.csvWithSchema(spark, schema, in), outDir)
   }
 

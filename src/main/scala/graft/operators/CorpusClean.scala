@@ -28,7 +28,6 @@ object CorpusClean {
   def clean(docs: DataFrame, benchmark: DataFrame, idCol: String,
             textCol: String, minTokens: Int = 10, maxTokens: Int = 1000,
             k: Int = 8): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     // gated/deduped are multiply consumed but deliberately NOT persisted:
     // both recompute as a columnar scan + codegen'd filter/semi-join with
     // no shuffle, and caching full text rows costs ~3× more in cold
@@ -66,7 +65,6 @@ object CorpusClean {
   def funnel(docs: DataFrame, benchmark: DataFrame, idCol: String,
              textCol: String, minTokens: Int = 10, maxTokens: Int = 1000,
              k: Int = 8): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     val spark = docs.sparkSession
     import spark.implicits._
     val base = docs.select(col(idCol), col(textCol),

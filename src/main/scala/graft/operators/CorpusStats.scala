@@ -101,7 +101,6 @@ object CorpusStats {
     */
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
                       k: Int = 8): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     val withToks = docs.select(col(idCol), tokens(col(textCol)).as("t"))
     val posting = withToks
       .select(col(idCol), explode(graft.plans.GraftFunctions.shingleHashesNative(col("t"), k)).as("fp"))
@@ -241,7 +240,6 @@ object CorpusStats {
     */
   def dsirAffinity(docs: DataFrame, idCol: String, textCol: String,
                    isTarget: Column, buckets: Int = 4096): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     require(buckets > 0, "buckets must be positive")
     // one tokenization; hashed-bigram feature stream (positions, not set)
     val feats = docs
@@ -295,7 +293,6 @@ object CorpusStats {
     */
   def spanContamination(docs: DataFrame, idCol: String, textCol: String,
                         isBench: Column, k: Int = 8): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     val withT = docs.select(col(idCol), isBench.as("__b"),
       tokens(col(textCol)).as("t"))
     val spans = withT.select(col(idCol), col("__b"),
@@ -574,7 +571,6 @@ object CorpusStats {
     * one final IEEE division per source. */
   def sourceNovelty(docs: DataFrame, sourceCol: String, textCol: String,
                     k: Int = 8): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     val withT = docs.select(col(sourceCol).as("source"),
       tokens(col(textCol)).as("t"))
     val fps = withT
@@ -601,7 +597,6 @@ object CorpusStats {
     * source-keyed, never global. */
   def kmvSourceSketch(docs: DataFrame, srcCol: String, textCol: String,
                       k: Int = 3, sketchK: Int = 256): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     val sh = docs.filter(size(split(col(textCol), " ")) >= k)
       .select(col(srcCol).as("source"), explode(
         graft.plans.GraftFunctions.shingleHashesNative(

@@ -23,7 +23,6 @@ object Dedup {
     * remains in TextFunctions as the cross-checked reference); distinct
     * via the codegen'd array_distinct over the long array. */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs
       .filter(size(split(col(textCol), " ")) >= k)
       .select(col(idCol), split(col(textCol), " ").as("toks"))
@@ -41,7 +40,6 @@ object Dedup {
   def minhashSignatures(sets: DataFrame, idCol: String, numSigs: Int): DataFrame = {
     require(numSigs <= MinhashA.length,
       s"only ${MinhashA.length} hash-family parameter pairs are defined (got $numSigs)")
-    graft.plans.GraftFunctions.ensureRegistered(sets.sparkSession)
     sets
       .select(col(idCol),
         graft.plans.GraftFunctions.minhashNative(col("hset"), numSigs).as("__sig"))
@@ -1033,7 +1031,6 @@ object Dedup {
     * bit-identical to TextFunctions.normalizeText's regex form, which the
     * oracle mirrors — parity in NativeSketchSpec). */
   def exactNormalized(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol),
         graft.plans.GraftFunctions.normalizeNative(col(textCol)).as("__norm"))
       .groupBy(col("__norm"))
@@ -1048,7 +1045,6 @@ object Dedup {
     * hash array once per bit through interpreted lambdas; parity asserted
     * in NativeSketchSpec). */
   def simhashCodes(docs: DataFrame, idCol: String, textCol: String, bits: Int = 16): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol),
       graft.plans.GraftFunctions.simhashNative(
         split(col(textCol), " "), bits).as(s"simhash$bits"))

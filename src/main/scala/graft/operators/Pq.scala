@@ -45,7 +45,6 @@ object Pq {
     * same argmin composition as [[Similarity.ivfAssign]], so ties are
     * stable cross-engine. Returns (vec_id, sub, sv, code, dist). */
   def assign(sv: DataFrame, codebook: DataFrame): DataFrame = {
-    GraftFunctions.ensureRegistered(sv.sparkSession)
     val w = Window.partitionBy(col("vec_id"), col("sub"))
       .orderBy(col("dist"), col("code"))
     sv.join(broadcast(codebook), "sub")
@@ -105,7 +104,6 @@ object Pq {
     * m·k rows per query, computed once and broadcast into the search. */
   def adcLut(querySv: DataFrame, codebook: DataFrame,
              quantScale: Long = 1000000L): DataFrame = {
-    GraftFunctions.ensureRegistered(querySv.sparkSession)
     querySv.select(col("vec_id").as("q_id"), col("sub"), col("sv"))
       .join(broadcast(codebook), "sub")
       .select(col("q_id"), col("sub"), col("code"),

@@ -97,13 +97,9 @@ object Quality {
     * (no SQL engine can twin deflate, so it is deliberately outside the
     * oracle-gated query registry). */
   def compressionSignal(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // call_function with a Column argument (the house kernel pattern):
-    // robust for any column name — no SQL-string interpolation to break
-    // on names needing quoting
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol),
         octet_length(col(textCol)).as("raw_len"),
-        call_function("graft_deflate_len", col(textCol)).as("deflate_len"))
+        graft.plans.GraftFunctions.deflateLenNative(col(textCol)).as("deflate_len"))
       .withColumn("ratio",
         when(col("raw_len") > 0,
           col("deflate_len").cast("double") / col("raw_len").cast("double")))
@@ -280,7 +276,6 @@ object Quality {
   def bloomContaminatedDocs(training: DataFrame, benchmark: DataFrame,
                             idCol: String, textCol: String, k: Int = 8,
                             fpp: Double = 0.01): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(training.sparkSession)
     val th = Dedup.pooledShingleSets(training, idCol, textCol, k)
       .select(col(idCol), explode(col("hset")).as("h"))
     val (bh, bytes) = benchBloom(benchmark, idCol, textCol, k, fpp)
@@ -313,7 +308,6 @@ object Quality {
   def bloomPrefilterStats(training: DataFrame, benchmark: DataFrame,
                           idCol: String, textCol: String, k: Int = 8,
                           fpp: Double = 0.01): (Long, Long, Int) = {
-    graft.plans.GraftFunctions.ensureRegistered(training.sparkSession)
     val (_, bytes) = benchBloom(benchmark, idCol, textCol, k, fpp)
     val th = OperatorCaches.persistTracked(
       Dedup.pooledShingleSets(training, idCol, textCol, k)

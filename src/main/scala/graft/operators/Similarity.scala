@@ -452,7 +452,6 @@ object Similarity {
   }
 
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val w = Window.partitionBy(col("q_id")).orderBy(desc("cos"), col("neighbor_id"))
     corpus.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
@@ -472,7 +471,6 @@ object Similarity {
     */
   def rerankExact(cands: DataFrame, corpus: DataFrame, queries: DataFrame,
                   k: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val w = Window.partitionBy(col("q_id")).orderBy(desc("cos"), col("neighbor_id"))
     cands.select(col("q_id"), col("neighbor_id"))
       .join(corpus.select(col("vec_id").as("neighbor_id"), col("v")), "neighbor_id")
@@ -487,7 +485,6 @@ object Similarity {
     * on bucket, rank within bucket. */
   def lshTopK(corpus: DataFrame, numPlanes: Int, dim: Int, k: Int,
               queryPred: org.apache.spark.sql.Column): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val planes = gaussianPlanes(numPlanes, dim)
     val bucketed = corpus.withColumn("bucket", lshBucket(col("v"), planes))
     val q = bucketed.filter(queryPred)
@@ -572,7 +569,6 @@ object Similarity {
   def embeddingNearDupPairs(e: DataFrame, idCol: String, vecCol: String,
       blockCols: Seq[String], planes: Seq[Array[Double]], planesPerBand: Int,
       minCos: Double): DataFrame = {
-    GraftFunctions.ensureRegistered(e.sparkSession)
     val bands = srpBandProjection(e, idCol, vecCol, blockCols, planes, planesPerBand)
     val cond = (Seq(col("a.band") === col("b.band"), col("a.bkt") === col("b.bkt")) ++
       blockCols.map(c => col(s"a.$c") === col(s"b.$c")) :+
@@ -599,7 +595,6 @@ object Similarity {
       idCol: String, vecCol: String, blockCols: Seq[String],
       planes: Seq[Array[Double]], planesPerBand: Int,
       minCos: Double): DataFrame = {
-    GraftFunctions.ensureRegistered(newE.sparkSession)
     val a = srpBandProjection(newE, idCol, vecCol, blockCols, planes, planesPerBand)
     val b = srpBandProjection(corpus, idCol, vecCol, blockCols, planes, planesPerBand)
     val cond = (Seq(col("a.band") === col("b.band"), col("a.bkt") === col("b.bkt")) ++
@@ -626,7 +621,6 @@ object Similarity {
   def ivfSearch(corpus: DataFrame, centroids: DataFrame, k: Int,
                 queryPred: org.apache.spark.sql.Column,
                 nprobe: Int = 1): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     // single consumer (the cluster join's candidate side — the query side
     // computes its own nprobe assignment); no persist needed
     val assigned = ivfAssign(corpus, centroids)
@@ -651,7 +645,6 @@ object Similarity {
   /** IVF-style assignment: nearest of the broadcast centroids per vector
     * (same dot-product composition as any SQL oracle → stable argmin). */
   def ivfAssign(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("c_id"))
     corpus.crossJoin(broadcast(centroids))
       .select(col("vec_id"), col("v"), col("c_id"), l2sqNative(col("v"), col("cv")).as("dist"))

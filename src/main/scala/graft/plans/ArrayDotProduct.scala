@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftDatasetBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.functions.lit
 
 /** Native Catalyst dot product over two array<double> columns.
   *
@@ -193,9 +194,10 @@ object GraftFunctions {
     }
   }
 
-  /** Idempotently register graft functions into a live session (for
-    * sessions not launched with spark.sql.extensions=graft.plans.
-    * GraftExtensions, e.g. the driver-owned Verify/Bench sessions). */
+  /** Idempotently register graft functions into a live session's SQL
+    * function registry (for sessions not launched with
+    * spark.sql.extensions=graft.plans.GraftExtensions). The Column helpers
+    * below do not need it: they build their expressions directly. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val fr = spark.sessionState.functionRegistry
     functions.foreach { case (ident, info, builder) =>
@@ -203,45 +205,50 @@ object GraftFunctions {
     }
   }
 
-  /** Column-level native dot product (requires ensureRegistered /
-    * GraftExtensions on the session). */
-  def dotNative(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_dot", a, b)
+  private lazy val builders: Map[String, Seq[Expression] => Expression] =
+    functions.map { case (ident, _, builder) => ident.funcName -> builder }.toMap
 
-  /** Column-level native ordered shingle-hash sequence (requires
-    * ensureRegistered / GraftExtensions on the session). Bit-identical to
+  /** The Column form of SQL function `name`: the same builder (and so the
+    * same argument checks) the SQL registry uses, applied to the
+    * arguments' expressions. It needs no session state, so every helper
+    * below works on any session, registered or not. */
+  private def kernel(name: String, args: Column*): Column =
+    GraftDatasetBridge.column(builders(name)(args.map(GraftDatasetBridge.expr)))
+
+  /** Column-level native dot product (graft_dot). */
+  def dotNative(a: Column, b: Column): Column = kernel("graft_dot", a, b)
+
+  /** Column-level native ordered shingle-hash sequence. Bit-identical to
     * TextFunctions.shingleHashSeqFromTokens; one JVM loop per row. */
   def shingleHashesNative(tokens: Column, k: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_shingle_hashes",
-      tokens, org.apache.spark.sql.functions.lit(k))
+    kernel("graft_shingle_hashes", tokens, lit(k))
 
   /** Column-level native SimHash over a token array. Bit-identical to
     * TextFunctions.simhashFromHashes(tokenHashes(…), bits); one JVM loop
     * per row instead of `bits` interpreted filter passes. */
   def simhashNative(tokens: Column, bits: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_simhash",
-      tokens, org.apache.spark.sql.functions.lit(bits))
+    kernel("graft_simhash", tokens, lit(bits))
 
   /** Column-level native MinHash signature vector over a 60-bit hash-set
     * array. Bit-identical to the HOF formulation in
     * Dedup.minhashSignatures's reference path; null on empty sets. */
   def minhashNative(hashes: Column, numSigs: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_minhash",
-      hashes, org.apache.spark.sql.functions.lit(numSigs))
+    kernel("graft_minhash", hashes, lit(numSigs))
 
-  /** Column-level native text normalization (requires ensureRegistered /
-    * GraftExtensions on the session). Byte-identical to
+  /** Column-level native text normalization. Byte-identical to
     * TextFunctions.normalizeText's regex formulation (the oracle twin);
     * one byte pass + one allocation per row — see plans.NormalizeText. */
-  def normalizeNative(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_normalize", text)
+  def normalizeNative(text: Column): Column = kernel("graft_normalize", text)
 
-  /** Column-level native Unicode normalization (requires ensureRegistered /
-    * GraftExtensions). `form` ∈ NFC|NFD|NFKC|NFKD, baked at resolution.
-    * NFC matches DuckDB's nfc_normalize (both implement UAX #15). */
+  /** Column-level native Unicode normalization. `form` ∈
+    * NFC|NFD|NFKC|NFKD, baked at construction. NFC matches DuckDB's
+    * nfc_normalize (both implement UAX #15). */
   def unicodeNormalizeNative(text: Column, form: String = "NFC"): Column =
-    org.apache.spark.sql.functions.call_function("graft_unicode_normalize",
-      text, org.apache.spark.sql.functions.lit(form))
+    kernel("graft_unicode_normalize", text, lit(form))
+
+  /** Column-level DEFLATE-compressed byte length of a string (the
+    * compression-ratio quality signal; see plans.DeflateLength). */
+  def deflateLenNative(text: Column): Column = kernel("graft_deflate_len", text)
 
   /** Column-level Bloom-filter membership probe over a BIGINT column.
     * `filter` is the serialized sketch (normally a binary literal of a
@@ -249,8 +256,7 @@ object GraftFunctions {
     * runs Spark's codegen'd BloomFilterMightContain, so the filter rides
     * the task binary like any broadcast and deserializes once per task. */
   def mightContainNative(filter: Column, value: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_might_contain",
-      filter, value)
+    kernel("graft_might_contain", filter, value)
 }
 
 /** SparkSessionExtensions entry point: launch any session with

@@ -127,9 +127,10 @@ object TopKPerKeyStrategy extends SparkStrategy {
   * formulations are nondeterministic in the same way (row_number's tie
   * choice is partition-order-dependent too).
   *
-  * Opt-in per session: GraftExtensions injects it, or
+  * On in every `GraftSession` session: GraftExtensions injects it, and
   * [[TopKPerKeyPlans.ensureRewrite]] adds it to experimental
-  * extraOptimizations of a live session.
+  * extraOptimizations of a live session. `spark.sql.optimizer.
+  * excludedRules` switches off both copies.
   */
 object WindowTopKRewrite extends Rule[LogicalPlan] {
 
@@ -173,11 +174,6 @@ object TopKPerKeyPlans {
     if (!cur.contains(WindowTopKRewrite))
       spark.experimental.extraOptimizations = cur :+ WindowTopKRewrite
   }
-
-  /** Remove the rewrite from a live session (test/aux hook). */
-  def removeRewrite(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == WindowTopKRewrite)
 
   /** Idempotently add the strategy to a live session (for sessions not
     * launched with spark.sql.extensions=graft.plans.GraftExtensions). */

@@ -360,7 +360,6 @@ object CorpusQueries {
     QuerySpec("q188_span_provenance",
       (s, d) => {
         import graft.functions.TextFunctions.tokens
-        graft.plans.GraftFunctions.ensureRegistered(s)
         // persisted (tracked): the span stream feeds the top-10 aggregate
         // AND the provenance join — without it the corpus is tokenized
         // and md5'd twice. Hashing rides the native kernel (bit-identical
@@ -420,7 +419,6 @@ object CorpusQueries {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         import graft.functions.TextFunctions.tokens
-        graft.plans.GraftFunctions.ensureRegistered(s)
         val docs = t(s, d, "documents")
         val nd = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
         val sp = docs.select(col("doc_id"),

@@ -374,7 +374,6 @@ object CurationQueries {
     QuerySpec("q143_source_overlap",
       (s, d) => {
         import graft.functions.TextFunctions._
-        graft.plans.GraftFunctions.ensureRegistered(s)
         val srcs = t(s, d, "documents")
           .select(col("source"), tokens(col("text")).as("toks"))
           .select(col("source"), explode(

@@ -629,7 +629,6 @@ object DedupQueries {
     QuerySpec("q63_winnowing",
       (s, d) => {
         val w = 4
-        graft.plans.GraftFunctions.ensureRegistered(s)
         t(s, d, "documents")
           .filter(size(tokens(col("text"))) >= 3)
           .select(col("doc_id"), tokens(col("text")).as("toks"))
@@ -1021,7 +1020,6 @@ object DedupQueries {
     // statistics, not sampling); the per-source window is source-keyed.
     QuerySpec("q187_source_kmv_overlap",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
         val docs = t(s, d, "documents")
         val sh = docs.filter(size(split(col("text"), " ")) >= 3)
           .select(col("source"), explode(

@@ -416,7 +416,6 @@ object TextQueries {
     // same text MUST fingerprint identically.
     QuerySpec("q127_unicode_nfc",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
         t(s, d, "supplier")
           .select(col("s_suppkey"),
             // decomposed on purpose: "e" + U+0301 COMBINING ACUTE, written as an

@@ -115,11 +115,10 @@ object Scan {
 
   /** JSON-lines scan with a declared schema (schema inference over JSON
     * reads everything twice AND unions drifting types — never at scale). */
-  def jsonlWithSchema(spark: SparkSession, schema: StructType, path: String,
-                      timestampFormat: String = graft.operators.Convert.TimestampFormat): DataFrame =
+  def jsonlWithSchema(spark: SparkSession, schema: StructType, path: String): DataFrame =
     spark.read.schema(schema)
-      .option("timestampFormat", timestampFormat)
-      .option("timestampNTZFormat", timestampFormat)
+      .option("timestampFormat", graft.operators.Convert.TimestampFormat)
+      .option("timestampNTZFormat", graft.operators.Convert.TimestampFormat)
       .json(path)
 
   /** ORC scan — columnar like parquet: pruned columns and pushed
@@ -127,8 +126,9 @@ object Scan {
   def orc(spark: SparkSession, paths: String*): DataFrame =
     spark.read.orc(paths: _*)
 
-  /** CSV scan with a declared schema — the scalable path. The null token
-    * is [[graft.operators.Convert.ReaderNullSentinel]], so the writer's
+  /** CSV scan with a declared schema — the scalable path, read with
+    * [[graft.operators.Convert.CsvReadOptions]]. The null token is
+    * [[graft.operators.Convert.ReaderNullSentinel]], so the writer's
     * bare-empty nulls and quoted-`""` empty strings read back distinctly.
     * The sentinel is not out of band: a string cell that is exactly `\N`
     * is written unquoted and reads back as null, as with Spark's reader.
@@ -140,13 +140,9 @@ object Scan {
     * `multiLine = true` keeps Spark's `csv` source, which streams whole
     * files through univocity. */
   def csvWithSchema(spark: SparkSession, schema: StructType, path: String,
-                    timestampFormat: String = graft.operators.Convert.TimestampFormat,
                     multiLine: Boolean = false): DataFrame = {
     val reader = spark.read.schema(schema)
-      .option("header", "true")
-      .option("timestampFormat", timestampFormat)
-      .option("timestampNTZFormat", timestampFormat)
-      .option("nullValue", graft.operators.Convert.ReaderNullSentinel)
+      .options(graft.operators.Convert.CsvReadOptions)
     // multiLine parses quoted embedded newlines correctly but reads each
     // FILE as one unsplittable unit — at scale leave it off unless string
     // columns can actually contain line breaks (the writer quotes them;

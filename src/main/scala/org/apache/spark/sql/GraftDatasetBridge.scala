@@ -4,8 +4,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into the `private[sql]` Dataset constructor — the one sanctioned
   * way for an extension library to turn a custom LogicalPlan node into a
-  * user-facing DataFrame (the same door Spark's own connectors use). Kept
-  * to a single forwarding call; everything else lives in graft packages.
+  * user-facing DataFrame (the same door Spark's own connectors use), and
+  * the Column ↔ Expression converters. Each is a single forwarding call;
+  * everything else lives in graft packages.
   */
 object GraftDatasetBridge {
 
@@ -19,4 +20,9 @@ object GraftDatasetBridge {
     * tree (e.g. an actual catalyst SortOrder for `desc(...)`). */
   def expr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** Catalyst Expression → Column: how a graft kernel expression reaches
+    * DataFrame code without a function-registry lookup. */
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    classic.ExpressionUtils.column(e)
 }

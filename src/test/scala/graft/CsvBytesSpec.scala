@@ -490,8 +490,7 @@ class CsvBytesSpec extends SparkSpec {
   // ---- the reader against Spark's csv reader ----------------------------
 
   /** `Scan.csvWithSchema`'s options. */
-  private val ReadOptions = Map("header" -> "true", "timestampFormat" -> Pinned,
-    "timestampNTZFormat" -> Pinned, "nullValue" -> Convert.ReaderNullSentinel)
+  private val ReadOptions = Convert.CsvReadOptions
 
   private def byteRead(schema: StructType, path: String,
                        opts: Map[String, String] = ReadOptions): DataFrame =

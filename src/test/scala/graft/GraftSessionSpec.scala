@@ -7,29 +7,31 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.functions._
 
+import graft.plans.{GraftFunctions, TopKPerKeyStrategy, WindowTopKRewrite}
 import graft.sources.Scan
 
 /** Session bootstrap: the graft surface (SQL functions + custom
   * operators) is present on a GraftSession.local session even when
   * getOrCreate returned a pre-existing session whose builder confs could
-  * not apply; both postures pack scan splits with the same open cost. */
+  * not apply, and the harness is that same posture plus deployment
+  * settings. The suite's shared session is `GraftSession.local`, so each
+  * test here leaves it in that posture. */
 class GraftSessionSpec extends SparkSpec {
 
   private val OpenCost = "spark.sql.files.openCostInBytes"
 
-  // local() enables the window-top-k rewrite and applies the builder's
-  // runtime confs to the shared test session; detach the rewrite and
-  // restore the confs after each test so the session's planning stays
-  // vanilla for other suites
-  override def withFixture(test: NoArgTest) = {
-    val before = spark.conf.getAll
-    try super.withFixture(test)
-    finally {
-      graft.plans.TopKPerKeyPlans.removeRewrite(spark)
-      for ((k, v) <- spark.conf.getAll
-           if spark.conf.isModifiable(k) && !before.get(k).contains(v))
-        before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
+  test("harness carries the shipped posture (Kryo, graft functions, top-k strategy and rewrite)") {
+    val s = GraftSession.harness("graft-session-spec0", 4)
+    assert(s eq spark)
+    val kryo = classOf[org.apache.spark.serializer.KryoSerializer].getName
+    // the harness's own options (getOrCreate copies them into a reused
+    // session's conf) and the running context's conf
+    assert(s.conf.get("spark.serializer") === kryo)
+    assert(s.sparkContext.getConf.get("spark.serializer", "") === kryo)
+    val registry = s.sessionState.functionRegistry
+    assert(GraftFunctions.functions.map(_._1).filterNot(registry.functionExists) === Nil)
+    assert(s.experimental.extraStrategies.contains(TopKPerKeyStrategy))
+    assert(s.experimental.extraOptimizations.contains(WindowTopKRewrite))
   }
 
   test("local() session exposes graft functions and the top-k operator") {
@@ -101,7 +103,9 @@ class GraftSessionSpec extends SparkSpec {
     assert(s.conf.get(OpenCost) === "1048576")
     assert(split() === Seq(2, 1, 2, 1).map(_ * groupRows.toLong))
     // Spark's 4 MiB default packs the same file 3/2/1, leaving a core idle
-    spark.conf.unset(OpenCost)
-    assert(split() === Seq(3, 2, 1).map(_ * groupRows.toLong))
+    try {
+      spark.conf.unset(OpenCost)
+      assert(split() === Seq(3, 2, 1).map(_ * groupRows.toLong))
+    } finally spark.conf.set(OpenCost, GraftSession.FileOpenCostBytes.toString)
   }
 }

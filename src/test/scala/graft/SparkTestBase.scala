@@ -4,19 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session keeps the suite
-  * fast; scalatest runs suites sequentially in-process). */
+  * fast; scalatest runs suites sequentially in-process). It is the shipped
+  * posture, `GraftSession.local(_, 4)`, so specs plan what perfbench and
+  * the harness run; only the warehouse is a temp directory. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
     val warehouse = java.nio.file.Files.createTempDirectory("graft_warehouse")
     sys.addShutdownHook(graft.operators.Convert.deleteRecursively(warehouse))
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      .getOrCreate()
+    // a static conf: SparkConf reads `spark.*` system properties when the
+    // session's context is built
+    System.setProperty("spark.sql.warehouse.dir", warehouse.toString)
+    val s = GraftSession.local("graft-test", 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

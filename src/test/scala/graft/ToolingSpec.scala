@@ -7,21 +7,27 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tripwire against one-off tooling growing back: sessions come from
-  * `GraftSession` only, every runnable main is one README documents, and
+  * `GraftSession` only (the test suite's too), graft kernels reach
+  * DataFrame code without per-session registration, every runnable main is one README documents, and
   * cross-query state lives in the two cache scopes (`OperatorCaches` per
   * query, `FramePool` per run) rather than in private memos. */
 class ToolingSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[(Path, String)] = {
-    val s = Files.walk(Paths.get("src/main/scala"))
+  private def sources(root: String): Seq[(Path, String)] = {
+    val s = Files.walk(Paths.get(root))
     try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       .map(p => p -> Files.readString(p))
     finally s.close()
   }
 
+  private def mainSources: Seq[(Path, String)] = sources("src/main/scala")
+
   test("SparkSession.builder() appears only in GraftSession.scala") {
-    val sites = mainSources.collect {
-      case (p, src) if src.contains("SparkSession.builder()") => p.toString
+    // the test suite's session is GraftSession.local too; this file names
+    // the needle only to search for it
+    val self = Paths.get("src/test/scala/graft/ToolingSpec.scala")
+    val sites = (mainSources ++ sources("src/test/scala")).collect {
+      case (p, src) if p != self && src.contains("SparkSession.builder()") => p.toString
     }
     assert(sites === Seq("src/main/scala/graft/GraftSession.scala"))
   }
@@ -50,6 +56,16 @@ class ToolingSpec extends AnyFunSuite {
   test("no JVM-lifetime memo: computeIfAbsent and addShutdownHook appear nowhere under src/main") {
     assert(sitesOf("computeIfAbsent") === Nil)
     assert(sitesOf("addShutdownHook") === Nil)
+  }
+
+  test("graft kernels need no session state: ensureRegistered is called only by GraftSession") {
+    assert(sitesOf("ensureRegistered(") === Seq(
+      "src/main/scala/graft/GraftSession.scala",
+      "src/main/scala/graft/plans/ArrayDotProduct.scala"))
+    val defining = Files.readString(Paths.get("src/main/scala/graft/plans/ArrayDotProduct.scala"))
+    assert("ensureRegistered\\(".r.findAllMatchIn(defining).map(m =>
+      defining.substring(m.start - 4, m.end)).toList === List("def ensureRegistered("))
+    assert(sitesOf("call_function(\"graft_") === Nil)
   }
 
   test("StorageLevel.NONE appears only in OperatorCaches.scala") {

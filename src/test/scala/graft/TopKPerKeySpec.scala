@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.{TopKPerKeyExec, TopKPerKeyPlans}
+import graft.plans.{TopKPerKeyExec, TopKPerKeyPlans, WindowTopKRewrite}
 
 /** Custom per-key top-k physical operator: row-for-row equality with the
   * window formulation under a total order, two-phase plan shape (partial →
@@ -79,41 +79,42 @@ class TopKPerKeySpec extends SparkSpec {
     assert(top1.toSeq === Seq(1, 3)) // tie on value broken by ascending id
   }
 
+  private def hasTopK(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst { case t: graft.plans.TopKPerKey => t }.nonEmpty
+
   test("WindowTopKRewrite turns the row_number idiom into the native operator") {
-    try {
-      TopKPerKeyPlans.ensureRewrite(spark)
-      val df = sample
-      val idiom = windowTopK(df, "key", 3) // rank filtered then dropped
-      val optimized = idiom.queryExecution.optimizedPlan
-      assert(optimized.collectFirst { case t: graft.plans.TopKPerKey => t }.nonEmpty,
-        s"rewrite did not fire:\n$optimized")
-      // results equal the un-rewritten formulation
-      TopKPerKeyPlans.removeRewrite(spark)
-      val plain = windowTopK(df, "key", 3).orderBy("key", "id").collect()
-      TopKPerKeyPlans.ensureRewrite(spark)
-      val rewritten = windowTopK(df, "key", 3).orderBy("key", "id").collect()
-      assert(rewritten.toSeq === plain.toSeq)
+    val df = sample
+    val idiom = windowTopK(df, "key", 3) // rank filtered then dropped
+    assert(hasTopK(idiom), s"rewrite did not fire:\n${idiom.queryExecution.optimizedPlan}")
+    // results equal the un-rewritten formulation: the shared session
+    // carries the rewrite (the shipped posture), so exclude the rule for
+    // the plain run and restore it afterwards
+    val ExcludedRules = "spark.sql.optimizer.excludedRules"
+    val plain = try {
+      spark.conf.set(ExcludedRules, WindowTopKRewrite.ruleName)
+      val p = windowTopK(df, "key", 3)
+      assert(!hasTopK(p), s"excluded rule still fired:\n${p.queryExecution.optimizedPlan}")
+      p.orderBy("key", "id").collect()
+    } finally spark.conf.unset(ExcludedRules)
+    val rewritten = windowTopK(df, "key", 3)
+    assert(hasTopK(rewritten))
+    assert(rewritten.orderBy("key", "id").collect().toSeq === plain.toSeq)
 
-      // guard: a GLOBAL (un-partitioned) top-k must NOT rewrite — it
-      // belongs to TakeOrderedAndProject, and an empty clustering is not
-      // even constructible for the final phase
-      val wg = Window.orderBy(desc("value"), col("id"))
-      val globalTopK = df.withColumn("__rn", row_number().over(wg))
-        .filter(col("__rn") <= 3).drop("__rn")
-      assert(globalTopK.queryExecution.optimizedPlan
-        .collectFirst { case t: graft.plans.TopKPerKey => t }.isEmpty,
-        "must not rewrite a global top-k")
-      assert(globalTopK.count() === 3)
+    // guard: a GLOBAL (un-partitioned) top-k must NOT rewrite — it
+    // belongs to TakeOrderedAndProject, and an empty clustering is not
+    // even constructible for the final phase
+    val wg = Window.orderBy(desc("value"), col("id"))
+    val globalTopK = df.withColumn("__rn", row_number().over(wg))
+      .filter(col("__rn") <= 3).drop("__rn")
+    assert(!hasTopK(globalTopK), "must not rewrite a global top-k")
+    assert(globalTopK.count() === 3)
 
-      // guard: when the rank column IS used downstream, no rewrite
-      val w = Window.partitionBy(col("key")).orderBy(desc("value"), col("id"))
-      val keepsRank = df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= 3)
-        .select(col("key"), col("__rn"))
-      assert(keepsRank.queryExecution.optimizedPlan
-        .collectFirst { case t: graft.plans.TopKPerKey => t }.isEmpty,
-        "must not rewrite when rank values are referenced")
-    } finally TopKPerKeyPlans.removeRewrite(spark)
+    // guard: when the rank column IS used downstream, no rewrite
+    val w = Window.partitionBy(col("key")).orderBy(desc("value"), col("id"))
+    val keepsRank = df.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= 3)
+      .select(col("key"), col("__rn"))
+    assert(!hasTopK(keepsRank), "must not rewrite when rank values are referenced")
   }
 
   test("unknown key or order column fails fast with a clear message") {
