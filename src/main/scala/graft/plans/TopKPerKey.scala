@@ -127,10 +127,10 @@ object TopKPerKeyStrategy extends SparkStrategy {
   * formulations are nondeterministic in the same way (row_number's tie
   * choice is partition-order-dependent too).
   *
-  * On in every `GraftSession` session: GraftExtensions injects it, and
-  * [[TopKPerKeyPlans.ensureRewrite]] adds it to experimental
-  * extraOptimizations of a live session. `spark.sql.optimizer.
-  * excludedRules` switches off both copies.
+  * On in every `GraftSession` session, once: GraftExtensions injects it,
+  * and [[TopKPerKeyPlans.ensureRewrite]] adds it to experimental
+  * extraOptimizations of a live session that lacks it.
+  * `spark.sql.optimizer.excludedRules` switches it off.
   */
 object WindowTopKRewrite extends Rule[LogicalPlan] {
 
@@ -166,22 +166,20 @@ object WindowTopKRewrite extends Rule[LogicalPlan] {
 
 object TopKPerKeyPlans {
 
-  /** Idempotently add the window-top-k rewrite (and the strategy it
-    * plans into) to a live session. */
+  /** Add the window-top-k rewrite (and the strategy it plans into) to a
+    * live session whose optimizer does not run it yet: one built without
+    * `spark.sql.extensions=graft.plans.GraftExtensions`. A session the
+    * extensions built keeps its one injected copy. */
   def ensureRewrite(spark: SparkSession): Unit = {
     ensureStrategy(spark)
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(WindowTopKRewrite))
-      spark.experimental.extraOptimizations = cur :+ WindowTopKRewrite
+    if (!spark.sessionState.optimizer.defaultBatches.exists(_.rules.contains(WindowTopKRewrite)))
+      spark.experimental.extraOptimizations :+= WindowTopKRewrite
   }
 
-  /** Idempotently add the strategy to a live session (for sessions not
-    * launched with spark.sql.extensions=graft.plans.GraftExtensions). */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies = cur :+ TopKPerKeyStrategy
-  }
+  /** Add the strategy to a live session whose planner lacks it. */
+  def ensureStrategy(spark: SparkSession): Unit =
+    if (!spark.sessionState.planner.strategies.contains(TopKPerKeyStrategy))
+      spark.experimental.extraStrategies :+= TopKPerKeyStrategy
 
   /** Top-k rows per key group, ordered by `order` (pass `desc`/`asc`
     * Columns; a bare column sorts ascending). The order must be total for

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -13,7 +14,9 @@ import graft.{GraftSession, SparkEntry}
   * [[SparkEntry.sweep]] (the second run is pool-warm) into Spark's `noop`
   * sink, and reports the min of the two runs with the number of Spark
   * jobs that run started ([[JobCounter]]; table reads, pool builds and
-  * the sink's own job all count).
+  * the sink's own job all count) and the number of classes Spark
+  * compiled for it (the `CodegenMetrics` compile count's delta; 0 when
+  * every plan shape it ran is in the generated-class cache).
   *
   * `--scale N` also times each query on an N× shifted-key replica and
   * prints the ratio: near-linear ratios are the evidence that operator
@@ -47,29 +50,33 @@ object Profile {
     val big = scale.map(n => replicate(spark, base, n))
     val jobs = new JobCounter(spark)
 
-    /** (seconds, jobs) of the faster of two runs of `name` on `dir`, or
-      * the first failure. */
-    def time(name: String, dir: String): Either[Throwable, (Double, Int)] = {
-      val (errors, runs) = SparkEntry.sweep(Seq.fill(2)(name -> registry(name))) {
-        (_, fn) => jobs.count {
+    def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+    /** (seconds, jobs, classes compiled) of the faster of two runs of
+      * `name` on `dir`, or the first failure. */
+    def time(name: String, dir: String): Either[Throwable, (Double, Int, Long)] = {
+      val (errors, runs) = SparkEntry.sweep(Seq.fill(2)(name -> registry(name))) { (_, fn) =>
+        val before = compiled
+        val (s, j) = jobs.count {
           val t0 = System.nanoTime()
           fn(spark, dir).write.mode("overwrite").format("noop").save()
           (System.nanoTime() - t0) / 1e9
         }
+        (s, j, compiled - before)
       }.map(_._2).partitionMap(identity)
       errors.headOption.toLeft(runs.minBy(_._1))
     }
 
     val dirs = base +: big.toSeq
-    println(f"${"query"}%-32s ${Paths.get(base).getFileName}%8s ${"jobs"}%5s" +
-      scale.fold("")(n => f" ${s"x$n"}%8s ${"jobs"}%5s ratio"))
+    println(f"${"query"}%-32s ${Paths.get(base).getFileName}%8s ${"jobs"}%5s ${"compiled"}%8s" +
+      scale.fold("")(n => f" ${s"x$n"}%8s ${"jobs"}%5s ${"compiled"}%8s ratio"))
     val failed = names.filter { n =>
       dirs.map(time(n, _)).partitionMap(identity) match {
         case (e +: _, _) =>
           println(s"FAILED $n: ${e.getMessage}")
           true
         case (_, runs) =>
-          println(f"$n%-32s " + runs.map { case (s, j) => f"$s%8.3f $j%5d" }.mkString(" ") +
+          println(f"$n%-32s " + runs.map { case (s, j, c) => f"$s%8.3f $j%5d $c%8d" }.mkString(" ") +
             runs.lift(1).fold("")(r2 => f" ${r2._1 / runs(0)._1}%5.2f"))
           false
       }

@@ -5,9 +5,11 @@ import java.nio.file.Files
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{GraftFunctions, TopKPerKeyStrategy, WindowTopKRewrite}
+import graft.plans.{GraftFunctions, TopKPerKeyPlans, TopKPerKeyStrategy, WindowTopKRewrite}
 import graft.sources.Scan
 
 /** Session bootstrap: the graft surface (SQL functions + custom
@@ -20,6 +22,17 @@ class GraftSessionSpec extends SparkSpec {
 
   private val OpenCost = "spark.sql.files.openCostInBytes"
 
+  /** The optimizer batches of `s` that run the window-top-k rewrite, one
+    * entry per copy, and how many copies of the top-k strategy its planner
+    * holds. */
+  private def topKCopies(s: SparkSession): (Seq[String], Int) = (
+    s.sessionState.optimizer.batches.flatMap(b => b.rules.filter(_ == WindowTopKRewrite).map(_ => b.name)),
+    s.sessionState.planner.strategies.count(_ == TopKPerKeyStrategy))
+
+  /** Where Spark runs an injected operator-optimization rule. */
+  private val Injected = (Seq("Operator Optimization before Inferring Filters",
+    "Operator Optimization after Inferring Filters"), 1)
+
   test("harness carries the shipped posture (Kryo, graft functions, top-k strategy and rewrite)") {
     val s = GraftSession.harness("graft-session-spec0", 4)
     assert(s eq spark)
@@ -30,14 +43,12 @@ class GraftSessionSpec extends SparkSpec {
     assert(s.sparkContext.getConf.get("spark.serializer", "") === kryo)
     val registry = s.sessionState.functionRegistry
     assert(GraftFunctions.functions.map(_._1).filterNot(registry.functionExists) === Nil)
-    assert(s.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-    assert(s.experimental.extraOptimizations.contains(WindowTopKRewrite))
+    assert(topKCopies(s) === Injected)
   }
 
   test("local() session exposes graft functions and the top-k operator") {
     val s = GraftSession.local("graft-session-spec", 4)
-    assert(s.experimental.extraOptimizations
-      .contains(graft.plans.WindowTopKRewrite))
+    assert(topKCopies(s) === Injected)
     // functions callable from SQL
     val dot = s.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")
       .head().getDouble(0)
@@ -107,5 +118,45 @@ class GraftSessionSpec extends SparkSpec {
       spark.conf.unset(OpenCost)
       assert(split() === Seq(3, 2, 1).map(_ * groupRows.toLong))
     } finally spark.conf.set(OpenCost, GraftSession.FileOpenCostBytes.toString)
+  }
+
+  test("the extensions' rewrite and strategy plan once; a session without them gets one copy each") {
+    val s = GraftSession.local("graft-session-spec6", 4)
+    assert(topKCopies(s) === Injected)
+    assert(s.experimental.extraOptimizations.isEmpty && s.experimental.extraStrategies.isEmpty)
+    // a session on the same context built with no `spark.sql.extensions`
+    // (the constructor is private to Spark; every public path applies
+    // the context's extensions)
+    val classic = classOf[org.apache.spark.sql.classic.SparkSession]
+    val bare = classic.getDeclaredConstructors.find(_.getParameterCount == 6).get
+      .newInstance(spark.sparkContext, Some(classic.cast(spark).sharedState), None,
+        new SparkSessionExtensions, Map.empty, Map.empty).asInstanceOf[SparkSession]
+    assert(topKCopies(bare) === (Nil, 0))
+    TopKPerKeyPlans.ensureRewrite(bare)
+    TopKPerKeyPlans.ensureRewrite(bare)
+    assert(topKCopies(bare) === (Seq("User Provided Optimizers"), 1))
+    import bare.implicits._
+    val df = Seq((1, "a", 2.0), (2, "a", 1.0), (3, "b", 9.0)).toDF("id", "k", "v")
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy(desc("v"))
+    val top = df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+    assert(top.queryExecution.optimizedPlan.collectFirst { case t: graft.plans.TopKPerKey => t }.nonEmpty)
+    assert(top.orderBy("k").select("id").as[Int].collect().toSeq === Seq(1, 3))
+  }
+
+  test("a compiled plan shape stays cached while 200 other shapes compile") {
+    assert(spark.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") ===
+      GraftSession.CodegenCacheEntries.toString)
+    def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // the literal is inlined into the generated code, so each value is a
+    // distinct class
+    def run(i: Int): Unit = assert(
+      spark.range(4).select((col("id") * lit(1000003L + i)).as("x")).collect().length === 4)
+    run(0)
+    val before = compiled
+    (1 to 200).foreach(run)
+    val afterOthers = compiled
+    assert(afterOthers - before >= 200, "each literal must compile its own class")
+    run(0)
+    assert(compiled === afterOthers, "the first shape was evicted and recompiled")
   }
 }
