@@ -58,9 +58,9 @@ object GraftSession {
     * static (one per JVM, sized when the first class compiles) and LRU,
     * so at 100 every pass over the registry recompiles what the previous
     * pass compiled. One sweep of all 280 queries at sf0.001 compiles
-    * 4 198 distinct classes; 8192 is the next power of two. A second
-    * sweep then compiles 277 classes, not 6 791, and the kept classes
-    * cost about 35 MB of metaspace and class space (4-vCPU box,
+    * 4 209 distinct classes; 8192 is the next power of two. A second
+    * sweep then compiles 271 classes, not 7 450, and the kept classes
+    * cost about 40 MB of metaspace and class space (4-vCPU box,
     * PERF_NOTES "Generated-class cache"). */
   val CodegenCacheEntries: Int = 8192
 
