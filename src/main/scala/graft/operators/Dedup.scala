@@ -442,26 +442,21 @@ object Dedup {
     * metric needed to block, which makes SNM the cheap complement to LSH
     * when duplicates share prefixes (crawl snapshots, versioned docs).
     *
-    * Scale shape: the global rank is computed distributed — range-
-    * repartition on the (bounded-width!) sort key, per-partition
-    * enumeration, plus a P-entry cumulative-offset map from the driver
-    * (partition COUNTS cross the driver, never rows). The windowed
-    * self-join is an equi-join on ⌊rank/window⌋ block keys (each left row
-    * emits its own and the next block key, so cross-block neighbors meet);
-    * every block holds ≤ window rows, so no bucket is ever hot. Both
+    * Scale shape: the global rank is [[PrefixSum.rank]] — range-
+    * repartition on the (bounded-width!) sort key, in-partition sort, plus
+    * a P-entry offset map from the driver (partition COUNTS cross the
+    * driver, never rows). The windowed self-join is an equi-join on
+    * ⌊rank/window⌋ block keys (each left row emits its own and the next
+    * block key, so cross-block neighbors meet); every block holds ≤ window
+    * rows, so no bucket is ever hot. Both
     * shuffles move only (id, 64-char key) — the text stays columnar at
     * the scan.
     */
   def sortedNeighborPairs(docs: DataFrame, idCol: String, textCol: String,
                           window: Int = 6, minJaccard: Double = 0.1,
-                          k: Int = 3, keyLen: Int = 64,
-                          rangePartitions: Int = 0): DataFrame = {
+                          k: Int = 3, keyLen: Int = 64): DataFrame = {
     require(window >= 2, s"window must be >= 2 (got $window)")
-    val spark = docs.sparkSession
     val sets = pooledShingleSets(docs, idCol, textCol, k)
-    val parts =
-      if (rangePartitions > 0) rangePartitions
-      else spark.sessionState.conf.numShufflePartitions
     // The sort key normalizes only a bounded RAW prefix (4×keyLen chars —
     // headroom for punctuation the normalizer strips) before truncating to
     // keyLen: O(1) regex work per row instead of O(doc length), which is
@@ -473,21 +468,7 @@ object Dedup {
         substring(col(textCol), 1, keyLen * 4)), 1, keyLen).as("__sk"))
     // (sk, id) is a total order (ids unique), so the global rank below is
     // well-defined and partitioning-invariant.
-    val ranged = OperatorCaches.persistTracked(
-      keyed.repartitionByRange(parts, col("__sk"), col(idCol))
-        .withColumn("__pid", spark_partition_id()))
-    val counts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val sortedPids = counts.keys.toSeq.sorted
-    val offsets: Map[Int, Long] =
-      sortedPids.zip(sortedPids.scanLeft(0L)((a, p) => a + counts(p))).toMap
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid")).orderBy(col("__sk"), col(idCol))
-    val ranked = ranged
-      .withColumn("__rn",
-        row_number().over(w).cast("long") +
-          element_at(typedLit(offsets), col("__pid")))
-      .select(col(idCol), col("__rn"))
+    val (ranked, _) = PrefixSum.rank(keyed, Seq(col("__sk"), col(idCol)), "__rn")
     val blk = (rn: Column) => floor(rn / lit(window)).cast("long")
     val left = ranked.select(col(idCol).as("a_id"), col("__rn").as("a_rn"),
         explode(array(blk(col("__rn")), blk(col("__rn")) + 1)).as("__blk"))
@@ -726,45 +707,14 @@ object Dedup {
         case Some(up) if cnt(pct) == cnt(prevPct) => up
         case None => dupClusters(e)
         case Some(up) =>
-          // contract: node → its stricter-level label (self if unlabeled)
-          val lab = up.select(col("doc_id"), col("cluster_id").as("lab"))
-          val mapped = e
-            .join(lab.select(col("doc_id").as("a_id"), col("lab").as("la")),
-              Seq("a_id"), "left")
-            .join(lab.select(col("doc_id").as("b_id"), col("lab").as("lb")),
-              Seq("b_id"), "left")
-            .select(coalesce(col("la"), col("a_id")).as("sa"),
-              coalesce(col("lb"), col("b_id")).as("sb"))
-          val contracted = OperatorCaches.persistTracked(
-            mapped.filter(col("sa") =!= col("sb"))
-              .select(col("sa").as("a_id"), col("sb").as("b_id")))
-          // Empty contracted graph ⟹ every edge at this level already has
-          // both endpoints labeled AND sharing a label (an unlabeled
-          // endpoint maps to itself, so any edge touching one survives
-          // contraction) ⟹ node set and components are UNCHANGED from
-          // the stricter level — reuse its frame outright. This is the
-          // common case when the threshold ladder out-runs the corpus's
-          // similarity floor, and it costs one count instead of a CC run
-          // plus three composition joins.
-          if (contracted.isEmpty) up
-          else {
-            val merged = dupClusters(contracted) // supernode → merged label
-              .select(col("doc_id").as("sn"), col("cluster_id").as("mlab"))
-            // nodes at this level = every endpoint of e; label = the merge
-            // of its supernode when the contracted CC touched it, else the
-            // supernode label itself
-            val nodes = e.select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
-              .distinct()
-            nodes
-              .join(lab, Seq("doc_id"), "left")
-              .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("sn"))
-              .join(merged, Seq("sn"), "left")
-              .select(col("doc_id"),
-                coalesce(col("mlab"), col("sn")).as("cluster_id"))
-              // lazy: the caller's first aggregation (or the next level's
-              // mapping join) materializes it
-              .localCheckpoint(eager = false)
-          }
+          // nodes at this level = every endpoint of e. An unchanged
+          // labeling is the common case once the threshold ladder out-runs
+          // the corpus's similarity floor. Merged labels are lazy: the
+          // caller's first aggregation (or the next level's mapping join)
+          // materializes them.
+          val nodes = e.select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
+            .distinct()
+          contractMerge(up, e, nodes).fold(up)(_.localCheckpoint(eager = false))
       }
       prev = Some(clu)
       prevPct = pct
@@ -795,32 +745,49 @@ object Dedup {
     prev match {
       case None => dupClusters(e)
       case Some(up) =>
-        val lab = up.select(col("doc_id"), col("cluster_id").as("lab"))
-        val mapped = e
-          .join(lab.select(col("doc_id").as("a_id"), col("lab").as("la")),
-            Seq("a_id"), "left")
-          .join(lab.select(col("doc_id").as("b_id"), col("lab").as("lb")),
-            Seq("b_id"), "left")
-          .select(coalesce(col("la"), col("a_id")).as("sa"),
-            coalesce(col("lb"), col("b_id")).as("sb"))
-        val contracted = OperatorCaches.persistTracked(
-          mapped.filter(col("sa") =!= col("sb"))
-            .select(col("sa").as("a_id"), col("sb").as("b_id")))
-        if (contracted.isEmpty) up
-        else {
-          val merged = dupClusters(contracted)
-            .select(col("doc_id").as("sn"), col("cluster_id").as("mlab"))
-          val nodes = up.select(col("doc_id"))
-            .union(e.select(explode(array(col("a_id"), col("b_id")))
-              .as("doc_id")))
-            .distinct()
-          nodes
-            .join(lab, Seq("doc_id"), "left")
-            .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("sn"))
-            .join(merged, Seq("sn"), "left")
-            .select(col("doc_id"),
-              coalesce(col("mlab"), col("sn")).as("cluster_id"))
-        }
+        val nodes = up.select(col("doc_id"))
+          .union(e.select(explode(array(col("a_id"), col("b_id")))
+            .as("doc_id")))
+          .distinct()
+        contractMerge(up, e, nodes).getOrElse(up)
+    }
+  }
+
+  /** The contraction step shared by [[percolationClusters]] and
+    * [[incrementalClusters]]: map each endpoint of `e` through the
+    * labeling `up` (an unlabeled endpoint maps to itself), drop edges
+    * within one label, run [[dupClusters]] on the contracted graph, and
+    * compose the merged labels back over `nodes`.
+    *
+    * None when the contracted graph is empty: every edge then has both
+    * endpoints labeled AND sharing a label (an unlabeled endpoint maps to
+    * itself, so any edge touching one survives contraction), so node set
+    * and components are UNCHANGED and the caller reuses `up` outright —
+    * one count instead of a CC run plus three composition joins. */
+  private def contractMerge(up: DataFrame, e: DataFrame,
+                            nodes: DataFrame): Option[DataFrame] = {
+    val lab = up.select(col("doc_id"), col("cluster_id").as("lab"))
+    val mapped = e
+      .join(lab.select(col("doc_id").as("a_id"), col("lab").as("la")),
+        Seq("a_id"), "left")
+      .join(lab.select(col("doc_id").as("b_id"), col("lab").as("lb")),
+        Seq("b_id"), "left")
+      .select(coalesce(col("la"), col("a_id")).as("sa"),
+        coalesce(col("lb"), col("b_id")).as("sb"))
+    val contracted = OperatorCaches.persistTracked(
+      mapped.filter(col("sa") =!= col("sb"))
+        .select(col("sa").as("a_id"), col("sb").as("b_id")))
+    Option.when(!contracted.isEmpty) {
+      val merged = dupClusters(contracted) // supernode → merged label
+        .select(col("doc_id").as("sn"), col("cluster_id").as("mlab"))
+      // label = the merge of its supernode when the contracted CC touched
+      // it, else the supernode label itself
+      nodes
+        .join(lab, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("sn"))
+        .join(merged, Seq("sn"), "left")
+        .select(col("doc_id"),
+          coalesce(col("mlab"), col("sn")).as("cluster_id"))
     }
   }
 

@@ -48,11 +48,10 @@ object Percentiles {
       s"percentiles must be in [0,1] (got $ps)")
     val vals = df.select(col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
-    // rankedRunningSum persists the range-partitioned frame (tracked in
+    // rank persists the range-partitioned frame (tracked in
     // OperatorCaches — the harness/caller releases per query, the
     // library-wide convention)
-    val (ranked, n) = PrefixSum.rankedRunningSum(
-      vals, Seq(col("__v")), lit(1L), rnCol = "__rn", cumCol = "__cum")
+    val (ranked, n) = PrefixSum.rank(vals, Seq(col("__v")), "__rn")
     if (n == 0L) return Seq.empty
     // 0-based continuous positions → the 1-based ranks that bracket them
     val positions = ps.map(_ * (n - 1))
@@ -79,37 +78,23 @@ object Percentiles {
     ((a - pmod(a, lit(100L))) / lit(100L)).cast("long") + lit(1L)
   }
 
-  /** Shared grouped machinery: range-partition on (group, value) so one
-    * group's values SPAN partitions (a giant group never pins a reducer),
-    * then derive per-(partition, group) count offsets as a window over
+  /** Shared grouped machinery: [[PrefixSum.ranged]] on (group, value), so
+    * one group's values SPAN partitions (a giant group never pins a
+    * reducer), then per-(partition, group) count offsets as a window over
     * the tiny stats frame — |groups|+|partitions|-sized, computed and
-    * joined entirely plan-side. Returns (ranged+persisted, offsets frame
+    * joined entirely plan-side. Local positions are the core's
+    * `__mid − min(__mid)` per (partition, group): same arbitrary tie order
+    * as a row_number, and a percentile only reads the VALUE at a rank,
+    * which ties cannot change. Returns (ranged+persisted, offsets frame
     * keyed (__pid, __g, __off), group sizes frame (__g, __ng)). */
   private def rankedByGroup(df: DataFrame, groupCol: String,
                             valueCol: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val spark = df.sparkSession
     val vals = df
       .select(col(groupCol).cast("string").as("__g"),
         col(valueCol).cast("double").as("__v"))
       .filter(col("__g").isNotNull && col("__v").isNotNull)
-    val parts = spark.sessionState.conf.numShufflePartitions
-    // Local positions come from monotonically_increasing_id AFTER an
-    // in-partition (g, v) sort — NOT from a row_number window: the
-    // window's PARTITION BY (__pid, __g) required a hashpartitioning
-    // exchange + sort of the FULL frame on top of the range exchange
-    // (measured: one grouped rank selection 2.6 s warm at sf0.1, q208's
-    // cost center). mono_id is per-partition contiguous, so after the
-    // in-partition sort `__mid − min(__mid per (pid, g))` IS the local
-    // row number — same arbitrary tie order as row_number, and a
-    // percentile only reads the VALUE at a rank, which ties cannot
-    // change. One full-frame exchange total, plus the same tiny stats
-    // aggregation (now also carrying min(__mid)).
-    val ranged = OperatorCaches.persistTracked(
-      vals.repartitionByRange(parts, col("__g"), col("__v"))
-        .sortWithinPartitions(col("__g"), col("__v"))
-        .withColumn("__pid", spark_partition_id())
-        .withColumn("__mid", monotonically_increasing_id()))
+    val ranged = PrefixSum.ranged(vals, Seq(col("__g"), col("__v")))
     // per-(partition, group) counts: ≈ |groups| + |partitions| rows,
     // aggregated AND prefix-summed distributed (window partitions by
     // group over the stats frame — each group touches ≤ |partitions|
@@ -125,7 +110,7 @@ object Percentiles {
   }
 
   /** Values at the requested (group, global in-group rank) pairs:
-    * per-(partition, group) local row numbers (mono-id offsets — see
+    * per-(partition, group) local row numbers (`__mid` offsets — see
     * [[rankedByGroup]]), lifted to global in-group ranks by the
     * broadcast-joined offsets, filtered to the broadcast wishlist.
     * Output (__g, __rn, __v), one row per wanted pair. */

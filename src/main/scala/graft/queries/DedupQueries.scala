@@ -1790,9 +1790,8 @@ object DedupQueries {
     QuerySpec("q254_novelty_saturation",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val (ranked, n) = graft.operators.PrefixSum.rankedRunningSum(
-          docs.select(col("doc_id")), Seq(col("doc_id")), lit(1L),
-          "__rn", "__cum")
+        val (ranked, n) = graft.operators.PrefixSum.rank(
+          docs.select(col("doc_id")), Seq(col("doc_id")), "__rn")
         val buckets = graft.operators.OperatorCaches.persistTracked(
           ranked.select(col("doc_id"),
             expr(s"(__rn - 1) * 10 DIV $n").as("bucket")))

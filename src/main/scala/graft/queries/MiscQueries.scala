@@ -1558,7 +1558,7 @@ object MiscQueries {
     // cumulative walk, within-bin linear interpolation, all integer
     // fixed-point — and the EXACT order statistic at the same rank is
     // computed beside it on the distributed rank axis
-    // (PrefixSum.rankedRunningSum — range partitions + broadcast
+    // (PrefixSum.rank — range partitions + broadcast
     // offsets, never a single-partition window over data), so the
     // report carries the sketch's true error per percentile. At 100 TB
     // the serving cost is sketch-sized (the walk touches ≤ range/W
@@ -1572,8 +1572,7 @@ object MiscQueries {
             .cast("long").as("y"))
         val est = graft.operators.HistSketch.quantiles(
           graft.operators.HistSketch.sketch(e, "y"), HistPcts)
-        val (ranked, _) = graft.operators.PrefixSum.rankedRunningSum(
-          e, Seq(col("y")), lit(1L), rnCol = "__rn", cumCol = "__cum")
+        val (ranked, _) = graft.operators.PrefixSum.rank(e, Seq(col("y")), "__rn")
         broadcast(est).join(ranked.select(col("__rn").as("target_rank"),
             col("y").as("exact_fp")), Seq("target_rank"))
           .select(col("p_pct"), col("target_rank"), col("est_fp"),
@@ -1638,8 +1637,7 @@ object MiscQueries {
         val pruned = graft.operators.HistSketch.delete(full, delSk)
         val est = graft.operators.HistSketch.quantiles(pruned, HistPcts)
         val rem = all.filter(col("event_id") % 10 =!= 7).select(col("y"))
-        val (ranked, _) = graft.operators.PrefixSum.rankedRunningSum(
-          rem, Seq(col("y")), lit(1L), rnCol = "__rn", cumCol = "__cum")
+        val (ranked, _) = graft.operators.PrefixSum.rank(rem, Seq(col("y")), "__rn")
         broadcast(est).join(ranked.select(col("__rn").as("target_rank"),
             col("y").as("exact_fp")), Seq("target_rank"))
           .select(col("p_pct"), col("target_rank"), col("est_fp"),

@@ -659,7 +659,7 @@ object QualityQueries {
 
     // Difficulty deciles: docs ranked corpus-wide by quality (distinct-
     // token richness, ties to id) on the DISTRIBUTED rank axis
-    // (PrefixSum.rankedRunningSum — range partitions + broadcast offsets,
+    // (PrefixSum.rank — range partitions + broadcast offsets,
     // no global window), bucketed ⌊(rank−1)·10/N⌋, with per-decile stats.
     // The "bucket the corpus by difficulty" step of curriculum schedules
     // — pairs with q169's within-source ordering.
@@ -668,9 +668,8 @@ object QualityQueries {
         val qv = t(s, d, "documents").select(col("doc_id"),
           size(array_distinct(split(col("text"), " "))).cast("long").as("q"),
           size(split(col("text"), " ")).cast("long").as("ntok"))
-        val (ranked, n) = graft.operators.PrefixSum.rankedRunningSum(
-          qv, Seq(col("q"), col("doc_id")), lit(1L),
-          rnCol = "__rn", cumCol = "rk")
+        val (ranked, n) = graft.operators.PrefixSum.rank(
+          qv, Seq(col("q"), col("doc_id")), "rk")
         ranked
           .withColumn("decile", expr(s"((rk - 1) * 10) DIV $n"))
           .groupBy("decile")
@@ -737,13 +736,13 @@ object QualityQueries {
         val base = t(s, d, "documents").select(col("doc_id"), col("n_chars"),
           size(split(col("text"), " ")).cast("long").as("n_tokens"),
           size(array_distinct(split(col("text"), " "))).cast("long").as("n_distinct"))
-        val (r1, _) = graft.operators.PrefixSum.rankedRunningSum(base,
-          Seq(col("n_tokens").desc, col("doc_id")), lit(0L), "r_vol", "__c1")
-        val (r2, _) = graft.operators.PrefixSum.rankedRunningSum(r1,
+        val (r1, _) = graft.operators.PrefixSum.rank(base,
+          Seq(col("n_tokens").desc, col("doc_id")), "r_vol")
+        val (r2, _) = graft.operators.PrefixSum.rank(r1,
           Seq((col("n_tokens") - col("n_distinct")).cast("double") /
-            col("n_tokens").cast("double"), col("doc_id")), lit(0L), "r_dup", "__c2")
-        val (r3, _) = graft.operators.PrefixSum.rankedRunningSum(r2,
-          Seq(col("n_chars").desc, col("doc_id")), lit(0L), "r_len", "__c3")
+            col("n_tokens").cast("double"), col("doc_id")), "r_dup")
+        val (r3, _) = graft.operators.PrefixSum.rank(r2,
+          Seq(col("n_chars").desc, col("doc_id")), "r_len")
         r3.select(col("doc_id"), col("r_vol"), col("r_dup"), col("r_len"),
             (lit(1.0) / (lit(60.0) + col("r_vol")) +
               lit(1.0) / (lit(60.0) + col("r_dup")) +
@@ -1191,7 +1190,7 @@ object QualityQueries {
     // and the observed rate is the planted-boilerplate rate per decile
     // (y = 0, the axis the model was trained on) — expected to FALL as
     // z rises. Deciles come from the DISTRIBUTED rank axis
-    // (rankedRunningSum over (z, doc_id) — the doc_id tiebreak makes
+    // (PrefixSum.rank over (z, doc_id) — the doc_id tiebreak makes
     // bucket boundaries engine-deterministic even across equal scores;
     // never an ntile() single-reducer window), the bucket formula
     // ⌊(rn−1)·10/N⌋ is exact integer arithmetic, counts are exact
@@ -1202,9 +1201,8 @@ object QualityQueries {
         val lab = graft.operators.Logit.scoredDocs(s, d)
           .select(col("doc_id"), col("z"),
             when(col("y") === 0L, 1L).otherwise(0L).as("pos"))
-        val (ranked, n) = graft.operators.PrefixSum.rankedRunningSum(
-          lab, Seq(col("z"), col("doc_id")), lit(1L),
-          rnCol = "__rn", cumCol = "__cum")
+        val (ranked, n) = graft.operators.PrefixSum.rank(
+          lab, Seq(col("z"), col("doc_id")), "__rn")
         ranked
           .select(expr(s"((__rn - 1) * 10) DIV ${n}L").as("decile"),
             col("z"), col("pos"))

@@ -205,9 +205,11 @@ class DedupSpec extends SparkSpec {
     // a_id = lower RANK (sort order), not lower id: "…eta iota" < "…eta theta"
     assert(out === Seq((99L, 10L)))
     // rank is a total order → result is invariant to input partitioning
-    val re = Dedup.sortedNeighborPairs(docs.repartition(7), "doc_id", "text",
-        window = 2, minJaccard = 0.3, rangePartitions = 3)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSeq
+    val re = withShufflePartitions(3) {
+      Dedup.sortedNeighborPairs(docs.repartition(7), "doc_id", "text",
+          window = 2, minJaccard = 0.3)
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSeq
+    }
     assert(re === out)
     graft.operators.OperatorCaches.release()
   }

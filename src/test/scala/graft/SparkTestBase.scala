@@ -23,4 +23,13 @@ object SparkTestBase {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` at `n` (the partition
+    * count of range-partitioned operators), then restores the session's. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, n.toLong)
+    try body finally spark.conf.set(key, before)
+  }
 }

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftSession` only (the test suite's too), graft kernels reach
   * DataFrame code without per-session registration, every runnable main is one README documents, and
   * cross-query state lives in the two cache scopes (`OperatorCaches` per
-  * query, `FramePool` per run) rather than in private memos. */
+  * query, `FramePool` per run) rather than in private memos, and global
+  * ranks come from one core (`PrefixSum`). */
 class ToolingSpec extends AnyFunSuite {
 
   private def sources(root: String): Seq[(Path, String)] = {
@@ -71,6 +72,13 @@ class ToolingSpec extends AnyFunSuite {
   test("StorageLevel.NONE appears only in OperatorCaches.scala") {
     assert(sitesOf("StorageLevel.NONE") ===
       Seq("src/main/scala/graft/operators/OperatorCaches.scala"))
+  }
+
+  test("one rank implementation: partition and row tagging appear only in PrefixSum.scala") {
+    // a hand-rolled global rank tags rows with these; the ranked core owns them
+    for (needle <- Seq("spark_partition_id()", "monotonically_increasing_id()"))
+      assert(sitesOf(needle) === Seq("src/main/scala/graft/operators/PrefixSum.scala"),
+        s"$needle outside the ranked core")
   }
 
   test("the Postings pool shims have no caller under src/") {
