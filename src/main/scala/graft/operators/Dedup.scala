@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions._
 
@@ -574,90 +573,124 @@ object Dedup {
       .filter(col("dist") <= maxDist)
   }
 
+  /** Rounds after which [[dupClusters]] gives up: star contraction needs
+    * O(log n) rounds, so 30 covers any graph that fits a cluster. */
+  private val MaxStarRounds = 30
+
   /** Duplicate clusters from near-dup pairs: connected components by
-    * iterative min-label propagation. Input is any (a_id, b_id) pair frame
-    * (e.g. [[lshPairs]] output); result is (doc_id, cluster_id) for every
-    * doc appearing in at least one pair, cluster_id = the smallest doc_id
-    * in the component — the canonical survivor a dedup pipeline keeps.
+    * alternating large-star/small-star rounds (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014). Input is any
+    * (a_id, b_id) pair frame (e.g. [[lshPairs]] output); result is
+    * (doc_id, cluster_id) for every doc appearing in at least one pair,
+    * cluster_id = the smallest doc_id in the component — the canonical
+    * survivor a dedup pipeline keeps. A doc whose only pair is the
+    * self-pair (x, x) gets (x, x).
     *
-    * Each iteration is one equi-join + groupBy shuffle keyed by vertex id
-    * (the scale-safe shape); iterations needed = component diameter, which
-    * for near-dup clusters is small. The driver only coordinates the loop
-    * and reads a 1-row convergence probe — no data flows through it.
-    * Each iteration's labels are EAGERLY localCheckpoint'ed: iterative
-    * DataFrames otherwise accumulate one join per iteration into a single
-    * ever-growing plan, which blows up analysis/codegen memory long before
-    * data size matters (on a cluster, prefer reliable `checkpoint()` with
-    * a checkpoint dir — same lineage-truncation role, executor-failure
-    * safe). (At extreme diameters, swap in the large-star/small-star
-    * variant; the per-iteration shuffle shape is the same.)
+    * Per round: large-star hangs every LARGER neighbor of u onto
+    * min(Γ(u) ∪ u); small-star hangs the smaller neighbors and u itself
+    * onto the minimum of the smaller neighborhood. Both are one
+    * groupBy(node) + one join keyed by node (the scale-safe shape), and
+    * the loop converges in O(log n) rounds on any graph shape, where
+    * min-label propagation needs one round per unit of component
+    * diameter. The driver only coordinates the loop and reads a 1-row
+    * convergence probe per round: the undirected edge set stops changing
+    * (count + orientation-canonical checksum). Each round's edge sets are
+    * localCheckpoint'ed: iterative DataFrames otherwise accumulate one
+    * join per round into a single ever-growing plan, which blows up
+    * analysis/codegen memory long before data size matters (on a
+    * cluster, prefer reliable `checkpoint()` with a checkpoint dir —
+    * same lineage-truncation role, executor-failure safe). A graph still
+    * changing after [[MaxStarRounds]] rounds throws rather than ship
+    * non-minimal cluster labels.
     */
+  def dupClusters(pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.DecimalType
+    // Checkpoints are LAZY: each round's fingerprint probe is the ONE
+    // action that materializes that round's checkpointed edge frames —
+    // eager checkpoints cost a separate materialization job per frame,
+    // and on contracted/near-converged graphs the loop is pure per-job
+    // overhead. Both orientations come from ONE pass over `pairs` (a
+    // union of two selects would evaluate the pair pipeline, potentially
+    // a full LSH run, twice); self-pairs stay in `input` for the result.
+    val input = pairs
+      .select(explode(array(
+        struct(col("a_id").as("u"), col("b_id").as("v")),
+        struct(col("b_id").as("u"), col("a_id").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .distinct()
+      .localCheckpoint(eager = false)
+    var edges = input.filter(col("u") =!= col("v"))
+
+    // orientation-canonical fingerprint of the undirected edge set:
+    // (count, Σ md5_60(min‖max)) — decimal sum, overflow-safe
+    def fingerprint(e: DataFrame): (Long, java.math.BigDecimal) = {
+      val r = e.agg(
+        count(lit(1)),
+        coalesce(sum(conv(substring(md5(concat_ws("_",
+          least(col("u"), col("v")), greatest(col("u"), col("v")))), 1, 15), 16, 10)
+          .cast(DecimalType(38, 0))), lit(java.math.BigDecimal.ZERO))).head()
+      (r.getLong(0), r.getDecimal(1))
+    }
+
+    var fp = fingerprint(edges)
+    var converged = fp._1 == 0L
+    var round = 0
+    while (!converged && round < MaxStarRounds) {
+      // large-star: m(u) = min over full neighborhood ∪ self; (v, m) for
+      // v > u. Every output edge points down (m ≤ u < v), so these rows
+      // are already each node's SMALLER neighborhood, the only half
+      // small-star reads.
+      val mLarge = edges.groupBy(col("u"))
+        .agg(min(col("v")).as("__mv"))
+        .select(col("u"), least(col("__mv"), col("u")).as("m"))
+      val smaller = edges.filter(col("v") > col("u"))
+        .join(mLarge, "u")
+        .select(col("v").as("u"), col("m").as("v"))
+        .distinct()
+        .localCheckpoint(eager = false)
+      // small-star: m(u) = min over SMALLER neighborhood ∪ self;
+      // (v, m) for smaller v, plus (u, m), in both orientations
+      val mSmall = smaller.groupBy(col("u")).agg(min(col("v")).as("m"))
+      val afterSmall = smaller.join(mSmall, "u")
+        .select(explode(array(
+          struct(col("v").as("u"), col("m").as("v")),
+          struct(col("u"), col("m").as("v")),
+          struct(col("m").as("u"), col("v")),
+          struct(col("m").as("u"), col("u").as("v")))).as("p"))
+        .select(col("p.u").as("u"), col("p.v").as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+        .localCheckpoint(eager = false)
+      val fpNew = fingerprint(afterSmall)
+      converged = fpNew == fp
+      fp = fpNew
+      edges = afterSmall
+      round += 1
+    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"dupClusters did not converge within $MaxStarRounds large-star/small-star " +
+          "rounds — pathological input; no non-minimal cluster labels are shipped")
+    // a doc whose only pair is a self-pair has no edge left in `edges`:
+    // its (x, x) row labels it x, and on a doc with edges the row changes
+    // nothing, since least(min(v), u) already counts u
+    edges.unionByName(input.filter(col("u") === col("v")))
+      .groupBy(col("u"))
+      .agg(min(col("v")).as("__mv"))
+      .select(col("u").as("doc_id"),
+        least(col("__mv"), col("u")).as("cluster_id"))
+  }
+
   /** [[dupClusters]] pooled across queries ([[FramePool]], keyed by the
     * pairs frame's canonicalized plan): cluster assignments are the
     * artifact a dedup pipeline materializes once and then reads for
-    * pairing reports, corpus application, and size audits — three
-    * queries were each re-running the whole label-propagation loop. */
-  def pooledDupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    FramePool.frames(
-      ("dupclusters", pairs.queryExecution.analyzed.canonicalized, maxIter)) {
-      Seq(dupClusters(pairs, maxIter))
+    * pairing reports, corpus application, size audits and the
+    * [[DupGraph]] artifact — every one of those queries over the same
+    * pairs shares the one entry. */
+  def pooledDupClusters(pairs: DataFrame): DataFrame =
+    FramePool.frames(("dupclusters", pairs.queryExecution.analyzed.canonicalized)) {
+      Seq(dupClusters(pairs))
     }.head
-
-  def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // Undirect the edges in ONE pass over `pairs` (explode of both
-    // orientations) — a union of two selects would evaluate the pair
-    // pipeline (potentially a full LSH run) twice.
-    val edges = pairs.select(explode(array(
-        struct(col("a_id").as("s"), col("b_id").as("t")),
-        struct(col("b_id").as("s"), col("a_id").as("t")))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Checkpoints are LAZY: the labelSum probe right after each one is
-    // the action that materializes it, so every iteration costs ONE job
-    // (an eager checkpoint would pay a materialization job AND the probe
-    // job — at small/contracted graph sizes the loop is pure per-job
-    // overhead and this halves it).
-    var labels = edges.select(col("s").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint(eager = false)
-    // Convergence probe: labels only ever DECREASE (least of own and
-    // neighbor min), so the label sum is strictly monotone while anything
-    // changes — comparing sums is a single-stage aggregate per iteration
-    // instead of a join. Decimal sum: overflow-safe at any scale.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(
-        sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))),
-        lit(java.math.BigDecimal.ZERO))) // empty frame sums to null otherwise
-        .head().getDecimal(0)
-    var prevSum = labelSum(labels)
-    var i = 0
-    var converged = prevSum.signum == 0 && labels.isEmpty // no pairs → no loop
-    while (!converged && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("t"), col("label").as("tlabel")), Seq("t"))
-        .groupBy(col("s"))
-        .agg(min(col("tlabel")).as("nmin"))
-        .select(col("s").as("id"), col("nmin"))
-      val next = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        .localCheckpoint(eager = false)
-      val s = labelSum(next) // materializes the lazy checkpoint
-      labels = next
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      i += 1
-    }
-    edges.unpersist() // labels is checkpointed — no longer depends on edges
-    if (!converged)
-      throw new IllegalStateException(
-        s"dupClusters did not converge within maxIter=$maxIter label-propagation " +
-          "iterations — a component's diameter exceeds the budget; raise maxIter " +
-          "(or switch to the large-star/small-star variant for extreme graphs) " +
-          "rather than shipping non-minimal cluster labels")
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-  }
 
   /** Connected components at EVERY threshold of a descending sweep, each
     * incrementally from the previous — the percolation structure made
@@ -867,110 +900,6 @@ object Dedup {
         (col("inter").cast("double") / col("n_new").cast("double"))
           .as("containment"))
       .filter(col("containment") >= minContainment)
-  }
-
-  /** Connected components by alternating large-star/small-star rounds —
-    * the documented scale path past [[dupClusters]]'s min-label
-    * propagation: label propagation needs one round PER unit of component
-    * diameter, while star contraction converges in O(log n) rounds on any
-    * graph shape (each round pulls whole neighborhoods onto their
-    * minimum). Same output contract as [[dupClusters]]: (doc_id,
-    * cluster_id = component minimum) for every doc in ≥1 pair; equality
-    * on arbitrary graphs is property-tested in DedupSpec.
-    *
-    * Per round: large-star hangs every LARGER neighbor of u onto
-    * min(Γ(u) ∪ u); small-star hangs the smaller neighbors and u itself
-    * onto the minimum of the smaller neighborhood. Both are one
-    * groupBy(node) + one join keyed by node — the same shuffle shape as
-    * label propagation, just O(log n) of them. Each round's edge set is
-    * eagerly localCheckpoint'ed (lineage truncation, as in
-    * [[dupClusters]]); convergence = the undirected edge set stops
-    * changing (count + orientation-canonical checksum).
-    */
-  /** [[dupClustersStar]] pooled across queries ([[FramePool]], keyed by
-    * the pairs frame's canonicalized plan) — the star-CC sibling of
-    * [[pooledDupClusters]]: the labels are the second half of the
-    * [[DupGraph]] artifact. */
-  def pooledDupClustersStar(pairs: DataFrame, maxRounds: Int = 30): DataFrame =
-    FramePool.frames(
-      ("dupclusters_star", pairs.queryExecution.analyzed.canonicalized,
-        maxRounds)) {
-      Seq(dupClustersStar(pairs, maxRounds))
-    }.head
-
-  def dupClustersStar(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    // Checkpoints are LAZY (the dupClusters discipline): each round's
-    // fingerprint probe is the ONE action that materializes that round's
-    // two checkpointed edge frames — eager checkpoints cost a separate
-    // materialization job per frame, and on contracted/near-converged
-    // graphs the loop is pure per-job overhead.
-    var edges = pairs
-      .select(explode(array(
-        struct(col("a_id").as("u"), col("b_id").as("v")),
-        struct(col("b_id").as("u"), col("a_id").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(eager = false)
-
-    // orientation-canonical fingerprint of the undirected edge set:
-    // (count, Σ md5_60(min‖max)) — decimal sum, overflow-safe
-    def fingerprint(e: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = e.agg(
-        count(lit(1)),
-        coalesce(sum(conv(substring(md5(concat_ws("_",
-          least(col("u"), col("v")), greatest(col("u"), col("v")))), 1, 15), 16, 10)
-          .cast(DecimalType(38, 0))), lit(java.math.BigDecimal.ZERO))).head()
-      (r.getLong(0), r.getDecimal(1))
-    }
-
-    def symmetric(e: DataFrame): DataFrame = e
-      .select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-
-    var fp = fingerprint(edges)
-    var converged = fp._1 == 0L
-    var round = 0
-    while (!converged && round < maxRounds) {
-      // large-star: m(u) = min over full neighborhood ∪ self; (v, m) for v > u
-      val mLarge = edges.groupBy(col("u"))
-        .agg(min(col("v")).as("__mv"))
-        .select(col("u"), least(col("__mv"), col("u")).as("m"))
-      val afterLarge = symmetric(
-        edges.filter(col("v") > col("u"))
-          .join(mLarge, "u")
-          .select(col("v").as("u"), col("m").as("v")))
-        .localCheckpoint(eager = false)
-      // small-star: m(u) = min over SMALLER neighborhood ∪ self;
-      // (v, m) for smaller v, plus (u, m)
-      val smaller = afterLarge.filter(col("v") < col("u"))
-      val mSmall = smaller.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val afterSmall = symmetric(
-        smaller.join(mSmall, "u")
-          .select(explode(array(
-            struct(col("v").as("u"), col("m").as("v")),
-            struct(col("u"), col("m").as("v")))).as("p"))
-          .select(col("p.u").as("u"), col("p.v").as("v")))
-        .localCheckpoint(eager = false)
-      val fpNew = fingerprint(afterSmall)
-      converged = fpNew == fp
-      fp = fpNew
-      edges = afterSmall
-      round += 1
-    }
-    if (!converged && fp._1 != 0L)
-      throw new IllegalStateException(
-        s"dupClustersStar did not converge within maxRounds=$maxRounds — " +
-          "pathological input; raise maxRounds")
-    edges.groupBy(col("u"))
-      .agg(min(col("v")).as("__mv"))
-      .select(col("u").as("doc_id"),
-        least(col("__mv"), col("u")).as("cluster_id"))
   }
 
   /** Apply duplicate clusters to the corpus: keep only canonical rows

@@ -15,12 +15,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `pairs`    (a_id, b_id, jac): confirmed LSH near-dup pairs
   *   - `clusters` (doc_id, cluster_id): connected-component labels
   *     (cluster_id = component-minimum doc id; singletons absent, the
-  *     [[Dedup.dupClusters]]/[[Dedup.dupClustersStar]] contract)
+  *     [[Dedup.dupClusters]] contract)
   *
   * Scale shape: both frames are pair/member-sized (bounded by the LSH
   * bucket caps, never corpus²) and narrow; serving is a parquet scan.
   * Build cost is exactly one [[Dedup.lshPairs]] + one O(log n)-round
-  * [[Dedup.dupClustersStar]] — identical to the live q111 pipeline, so
+  * [[Dedup.dupClusters]] — identical to the live q111 pipeline, so
   * serve-from-artifact is hash-equal to live-compute (q203 gates this
   * against q111's own oracle; DupGraphSpec proves frame round-trip).
   * The ONLINE maintenance half is the streaming side:
@@ -42,7 +42,7 @@ object DupGraph {
     val pairs = Dedup.pooledLshPairs(docs, idCol, textCol,
       numBands = numBands, minJaccard = minJaccard, k = k,
       rowsPerBand = rowsPerBand)
-    Frames(pairs, Dedup.pooledDupClustersStar(pairs))
+    Frames(pairs, Dedup.pooledDupClusters(pairs))
   }
 
   /** Append a NEW document batch to an existing graph artifact — the
@@ -93,7 +93,7 @@ object DupGraph {
     val residual = idx.pairs
       .join(ids.select(col(idCol).as("a_id")), Seq("a_id"), "left_anti")
       .join(ids.select(col(idCol).as("b_id")), Seq("b_id"), "left_anti")
-    Frames(residual, Dedup.dupClustersStar(residual))
+    Frames(residual, Dedup.dupClusters(residual))
   }
 
   def save(frames: Frames, dir: String): Unit = {

@@ -25,12 +25,13 @@ import org.apache.spark.sql.functions._
   * Scale shape: `edgesWithDeg` (src, dst, deg) is computed once, hash-
   * repartitioned by src, and persisted — per iteration only the rank frame
   * moves: one shuffle keyed by src for the rank⋈edges join, one keyed by
-  * dst for the contribution aggregation (map-side combined). Each
-  * iteration's result is localCheckpoint'ed to truncate lineage (the same
-  * discipline as [[Dedup.dupClusters]]; use reliable checkpoint() on a real
-  * cluster). The driver never sees a row. Long arithmetic holds while
-  * nodes·scale·dampNum < 2^63 — at web scale (1e9 hosts) drop `scale` to
-  * 1e6 or switch the sum column to DECIMAL(38,0).
+  * dst for the contribution aggregation (map-side combined). Every few
+  * iterations the rank frame is localCheckpoint'ed to truncate lineage,
+  * as [[Dedup.dupClusters]] checkpoints each round's edge set (use
+  * reliable checkpoint() on a real cluster). The driver never sees a
+  * row. Long arithmetic holds while nodes·scale·dampNum < 2^63 — at web
+  * scale (1e9 hosts) drop `scale` to 1e6 or switch the sum column to
+  * DECIMAL(38,0).
   */
 object Graphs {
 
@@ -67,6 +68,9 @@ object Graphs {
       edges.join(deg, "src").repartition(parts, col("src")))
   }
 
+  /** Iterations between the PageRank loops' lineage truncations. */
+  private val CheckpointEvery = 3
+
   /** Fixed-iteration integer PageRank. `edges` must carry string/long
     * columns `src`, `dst` (self-loops allowed, duplicates NOT — dedupe
     * upstream; each (src,dst) row contributes once). Returns (node, pr).
@@ -75,15 +79,13 @@ object Graphs {
     * and both `nodes` union branches all read it, and an expensive edge
     * DERIVATION (q137's orders⋈lineitem + distinct) would otherwise be
     * recomputed once per consumer. Lineage is truncated only every
-    * `checkpointEvery` iterations — each iteration adds a bounded two
+    * [[CheckpointEvery]] iterations — each iteration adds a bounded two
     * joins to the plan, so short runs never pay a checkpoint's eager
     * materialization, while long runs keep analysis time flat. */
   def pageRank(edges: DataFrame, iterations: Int,
-               dampNum: Long = 85L, scale: Long = 1000000000L,
-               checkpointEvery: Int = 3): DataFrame = {
+               dampNum: Long = 85L, scale: Long = 1000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampNum >= 0 && dampNum <= 100, s"dampNum in [0,100], got $dampNum")
-    require(checkpointEvery >= 1, s"checkpointEvery >= 1, got $checkpointEvery")
     val e = OperatorCaches.persistTracked(edges)
     val parts = sizedParts(edges)
     val ed = edgesWithDeg(e, parts)
@@ -97,7 +99,7 @@ object Graphs {
       pr = iterate(nodes, ed, pr, lit(base), dampNum)
       // truncate lineage periodically, never on the final iteration (the
       // caller's own materialization is the last action anyway)
-      if (i % checkpointEvery == 0 && i < iterations)
+      if (i % CheckpointEvery == 0 && i < iterations)
         pr = pr.localCheckpoint()
     }
     pr
@@ -118,11 +120,9 @@ object Graphs {
   def personalizedPageRank(edges: DataFrame,
                            isPreferred: org.apache.spark.sql.Column,
                            iterations: Int, dampNum: Long = 85L,
-                           scale: Long = 1000000000L,
-                           checkpointEvery: Int = 3): DataFrame = {
+                           scale: Long = 1000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampNum >= 0 && dampNum <= 100, s"dampNum in [0,100], got $dampNum")
-    require(checkpointEvery >= 1, s"checkpointEvery >= 1, got $checkpointEvery")
     val e = OperatorCaches.persistTracked(edges)
     val parts = sizedParts(edges)
     val ed = edgesWithDeg(e, parts)
@@ -154,7 +154,7 @@ object Graphs {
     var pr = nodesB.select(col("node"), lit(scale).as("pr"))
     for (i <- 1 to iterations) {
       pr = iterate(nodesB, ed, pr, col("base"), dampNum)
-      if (i % checkpointEvery == 0 && i < iterations)
+      if (i % CheckpointEvery == 0 && i < iterations)
         pr = pr.localCheckpoint()
     }
     pr
@@ -199,11 +199,9 @@ object Graphs {
     * oracle's BIGINT is overflow-checked and the engine's sums here
     * feed a final equality-checked artifact). */
   def weightedPageRank(edges: DataFrame, iterations: Int,
-                       dampNum: Long = 85L, scale: Long = 1000000000L,
-                       checkpointEvery: Int = 3): DataFrame = {
+                       dampNum: Long = 85L, scale: Long = 1000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampNum >= 0 && dampNum <= 100, s"dampNum in [0,100], got $dampNum")
-    require(checkpointEvery >= 1, s"checkpointEvery >= 1, got $checkpointEvery")
     val e = OperatorCaches.persistTracked(edges)
     val parts = sizedParts(edges)
     val sw = e.groupBy(col("src")).agg(sum(col("w")).as("sw"))
@@ -224,7 +222,7 @@ object Graphs {
         .join(contrib, nodes("node") === contrib("dst"), "left")
         .select(nodes("node"),
           (lit(base) + expr(s"($dampNum * coalesce(s, 0L)) DIV 100")).as("pr"))
-      if (i % checkpointEvery == 0 && i < iterations)
+      if (i % CheckpointEvery == 0 && i < iterations)
         pr = pr.localCheckpoint()
     }
     pr

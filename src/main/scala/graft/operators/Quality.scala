@@ -215,10 +215,10 @@ object Quality {
     * two near-duplicates can land one in train and one in test, and the
     * eval set silently scores memorization (the classic split-leakage
     * failure near-dup detection exists to prevent). `clusters` is a
-    * (idCol, cluster_id) frame from Dedup.dupClusters/dupClustersStar —
-    * only PAIRED docs appear in it; unpaired docs are their own singleton
-    * cluster (cluster_key = own id, the clusterers' cluster_id = component-
-    * minimum convention extended to singletons).
+    * (idCol, cluster_id) frame from Dedup.dupClusters — only PAIRED docs
+    * appear in it; unpaired docs are their own singleton cluster
+    * (cluster_key = own id, the clusterer's cluster_id = component-minimum
+    * convention extended to singletons).
     *
     * The md5 gate hashes the CLUSTER key, so membership of every doc in a
     * cluster decides identically — same reproducibility contract as

@@ -98,8 +98,8 @@ object DedupQueries {
 
   /** DuckDB twin of connected components over the q32 LSH pair stream
     * (recursive reachability + per-source minimum) — the shared oracle of
-    * q37 (label propagation) and q111 (star contraction): both clusterers
-    * promise (doc_id, cluster_id = component minimum). */
+    * q37 and q111, which both read the pooled clusters
+    * (doc_id, cluster_id = component minimum). */
   private def clustersCteFrom(rel: String): String =
     lshCteFrom(rel).replaceFirst("^WITH ", "WITH RECURSIVE ") +
       """
@@ -274,10 +274,10 @@ object DedupQueries {
              |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // Duplicate clusters: connected components over the LSH near-dup
-    // pairs via iterative min-label propagation (one join+groupBy shuffle
-    // per iteration, iterations = component diameter); cluster_id = min
-    // doc_id in the component — the canonical survivor. The oracle walks
-    // the same graph with a recursive reachability CTE.
+    // pairs via large-star/small-star rounds (one join+groupBy shuffle per
+    // half-round, O(log n) rounds); cluster_id = min doc_id in the
+    // component — the canonical survivor. The oracle walks the same graph
+    // with a recursive reachability CTE.
     QuerySpec("q37_dup_clusters",
       (s, d) => {
         val pairs = graft.operators.Dedup.pooledLshPairs(t(s, d, "documents"),
@@ -287,18 +287,16 @@ object DedupQueries {
       },
       Some(clustersOracle)),
 
-    // The SAME connected components via alternating large-star/small-star
-    // contraction — the O(log n)-round scale path past label propagation
-    // (which needs one round per unit of component DIAMETER). Identical
-    // output contract (doc_id, cluster_id = component minimum), so it
-    // hash-matches the exact q37 oracle — the two clusterers are
-    // interchangeable and both oracle-gated.
+    // The same pooled clusters as q37, served from the one FramePool
+    // entry (doc_id, cluster_id = component minimum) that q37 and
+    // DupGraph.build also read: a pool-warm read of the cluster artifact,
+    // gated against the same exact oracle.
     QuerySpec("q111_dup_clusters_star",
       (s, d) => {
         val pairs = graft.operators.Dedup.pooledLshPairs(t(s, d, "documents"),
           "doc_id", "text", numBands = NumBands, minJaccard = 0.1, k = 3,
           rowsPerBand = RowsPerBand)
-        graft.operators.Dedup.pooledDupClustersStar(pairs).orderBy("doc_id")
+        graft.operators.Dedup.pooledDupClusters(pairs).orderBy("doc_id")
       },
       Some(clustersOracle)),
 

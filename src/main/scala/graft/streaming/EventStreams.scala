@@ -560,7 +560,7 @@ object EventStreams {
             .join(allTombs.get.select(col(idCol).as("b_id")),
               Seq("b_id"), "left_anti")
             .select(col("a_id"), col("b_id"))
-          Dedup.dupClustersStar(residual)
+          Dedup.dupClusters(residual)
         } else Dedup.incrementalClusters(prev, newPairs)
       labeled.write.mode("overwrite").parquet(s"$ldir/epoch=$batchId")
       prevEpochs.filter(e => e < prevEpochs.max)

@@ -13,6 +13,24 @@ class DedupSpec extends SparkSpec {
   private val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta",
     "eta", "theta", "iota", "kappa", "lambda", "mu", "nu", "xi", "omicron")
 
+  /** Driver-side union-find: (doc_id, component minimum) for every
+    * endpoint of `pairs` — the independent reference the connected-
+    * components tests compare [[Dedup.dupClusters]] against. Each merge
+    * hangs the larger root under the smaller, so a root is always its
+    * component's minimum. */
+  private def unionFind(pairs: Seq[(Long, Long)]): Set[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toList.map(x => x -> find(x)).toSet
+  }
+
   /** Deterministic random-ish doc from a seed. */
   private def doc(seed: Int, nTokens: Int = 40): String = {
     val rng = new scala.util.Random(seed)
@@ -77,29 +95,41 @@ class DedupSpec extends SparkSpec {
     out.foreach(r => assert(r.getLong(1) === 0L))
   }
 
-  test("dupClustersStar equals label propagation on random graphs") {
+  test("dupClusters equals a union-find reference") {
     import spark.implicits._
-    val rnd = new scala.util.Random(97)
-    val pairs = (1 to 300).map { _ =>
-      val a = rnd.nextInt(80).toLong; val b = rnd.nextInt(80).toLong
-      (math.min(a, b), math.max(a, b))
-    }.filter(p => p._1 != p._2).distinct
-      .toDF("a_id", "b_id")
-    val prop = Dedup.dupClusters(pairs, maxIter = 100)
-      .as[(Long, Long)].collect().toSet
-    val star = Dedup.dupClustersStar(pairs)
-      .as[(Long, Long)].collect().toSet
-    assert(star === prop)
+    // a dense and a sparse random graph (many small components)
+    Seq((97, 300, 80), (31, 60, 150)).foreach { case (seed, n, nodes) =>
+      val rnd = new scala.util.Random(seed)
+      val pairs = (1 to n).map { _ =>
+        val a = rnd.nextInt(nodes).toLong; val b = rnd.nextInt(nodes).toLong
+        (math.min(a, b), math.max(a, b))
+      }.filter(p => p._1 != p._2).distinct
+      val got = Dedup.dupClusters(pairs.toDF("a_id", "b_id"))
+        .as[(Long, Long)].collect().toSet
+      assert(got === unionFind(pairs), s"seed $seed")
+    }
   }
 
-  test("dupClustersStar converges in O(log n) rounds where propagation cannot") {
+  test("dupClusters keeps a self-pair's doc as its own cluster") {
     import spark.implicits._
-    // diameter-60 chain: label propagation's default maxIter=20 must
-    // surface non-convergence; star contraction finishes comfortably
+    // 5 and 9 appear only in self-pairs; 2's self-pair rides along with
+    // its real edge; (8, 7) arrives in descending orientation
+    val pairs = Seq((1L, 2L), (2L, 2L), (5L, 5L), (9L, 9L), (9L, 9L), (8L, 7L))
+    val got = Dedup.dupClusters(pairs.toDF("a_id", "b_id"))
+      .as[(Long, Long)].collect()
+    assert(got.length === 6, "one row per doc")
+    assert(got.toSet === Set((1L, 1L), (2L, 1L), (5L, 5L), (9L, 9L),
+      (7L, 7L), (8L, 7L)))
+    assert(got.toSet === unionFind(pairs))
+  }
+
+  test("dupClusters converges in O(log n) rounds on a diameter-60 chain") {
+    import spark.implicits._
+    // one round per unit of diameter would need 60; star contraction
+    // finishes well inside its round cap
     val chain = (0L until 60L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("a_id", "b_id")
-    intercept[IllegalStateException] { Dedup.dupClusters(chain).collect() }
-    val out = Dedup.dupClustersStar(chain).as[(Long, Long)].collect()
+    val out = Dedup.dupClusters(chain).as[(Long, Long)].collect()
     assert(out.length === 60)
     assert(out.forall(_._2 === 0L))
   }
@@ -110,17 +140,17 @@ class DedupSpec extends SparkSpec {
     // admit new edges (contracted CC), levels whose edge set is unchanged
     // (count-equal reuse), and an empty strictest level (90 > max jac)
     val rnd = new scala.util.Random(173)
-    val pairs = (1 to 200).map { _ =>
+    val weighted = (1 to 200).map { _ =>
       val a = rnd.nextInt(60).toLong; val b = rnd.nextInt(60).toLong
       (math.min(a, b), math.max(a, b), rnd.nextInt(80) / 100.0)
     }.filter(p => p._1 != p._2).distinctBy(p => (p._1, p._2))
-      .toDF("a_id", "b_id", "jac")
+    val pairs = weighted.toDF("a_id", "b_id", "jac")
     val sweep = Dedup.percolationClusters(pairs, Seq(90, 70, 45, 45, 20, 5))
     assert(sweep.map(_._1) === Seq(90, 70, 45, 20, 5))
     sweep.foreach { case (pct, clu) =>
-      val direct = Dedup
-        .dupClusters(pairs.filter(col("jac") >= pct / 100.0), maxIter = 100)
-        .as[(Long, Long)].collect().toSet
+      val direct = unionFind(weighted.collect {
+        case (a, b, jac) if jac >= pct / 100.0 => (a, b)
+      })
       val got = clu.as[(Long, Long)].collect().toSet
       assert(got === direct, s"threshold $pct")
     }
@@ -375,7 +405,7 @@ class DedupSpec extends SparkSpec {
   test("incrementalClusters folds pair batches to one-shot CC labels") {
     // random multi-component graph arriving in 3 batches: folding batch
     // by batch (contract + CC on new pairs only) must reproduce the
-    // single dupClusters run over every pair — including batches that
+    // components of every pair at once — including batches that
     // MERGE clusters formed by earlier batches — and re-folding an
     // already-folded batch must be an identity (the replay-safety claim)
     val rnd = new scala.util.Random(7)
@@ -389,9 +419,7 @@ class DedupSpec extends SparkSpec {
         .localCheckpoint(true)) // the sink's parquet materialization stand-in
     }
     val got = labels.get.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ref = Dedup.dupClusters(all.toDF("a_id", "b_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === ref)
+    assert(got === unionFind(all))
     assert(got.nonEmpty)
     val refolded = Dedup.incrementalClusters(labels,
       batches.last.toDF("a_id", "b_id"))

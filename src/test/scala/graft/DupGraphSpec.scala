@@ -32,7 +32,7 @@ class DupGraphSpec extends SparkSpec {
       assert(livePairs.nonEmpty, "fixture produced no near-dup pairs — vacuous")
 
       // clusters: the loaded labels equal a fresh live clustering
-      val liveClusters = Dedup.dupClustersStar(livePairs.toSeq
+      val liveClusters = Dedup.dupClusters(livePairs.toSeq
           .toDF("a_id", "b_id", "jac"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val artClusters = loaded.clusters
@@ -80,7 +80,7 @@ class DupGraphSpec extends SparkSpec {
     // bridge between 1 and 3
     val pairs = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (7L, 8L, 1.0))
       .toDF("a_id", "b_id", "jac")
-    val idx = DupGraph.Frames(pairs, Dedup.dupClustersStar(pairs))
+    val idx = DupGraph.Frames(pairs, Dedup.dupClusters(pairs))
     // before: one component {1,2,3} labeled 1
     assert(idx.clusters.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       === Set((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (8L, 7L)))

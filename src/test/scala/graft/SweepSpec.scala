@@ -45,4 +45,26 @@ class SweepSpec extends SparkSpec {
     assert(OperatorCaches.trackedCount === 0)
     assert(FramePool.pooledCount === 0)
   }
+
+  test("q37 and q111 in one sweep build the pooled clusters once") {
+    FramePool.release()
+    val names = Seq("q37_dup_clusters", "q111_dup_clusters_star")
+    // (query, pooled keys, ledger tags) as each query ends
+    val seen = scala.collection.mutable.ArrayBuffer[(String, Int, Set[String])]()
+    val results = SparkEntry.sweep(names.map(n => n -> SparkEntry.queries(n))) {
+      (name, fn) =>
+        val rows = fn(spark, sfDir).collect().toSeq
+        seen += ((name, FramePool.pooledCount, FramePool.buildSeconds.keySet))
+        rows
+    }
+    val rows = results.map {
+      case (_, Right(r)) => r
+      case (n, Left(e)) => fail(s"$n threw", e)
+    }
+    assert(rows(0).nonEmpty, "no clusters — vacuous fixture")
+    assert(rows(1) === rows(0))
+    // q111 adds no pool entry: it reads q37's one `dupclusters` build
+    assert(seen(1)._2 === seen(0)._2)
+    assert(seen(1)._3.filter(_.startsWith("dupclusters")) === Set("dupclusters"))
+  }
 }
